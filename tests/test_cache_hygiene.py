@@ -15,9 +15,11 @@ from pyspark.sql import functions as F
 
 from trianglecounting_spark.operators import triangles as t
 from trianglecounting_spark.operators.components import connected_components
+from trianglecounting_spark.operators.kcore import coreness
 from trianglecounting_spark.operators.ktruss import ktruss_rounds
 from trianglecounting_spark.operators.labelprop import label_propagation
 from trianglecounting_spark.operators.pagerank import pagerank
+from trianglecounting_spark.operators.scc import scc
 from trianglecounting_spark.plans.cache import (
     persistent_rdd_ids,
     release_all_cached,
@@ -49,6 +51,21 @@ def test_connected_components_no_cache_leak(spark):
     _assert_clean(
         spark,
         lambda e: connected_components(e).agg(F.countDistinct("component")).collect(),
+    )
+
+
+def test_scc_no_cache_leak(spark):
+    _assert_clean(
+        spark,
+        lambda e: scc(
+            e.select(F.col("u").alias("src"), F.col("v").alias("dst"))
+        ).agg(F.countDistinct("label")).collect(),
+    )
+
+
+def test_coreness_no_cache_leak(spark):
+    _assert_clean(
+        spark, lambda e: coreness(e).agg(F.countDistinct("coreness")).collect()
     )
 
 

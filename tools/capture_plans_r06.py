@@ -189,13 +189,8 @@ def main() -> None:
     symcc = cur.unionAll(
         cur.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
-    try:
-        bc = (lambda df: F.broadcast(df))
-        after_large = CC_MOD._large_star(symcc, bc=bc)
-        dump("connected_components_round", CC_MOD._small_star(after_large, bc=bc))
-    except TypeError:
-        after_large = CC_MOD._large_star(symcc)
-        dump("connected_components_round", CC_MOD._small_star(after_large))
+    after_large = CC_MOD._large_star(symcc)
+    dump("connected_components_round", CC_MOD._small_star(after_large))
 
     spark.stop()
 

@@ -37,11 +37,12 @@ from trianglecounting_spark.plans.cache import (
     release_ids,
     tracked_checkpoint,
 )
+from trianglecounting_spark.plans.tuning import BROADCAST_ROWS
 
 
 def betweenness_pivots(edges: DataFrame, n_pivots: int = 16,
                        max_depth: int = 16,
-                       broadcast_rows: int = 8_000_000) -> DataFrame:
+                       broadcast_rows: int = BROADCAST_ROWS) -> DataFrame:
     """Pivot-subset betweenness. Output ``(v, bc)`` for every vertex of the
     (symmetrized) graph, bc = Σ_pivots δ_pivot(v), rounded to 6dp.
 

@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from trianglecounting_spark.operators.normalize import undirect
 from trianglecounting_spark.plans.cache import tracked_checkpoint
+from trianglecounting_spark.plans.tuning import BROADCAST_ROWS
 
 M_REG = 64          # HLL registers per vertex (b = 6)
 ALPHA_64 = 0.709    # Flajolet et al. 2007 bias constant for m = 64
@@ -112,7 +113,7 @@ def _estimate_expr() -> str:
 
 
 def hyperball_state(
-    edges: DataFrame, t: int, broadcast_rows: int = 8_000_000
+    edges: DataFrame, t: int, broadcast_rows: int = BROADCAST_ROWS
 ) -> DataFrame:
     """Register state after ``t`` merge rounds: ``(v, j, rho)`` — the HLL
     sketch of every vertex's distance-≤t ball (undirected).
@@ -152,7 +153,9 @@ def hyperball_balls(edges: DataFrame, t: int) -> DataFrame:
     return aggs.select("v", F.expr(_estimate_expr()).alias("ball_est"))
 
 
-def neighborhood_function(edges: DataFrame, t_max: int) -> list[tuple[int, float]]:
+def neighborhood_function(
+    edges: DataFrame, t_max: int, broadcast_rows: int = BROADCAST_ROWS
+) -> list[tuple[int, float]]:
     """ANF curve [(t, N̂(t))] for t = 0..t_max, N̂(t) = Σ_v |B(v,t)| — the
     driver-side report (one scalar per t; each t's state reuses the previous
     round's checkpoint, so the whole curve costs one pass of t_max rounds)."""
@@ -175,7 +178,7 @@ def neighborhood_function(edges: DataFrame, t_max: int) -> list[tuple[int, float
         ).collect()[0]
         return float(row["nf"])
 
-    small = state.count() * M_REG <= 8_000_000
+    small = state.count() * M_REG <= broadcast_rows
     curve.append((0, nf(state)))
     for t in range(1, t_max + 1):
         st = F.broadcast(state) if small else state

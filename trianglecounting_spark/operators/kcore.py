@@ -10,10 +10,19 @@ Each round = one degree aggregation + one semi-join filter — two shuffles on
 the SHRINKING edge set, all Column expressions. Exact integer labels, so
 results are partitioning-invariant; the fixed-round form is oracle-matched
 (rounds are idempotent once converged).
+
+``coreness`` (the whole decomposition as one h-index fixpoint) runs in two
+regimes, chosen from |V| against ``tuning.BROADCAST_ROWS``: at or under the
+budget the h state is held on the driver and a round is one ``mapInArrow``
+pass over the cached grouped adjacency (``plans/vertex_state``; broadcast
+state and per-round collect O(|V|), ~300 ms a pass on a 4-vCPU host);
+above it, a per-round shuffle join + aggregate with a checkpointed state.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from trianglecounting_spark.plans.cache import (
@@ -22,6 +31,8 @@ from trianglecounting_spark.plans.cache import (
     release_ids,
     tracked_checkpoint,
 )
+from trianglecounting_spark.plans.tuning import BROADCAST_ROWS, iteration_partitions
+from trianglecounting_spark.plans.vertex_state import VertexState, fits_driver
 
 # Reliable-checkpoint barrier cadence for deep peel cascades. localCheckpoint
 # does NOT cut the underlying RDD DAG, and a driver-side per-job traversal
@@ -127,7 +138,6 @@ def kcore_incremental(
     rounds — the web-periphery regime at 100 TB, not reproducible at sf0.1.
     """
     from trianglecounting_spark.operators.normalize import degrees
-    from trianglecounting_spark.plans.tuning import iteration_partitions
 
     spark = edges.sparkSession
     e_state, e_ids = tracked_checkpoint(edges.select("u", "v"))
@@ -197,10 +207,26 @@ def _h_index_agg(values_col: str) -> F.Column:
     ).cast("long")
 
 
+def _h_index_step(part, st):
+    """One synchronous h-index round for the partition's vertices:
+    h'(v) = H({h(u) : u ~ v}) from the broadcast h (no in-place updates, so
+    a pass is exactly one round of the recurrence)."""
+    h = st["h"]
+    rows = part.row("nbrs")
+    nh = h[part.nbr("nbrs")]
+    # per-row descending h, then the prefix count #{i : a_i >= i}
+    snh = nh[np.lexsort((-nh, rows))]
+    pos = np.arange(len(rows), dtype=np.int64) - np.searchsorted(rows, rows)
+    hh = part.seg_sum("nbrs", (snh >= pos + 1).astype(np.int64))
+    h0 = h[part.own]
+    # every change matters to a neighbor next round: no remote shortcut
+    return part.changes(hh != h0, hh, np.ones(part.n, dtype=bool))
+
+
 def coreness(
     edges: DataFrame,
     max_iterations: int = 200,
-    broadcast_rows: int = 8_000_000,
+    broadcast_rows: int = BROADCAST_ROWS,
 ) -> DataFrame:
     """Per-vertex core number ``(v, coreness)`` via the distributed h-index
     fixpoint (Lü et al., "The H-index of a network node", Nature Comms 2016):
@@ -213,119 +239,47 @@ def coreness(
     per k. Absent from the reference (a TC engine, no vertex hierarchy);
     added for the link-graph suite (web-spam / importance tiers).
 
-    Physical plan (round-6 rewrite — same integers, same recurrence, the
-    round structure re-expressed per guide §8 "decide with small rows,
-    keep big rows in place"):
+    Two regimes, chosen from |V| against ``tuning.BROADCAST_ROWS``:
 
-    * ``|V| ≤ broadcast_rows`` (size-guarded small regime — the same
-      driver-byte budget contract as the triangle kernel's hub CSR): the
-      symmetric adjacency is grouped ONCE into Arrow list rows and
-      cached; the |V|-row h state lives as two numpy arrays, broadcast
-      each round, and a round is ONE narrow ``mapInArrow`` pass that maps
-      every neighbor id to its h (vectorized ``searchsorted``) and
-      computes every vertex's H with one segment-sorted prefix count —
-      zero joins, zero exchanges, zero per-round checkpoints; the 2|E|
-      neighbor volume never moves again after the one grouping shuffle.
-      The |V|-row per-round collect is bounded by the same budget that
-      bounds the broadcast (precedent: ``_select_hub_csr``'s flat-CSR
-      ``toPandas``).
+    * |V| ≤ budget — driver-held state (``plans/vertex_state``): the
+      symmetric adjacency is grouped ONCE into Arrow list rows and cached
+      (degrees ride the id collect); the h array lives on the driver, and a
+      round is ONE narrow ``mapInArrow`` pass that maps every neighbor to
+      its h and computes every vertex's H with one segment-sorted prefix
+      count, plus a collect of the changed rows — zero joins, zero
+      exchanges, zero per-round checkpoints. Bound: the broadcast state and
+      the per-round collect are O(|V|). Cost model (4-vCPU host, Spark
+      local[2]): a pass ~300 ms, one Spark job per round.
     * otherwise (web scale, |V| not driver-boundable): per-round shuffle
       join of adjacency against the h state + one hash aggregate with
-      ``_h_index_agg`` — an in-group array sort instead of the previous
-      partition-wide ``row_number`` window sort — with the h state
-      checkpointed per round (tracked, file barrier every
-      ``_BARRIER_EVERY``).
+      ``_h_index_agg`` (an in-group array sort), the h state checkpointed
+      per round (tracked, file barrier every ``_BARRIER_EVERY``).
 
-    Both regimes run the identical integer recurrence to the identical
-    fixpoint (H is tie-order-independent), so results are regime- and
-    partitioning-invariant.
+    Both regimes run the identical synchronous integer recurrence, one
+    round per pass, to the identical fixpoint (H is tie-order-independent),
+    so results are regime- and partitioning-invariant — also when
+    ``max_iterations`` stops them early.
     """
-    import numpy as np
-
     spark = edges.sparkSession
     adj_plan = edges.select("u", "v").unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
+    driver, n_rows = fits_driver(edges, ("u", "v"), broadcast_rows)
+    if driver:
+        entries = adj_plan.select(
+            F.col("u").cast("long").alias("v"), F.col("v").cast("long").alias("nbrs")
+        )
+        with VertexState(entries, ("nbrs",), 2 * n_rows, attrs={"deg": F.size("nbrs")}) as vs:
+            h = vs.converge(_h_index_step, {"h": vs.attrs["deg"]}, "h", max_iterations)
+            out = pd.DataFrame({"v": vs.ids, "coreness": h})
+        return spark.createDataFrame(out, "v long, coreness long")
+
     adj, adj_ids = tracked_checkpoint(adj_plan)
     h, h_ids = tracked_checkpoint(
         adj.groupBy("u")
         .agg(F.count(F.lit(1)).cast("long").alias("h"))
         .select(F.col("u").alias("v"), "h")
     )
-    n_v = h.count()
-
-    if n_v <= broadcast_rows:
-        # ---- small regime: driver-held state, one narrow pass per round ----
-        grouped, grouped_ids = tracked_checkpoint(
-            adj.groupBy(F.col("u").alias("src")).agg(
-                F.collect_list("v").alias("nbrs")
-            )
-        )
-        h_pdf = h.orderBy("v").toPandas()
-        release_ids(spark, adj_ids | h_ids)
-        ids = h_pdf["v"].to_numpy(dtype=np.int64)
-        hvals = h_pdf["h"].to_numpy(dtype=np.int64)
-        sc = spark.sparkContext
-        for _ in range(max_iterations):
-            h_bc = sc.broadcast((ids, hvals))
-
-            def _round(batches, _bc=h_bc):
-                import pyarrow as pa
-
-                b_ids, b_h = _bc.value
-                for rb in batches:
-                    if rb.num_rows == 0:
-                        continue
-                    srcs = rb.column("src").to_numpy(zero_copy_only=False)
-                    nb = rb.column("nbrs")
-                    offs = np.asarray(nb.offsets).astype(np.int64, copy=False)
-                    # a sliced ListArray's offsets need not start at 0 —
-                    # normalize to the window this batch actually covers
-                    vals = nb.values.to_numpy(zero_copy_only=False)[
-                        offs[0] : offs[-1]
-                    ]
-                    offs = offs - offs[0]
-                    nh = b_h[np.searchsorted(b_ids, vals)]
-                    lens = np.diff(offs)
-                    rows = np.repeat(np.arange(len(srcs), dtype=np.int64), lens)
-                    # per-row descending h, then the prefix count #{i: a_i>=i}
-                    order = np.lexsort((-nh, rows))
-                    snh = nh[order]
-                    pos = np.arange(len(snh), dtype=np.int64) - np.repeat(
-                        offs[:-1], lens
-                    )
-                    flags = (snh >= pos + 1).astype(np.int64)
-                    starts = offs[:-1][lens > 0]
-                    hh = np.zeros(len(srcs), dtype=np.int64)
-                    if len(starts):
-                        hh[lens > 0] = np.add.reduceat(flags, starts)
-                    yield pa.RecordBatch.from_pydict(
-                        {
-                            "v": pa.array(srcs, pa.int64()),
-                            "h": pa.array(hh, pa.int64()),
-                        }
-                    )
-
-            out = (
-                grouped.mapInArrow(_round, schema="v long, h long")
-                .toPandas()
-                .sort_values("v")
-            )
-            new_hvals = out["h"].to_numpy(dtype=np.int64)
-            h_bc.unpersist()
-            if np.array_equal(new_hvals, hvals):
-                break
-            hvals = new_hvals
-        release_ids(spark, grouped_ids)
-        import pandas as pd
-
-        res = spark.createDataFrame(
-            pd.DataFrame({"v": ids, "coreness": hvals}),
-            schema="v long, coreness long",
-        )
-        return res
-
-    # ---- large regime: per-round shuffle join + sort-free H aggregate ----
     total = h.agg(F.sum("h")).collect()[0][0]
     for it in range(1, max_iterations + 1):
         hn = h.select(F.col("v").alias("__nbr"), F.col("h").alias("__nh"))

@@ -27,6 +27,7 @@ from trianglecounting_spark.plans.cache import (
     tracked_checkpoint,
 )
 from trianglecounting_spark.plans.checkpoint import IterationCheckpointer
+from trianglecounting_spark.plans.tuning import BROADCAST_ROWS
 
 # delta-phase lineage-barrier cadence (see kcore.py's _BARRIER_EVERY)
 _KTRUSS_BARRIER_EVERY = 12
@@ -369,7 +370,7 @@ def trussness(edges: DataFrame, max_iterations: int = 200) -> DataFrame:
     from trianglecounting_spark.operators.kcore import _h_index_agg
     from trianglecounting_spark.operators.triangles import triangle_enumerate_kernel
 
-    broadcast_rows = 8_000_000
+    broadcast_rows = BROADCAST_ROWS
     spark = edges.sparkSession
     tri = triangle_enumerate_kernel(edges)
 

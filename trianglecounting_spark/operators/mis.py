@@ -34,7 +34,11 @@ from pyspark.storagelevel import StorageLevel
 
 from trianglecounting_spark.operators.normalize import undirect
 from trianglecounting_spark.plans.cache import release_ids, tracked_checkpoint
-from trianglecounting_spark.plans.tuning import iteration_partitions, scoped_shuffle_partitions
+from trianglecounting_spark.plans.tuning import (
+    BROADCAST_ROWS,
+    iteration_partitions,
+    scoped_shuffle_partitions,
+)
 
 _M = 1_000_000_007
 _A = 2_654_435_761
@@ -50,7 +54,7 @@ def _h_sql(expr: str) -> str:
 
 
 def maximal_independent_set(
-    edges: DataFrame, max_iterations: int = 50, broadcast_rows: int = 8_000_000
+    edges: DataFrame, max_iterations: int = 50, broadcast_rows: int = BROADCAST_ROWS
 ) -> DataFrame:
     """Output: ``(v: long, in_mis: int)`` for every vertex of ``edges``.
 
@@ -115,12 +119,13 @@ def maximal_independent_set(
             # materialize winners once: they are read 3× below (losers scan,
             # undecided anti-join, MIS append)
             win, win_ids = tracked_checkpoint(win_plan)
-            # losers: undecided neighbors of winners — one narrow sym scan
-            # (the und anti-join below restricts to still-undecided vertices,
-            # so scanning sym instead of act changes nothing)
+            # losers: undecided neighbors of winners — one narrow sym scan,
+            # semi-joined with the undecided set so the broadcast below is
+            # bounded by |undecided| (the budget checked above), not |V|
             lose = (
                 sym.join(_bc(win.withColumnRenamed("v", "src")), "src")
                 .select(F.col("dst").alias("v"))
+                .join(_bc(und), "v", "left_semi")
                 .distinct()
             )
             mis = win if mis is None else mis.unionAll(win)

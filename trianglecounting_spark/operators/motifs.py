@@ -59,6 +59,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from trianglecounting_spark.operators.normalize import orient_dodg, undirect
 from trianglecounting_spark.operators.triangles import triangle_enumerate_from_dodg
+from trianglecounting_spark.plans.tuning import BROADCAST_ROWS
 
 
 def four_clique_count(
@@ -77,7 +78,7 @@ def four_clique_count(
     one narrow stage downstream of the enumerate kernel. At web scale the
     joins fall back to the plain shuffles (AQE skew-splits a hot c).
     """
-    broadcast_rows = 8_000_000
+    broadcast_rows = BROADCAST_ROWS
     d = orient_dodg(edges).localCheckpoint(eager=False)
     small = d.count() <= broadcast_rows
 

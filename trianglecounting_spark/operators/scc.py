@@ -12,10 +12,8 @@ distributed SCC scheme):
 
   repeat until no active vertices:
     0. TRIM: peel vertices with no incoming or no outgoing active edge
-       (each is a singleton SCC) layer by layer — one cheap join per DAG
-       layer instead of a full coloring round per nesting level. Measured
-       A/B at sf0.01 (2000 verts, 19.3k reciprocated edges, giant SCC
-       1878): 31.5 s without trim → 19.4 s with trim, same labels.
+       (each is a singleton SCC) layer by layer, before paying for a
+       coloring round per nesting level.
     1. COLOR (forward min-label flood): color(v) = min id that reaches v
        over active edges — a monotone fixpoint of per-dst min aggregates.
     2. Every color class has exactly one ROOT r (color(r) = r, the class
@@ -27,15 +25,32 @@ distributed SCC scheme):
        minimum — the same canonical labeling as connected_components),
        remove those vertices, repeat on the remainder.
 
-Scale shape: every step is a vertex-keyed join + aggregate over the active
-edge subgraph — |V|-row state tables shuffle, edges are re-restricted once
-per outer round; inner floods are monotone with O(diameter) rounds and the
-outer loop removes at least every current root's SCC per round (a web-shaped
-graph — giant SCC + shallow periphery — converges in a handful of outer
-rounds; measured 4–5 on the reciprocated co-occurrence graphs here). Every
-round's state is checkpointed (tracked_checkpoint) so no action replays
-prior rounds' lineage, and each round's scratch blocks are released as soon
-as the next state is materialized.
+Two regimes, chosen from |V| against ``tuning.BROADCAST_ROWS``:
+
+  * |V| ≤ budget — driver-held state (``plans/vertex_state``): the grouped
+    adjacency ``(v, ins, outs)`` is cached once; the active, color and
+    reach arrays live on the driver; every trim / color / containment pass
+    is ONE ``mapInArrow`` over whole partitions that iterates the monotone
+    update to a partition-local fixpoint, plus a collect of the changed
+    rows. Both floods also compose labels on the driver
+    (color(v) ← color(color(v)): whatever reaches v's color reaches v).
+    Bound: the broadcast state and the per-pass collect are O(|V|). Cost
+    model (4-vCPU host, Spark local[2]): a pass ~0.3 s, against a
+    checkpointed DataFrame round's checkpoint job + changed-count probe +
+    plan construction. On the benchmark's reciprocated co-part sample
+    (seed 5, ~800 vertices, one grouped partition) a call is one trim,
+    one color and one containment pass: 11 Spark jobs where the shuffle
+    rounds ran 160 (both counts include the caller's count-distinct).
+  * otherwise — the shuffle path: every step is a vertex-keyed join +
+    aggregate over the active edge subgraph, each round's |V|-row state
+    checkpointed (tracked_checkpoint; a file barrier every
+    ``_BARRIER_EVERY`` rounds) and probed for changes; floods are
+    O(diameter) rounds.
+
+Both regimes compute the same fixpoints (trim and min-label floods are
+monotone, so chaotic iteration reaches the synchronous answer), and a run
+that exhausts ``max_rounds`` / ``max_inner`` raises and releases every
+block it cached.
 
 Determinism: output ``(v, label)`` with label = min vertex id of v's SCC —
 partitioning-invariant, integer-exact, so the DuckDB oracle can be the
@@ -45,17 +60,22 @@ min) rather than a mirror of the algorithm.
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from trianglecounting_spark.plans.cache import (
     barrier_checkpoint,
     release_ids,
+    released_on_error,
     tracked_checkpoint,
 )
 from trianglecounting_spark.plans.tuning import (
+    BROADCAST_ROWS,
     iteration_partitions,
     scoped_shuffle_partitions,
 )
+from trianglecounting_spark.plans.vertex_state import VertexState, fits_driver
 
 
 # Reliable-checkpoint cadence for long flood chains — a defensive TRUE
@@ -91,22 +111,19 @@ def _minlabel_flood(
     data path). It also cannot help the adversarial direction: when the
     minimum must travel against the id ordering, untouched labels are still
     self, so there is nothing to compose — the flood is one-frontier and
-    O(diameter) regardless. Directed reachability has no known o(diameter)
-    round trick without path-doubling's O(m²) work, so diameter-bound is
-    the honest contract.
+    O(diameter) regardless. (The driver-held regime composes labels as a
+    numpy gather instead, where it costs nothing.)
 
-    ``color`` must be a materialized ``(v, label)`` table; every new state
-    is checkpointed before the changed-count action, so no action replays a
-    prior round, and every ``_BARRIER_EVERY`` rounds the state gets a
-    reliable (file) checkpoint as a true lineage barrier.
+    ``color`` must be a materialized ``(v, label)`` table whose blocks
+    (``color_ids``) the flood takes over; every new state is checkpointed
+    before the changed-count action, so no action replays a prior round,
+    and every ``_BARRIER_EVERY`` rounds the state gets a reliable (file)
+    checkpoint as a true lineage barrier.
 
-    Round 6: the changed-count rides the checkpointed state as a flag
-    column (``in_min < label`` IS "this row changed" — labels only
-    decrease), replacing the per-round join of new-vs-old label tables
-    with a near-free aggregate on the just-materialized |V|-row frame; and
-    when ``small`` the |V|-row state is broadcast into the edge join, so a
-    flood round is one narrow pass over the (pre-partitioned) edge table
-    — at web scale ``small`` is False and the shuffle join runs as before.
+    The changed-count rides the checkpointed state as a flag column
+    (``in_min < label`` IS "this row changed" — labels only decrease); when
+    ``small`` the |V|-row state is broadcast into the edge join, so a flood
+    round is one narrow pass over the (pre-partitioned) edge table.
     """
     small = bool(small)
 
@@ -126,15 +143,12 @@ def _minlabel_flood(
             "__l0",
         )
 
-    # Labels only decrease, so "label < round-start label" IS the changed
-    # flag — computed inline and summed on the just-checkpointed |V|-row
-    # state (a near-free probe) instead of joining new-vs-old label tables
-    # per round. Two recurrence steps per checkpoint when the state is
-    # broadcastable (the second step references the first step's plan
-    # twice, which is cheap when the inner aggregate rides a broadcast but
-    # would re-run a shuffle at web scale): the per-round materialization +
-    # probe overhead is paid half as often, and applying the monotone
-    # update more times per materialization reaches the identical fixpoint.
+    # Two recurrence steps per checkpoint when the state is broadcastable
+    # (the second step references the first step's plan twice, which is
+    # cheap when the inner aggregate rides a broadcast but would re-run a
+    # shuffle at web scale): the per-round materialization + probe overhead
+    # is paid half as often, and applying the monotone update more times per
+    # materialization reaches the identical fixpoint.
     steps = 2 if small else 1
     for _round in range(max_inner):
         new_plan = color.select("v", "label", F.col("label").alias("__l0"))
@@ -152,6 +166,7 @@ def _minlabel_flood(
         color, color_ids = new_color.select("v", "label"), new_ids
         if changed == 0:
             return color, color_ids
+    release_ids(spark, color_ids)
     raise RuntimeError(
         f"{what} did not converge in {max_inner} flood rounds — "
         "raise max_inner for this graph"
@@ -162,7 +177,7 @@ def scc(
     directed_edges: DataFrame,
     max_rounds: int = 20,
     max_inner: int = 100,
-    broadcast_rows: int = 8_000_000,
+    broadcast_rows: int = BROADCAST_ROWS,
 ) -> DataFrame:
     """Exact SCC labels over directed ``(src, dst)`` edges.
 
@@ -171,8 +186,116 @@ def scc(
     label themselves). Raises if the outer loop has not emptied the graph
     after ``max_rounds`` (each round removes ≥ 1 SCC per current color
     class, so only an adversarial chain of Ω(max_rounds) nested SCC levels
-    trips this — raise the cap for such graphs).
+    trips this — raise the cap for such graphs), or if a trim / flood phase
+    has not converged in ``max_inner`` rounds (shuffle regime) or passes
+    (driver-held regime). Either way every block the call cached is
+    released before the error propagates.
     """
+    spark = directed_edges.sparkSession
+    with released_on_error(spark):
+        driver, n_rows = fits_driver(directed_edges, ("src", "dst"), broadcast_rows)
+        if driver:
+            return _scc_driver(directed_edges, n_rows, max_rounds, max_inner)
+        return _scc_shuffle(directed_edges, max_rounds, max_inner, broadcast_rows)
+
+
+def _trim_step(part, st):
+    """Trim pass: an active vertex with no active in- or out-neighbor is a
+    singleton SCC — peeled to the partition-local fixpoint."""
+    all_act = st["active"]
+    act0 = all_act[part.own]
+    act = act0
+    while True:
+        new = (
+            act
+            & part.seg_any("ins", part.gather("ins", act, all_act))
+            & part.seg_any("outs", part.gather("outs", act, all_act))
+        )
+        if np.array_equal(new, act):
+            break
+        act = new
+    return part.changes(act != act0, act, part.remote("ins") | part.remote("outs"))
+
+
+def _color_step(part, st):
+    """Forward coloring pass: color(v) = min color over active in-edges."""
+    act, color = st["active"], st["color"]
+    ok = act[part.nbr("ins")] & act[part.own][part.row("ins")]
+    c0 = color[part.own]
+    c = part.min_flood("ins", c0, color, ok)
+    return part.changes(c != c0, c, part.remote("outs"))
+
+
+def _contain_step(part, st):
+    """Backward containment pass: reach(v) = min reach over v's active
+    out-edges that stay inside v's color class."""
+    act, color, reach = st["active"], st["color"], st["reach"]
+    nbr, row = part.nbr("outs"), part.row("outs")
+    own_act, own_color = act[part.own], color[part.own]
+    ok = act[nbr] & own_act[row] & (color[nbr] == own_color[row])
+    r0 = reach[part.own]
+    r = part.min_flood("outs", r0, reach, ok)
+    return part.changes(r != r0, r, part.remote("ins"))
+
+
+def _scc_driver(
+    directed_edges: DataFrame, n_rows: int, max_rounds: int, max_inner: int
+) -> DataFrame:
+    """The driver-held regime: vertex ids become indices 0..n-1 in id
+    order, so index minima ARE id minima and labels compose as gathers."""
+    spark = directed_edges.sparkSession
+    d = directed_edges.select(
+        F.col("src").cast("long").alias("src"), F.col("dst").cast("long").alias("dst")
+    )
+    # one row per endpoint occurrence; self-loops add the vertex with no
+    # neighbor (a self-loop-only vertex is a singleton SCC the first trim
+    # pass extracts), duplicate edges only repeat list entries
+    loop = F.col("src") == F.col("dst")
+    none = F.lit(None).cast("long")
+    entries = d.select(
+        F.col("src").alias("v"), none.alias("ins"), F.when(~loop, F.col("dst")).alias("outs")
+    ).unionAll(
+        d.select(F.col("dst").alias("v"), F.when(~loop, F.col("src")).alias("ins"), none.alias("outs"))
+    )
+    with VertexState(entries, ("ins", "outs"), 2 * n_rows) as vs:
+        idx = np.arange(vs.n, dtype=np.int64)
+        active = np.ones(vs.n, dtype=bool)
+        label = idx.copy()  # trimmed vertices keep their own label
+        for _ in range(max_rounds):
+            if not active.any():
+                break
+            active = vs.converge(
+                _trim_step, {"active": active}, "active", max_inner, what="scc trim"
+            )
+            if not active.any():
+                break
+            color = vs.converge(
+                _color_step, {"active": active, "color": idx}, "color", max_inner,
+                what="scc forward coloring", compose=True,
+            )
+            reach = vs.converge(
+                _contain_step, {"active": active, "color": color, "reach": idx},
+                "reach", max_inner, what="scc backward containment", compose=True,
+            )
+            marked = active & (reach == color)
+            label[marked] = color[marked]
+            active = active & ~marked
+        if active.any():
+            raise RuntimeError(
+                f"scc: {int(active.sum())} vertices still unassigned after "
+                f"{max_rounds} outer rounds — the SCC condensation has a deeper "
+                "removal chain than the cap; raise max_rounds"
+            )
+        out = pd.DataFrame({"v": vs.ids, "label": vs.ids[label]})
+    return spark.createDataFrame(out, "v long, label long")
+
+
+def _scc_shuffle(
+    directed_edges: DataFrame, max_rounds: int, max_inner: int, broadcast_rows: int
+) -> DataFrame:
+    """The shuffle regime (|V| past the budget): DataFrame rounds with
+    per-round tracked checkpoints. Raising exits release through the
+    caller's ``released_on_error``."""
     spark = directed_edges.sparkSession
     e_all, e_ids = tracked_checkpoint(
         directed_edges.select("src", "dst")
@@ -190,28 +313,25 @@ def scc(
     )
     n_part = iteration_partitions(spark, e_all.count())
     # assigned SCCs accumulate as a list of already-materialized frames
-    # (trivial/marked checkpoints) and union ONCE at return — deferring the
-    # per-layer assigned-union checkpoint job the previous form paid
+    # (trivial/marked checkpoints) and union ONCE at return
     assigned_parts: list[DataFrame] = []
     assigned_ids: set[int] = set()
     active, active_ids = verts, set()  # verts' blocks released at return
     n_active = active.count()
 
     def _bc(df):
-        # size-aware: the |active|-row vertex/label tables are broadcast into
-        # the edge-side joins while they fit the budget (narrow trim/flood
-        # passes); at web scale the joins fall back to shuffles unchanged
+        # size-aware: once the active set shrinks under the budget, the
+        # |active|-row vertex/label tables are broadcast into the edge-side
+        # joins (narrow trim/flood passes)
         return F.broadcast(df) if n_active <= broadcast_rows else df
 
     def _finish() -> DataFrame:
+        release_ids(spark, active_ids | e_ids | verts_ids)
         if not assigned_parts:
-            out = spark.createDataFrame([], "v long, label long")
-        elif len(assigned_parts) == 1:
-            out = assigned_parts[0]
-        else:
-            out = assigned_parts[0]
-            for p in assigned_parts[1:]:
-                out = out.unionAll(p)
+            return spark.createDataFrame([], "v long, label long")
+        out = assigned_parts[0]
+        for p in assigned_parts[1:]:
+            out = out.unionAll(p)
         out, _ = tracked_checkpoint(out)
         release_ids(spark, assigned_ids)
         return out
@@ -220,10 +340,7 @@ def scc(
         for _round in range(1, max_rounds + 1):
             # TRIM (the FW-BW-Trim prepass): a vertex with no incoming or no
             # outgoing active edge is its own SCC — peel such layers
-            # iteratively before paying for a coloring round. This is what
-            # makes the DAG periphery (IN/OUT tendrils, chains) cost one
-            # cheap join per layer instead of one full color+containment
-            # round per nesting level.
+            # iteratively before paying for a coloring round.
             for _ in range(max_inner):
                 ea_t = (
                     e_all.join(
@@ -259,7 +376,6 @@ def scc(
                 active, active_ids = remaining, rem_ids
                 n_active -= n_triv
             if n_active == 0:
-                release_ids(spark, active_ids | e_ids | verts_ids)
                 return _finish()
 
             # restrict edges to the still-active vertex set (both endpoints)
@@ -271,17 +387,8 @@ def scc(
             )
 
             # 1. forward min-label flood: color(v) = min(v, colors of
-            #    in-neighbors), iterated to fixpoint. Convergence is
-            #    O(diameter of the flooded subgraph) — the standard bound
-            #    for distributed reachability, and single-digit rounds on
-            #    web-graph SCCs. Pointer-jumping was measured and REJECTED
-            #    (see _minlabel_flood's docstring): the label self-join
-            #    triggers a driver-side geometric slowdown past ~12 chained
-            #    rounds and cannot speed the adversarial direction anyway.
-            #    ``max_inner`` guards pathological deep cycles (a cycle
-            #    longer than max_inner raises rather than looping). Every
-            #    state is materialized before the changed-count action, so
-            #    no action replays a previous inner round.
+            #    in-neighbors), iterated to fixpoint — O(diameter of the
+            #    flooded subgraph) rounds (see _minlabel_flood).
             color, color_ids = tracked_checkpoint(
                 active.select("v", F.col("v").alias("label"))
             )
@@ -336,12 +443,9 @@ def scc(
             release_ids(spark, active_ids | ea_ids | color_ids | ec_ids)
             active, active_ids = remaining, rem_ids
             if n_active == 0:
-                release_ids(spark, active_ids | e_ids | verts_ids)
                 return _finish()
-        n_left = active.count()
-        release_ids(spark, active_ids | e_ids | verts_ids)
         raise RuntimeError(
-            f"scc: {n_left} vertices still unassigned after "
+            f"scc: {active.count()} vertices still unassigned after "
             f"{max_rounds} outer rounds — the SCC condensation has a deeper "
             "removal chain than the cap; raise max_rounds"
         )

@@ -24,6 +24,8 @@ RPC, not a local-mode trick.
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame, SparkSession
 
 
@@ -105,6 +107,20 @@ def release_ids(spark: SparkSession, ids: set[int], blocking: bool = False) -> i
             jrdd.unpersist(blocking)
             released += 1
     return released
+
+
+@contextmanager
+def released_on_error(spark: SparkSession):
+    """Release every block persisted inside the ``with`` body if it raises:
+    an operator that fails (a non-converging loop, a cancelled job) has no
+    result, so everything it materialized is scratch. Normal exits keep
+    their own explicit release."""
+    before = persistent_rdd_ids(spark)
+    try:
+        yield
+    except BaseException:
+        release_ids(spark, persistent_rdd_ids(spark) - before)
+        raise
 
 
 def release_all_cached(

@@ -12,6 +12,14 @@ from __future__ import annotations
 
 from pyspark.sql import SparkSession
 
+# The one broadcast budget, in rows, for every size-aware fast path: a
+# |V|-row iteration state (or an edge table, where an operator broadcasts
+# edges) is broadcast into the loop's joins, or held on the driver by
+# ``plans/vertex_state``, only while it has at most this many rows; past it
+# the operators take their shuffle paths. 8 M rows is ~64 MB per int64
+# column — the same driver-byte class as the triangle kernel's hub CSR.
+BROADCAST_ROWS = 8_000_000
+
 
 def iteration_partitions(
     spark: SparkSession, state_rows: int, rows_per_partition: int = 250_000
