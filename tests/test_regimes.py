@@ -1,8 +1,10 @@
 """Regime forcing: scc, connected_components and coreness hold |V|-row state
 on the driver when |V| fits ``BROADCAST_ROWS`` and run DataFrame shuffle
 rounds above it. No test graph is big enough to cross the budget, so each
-case runs twice — at the default budget and with ``broadcast_rows=0`` — and
-the two regimes must agree exactly (and with the closed form)."""
+case runs at the default budget, with ``broadcast_rows=0``, and at the
+default budget with the grouped adjacency split into many id-range
+partitions (so partition-local fixpoints meet remote neighbors); all runs
+must agree exactly (and with the closed form)."""
 
 from __future__ import annotations
 
@@ -13,9 +15,9 @@ from trianglecounting_spark.operators.components import connected_components
 from trianglecounting_spark.operators.kcore import coreness
 from trianglecounting_spark.operators.normalize import normalize_edges
 from trianglecounting_spark.operators.scc import scc
+from trianglecounting_spark.plans import vertex_state
 from trianglecounting_spark.plans.cache import persistent_rdd_ids, release_all_cached
 from trianglecounting_spark.plans.tuning import BROADCAST_ROWS
-from trianglecounting_spark.plans.vertex_state import ENTRIES_PER_PARTITION
 from trianglecounting_spark.sources import generators as g
 
 REGIMES = (BROADCAST_ROWS, 0)  # driver-held state, shuffle rounds
@@ -24,9 +26,14 @@ RING = [(i, (i + 1) % 60) for i in range(60)]
 
 
 def _both(run):
-    """run(broadcast_rows) -> result; asserts both regimes agree."""
+    """run(broadcast_rows) -> result; asserts both regimes agree, the
+    driver-held one also with its grouped adjacency split into many
+    partitions (16 list entries each)."""
     driver, shuffle = (run(b) for b in REGIMES)
-    assert driver == shuffle
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(vertex_state, "ENTRIES_PER_PARTITION", 16)
+        split = run(BROADCAST_ROWS)
+    assert driver == split == shuffle
     return driver
 
 
@@ -57,19 +64,44 @@ def test_scc_regimes_agree_on_long_ring(spark):
     assert _scc_labels(spark, RING, max_inner=150) == {i: 0 for i in range(60)}
 
 
+def test_scc_driver_regime_long_ring_over_three_partitions(spark, monkeypatch):
+    """A 150-cycle whose ids are scrambled along it, its grouped adjacency
+    split into three id ranges, so two of three neighbors sit in another
+    partition: it converges under the default caps (one trim, 20 coloring
+    and 5 containment passes)."""
+    monkeypatch.setattr(vertex_state, "ENTRIES_PER_PARTITION", 100)
+    n = 150
+    order = [(i * 37) % n for i in range(n)]
+    ring = spark.createDataFrame(
+        [(a, order[(k + 1) % n]) for k, a in enumerate(order)], "src long, dst long"
+    )
+    got = {r.v: r.label for r in scc(ring).collect()}
+    assert got == {i: 0 for i in range(n)}
+
+
+def test_scc_driver_regime_allows_two_passes_per_round(spark, monkeypatch):
+    """The 60-ring split into 15 id ranges of four vertices needs 15
+    containment passes: the flood runs against the id order, where label
+    composition cannot help, and crosses one partition per pass. A
+    broadcast shuffle round moves it two hops, so ``max_inner=10`` allows
+    20 passes and the ring converges (``max_inner=5`` raises, below)."""
+    monkeypatch.setattr(vertex_state, "ENTRIES_PER_PARTITION", 8)
+    ring = spark.createDataFrame(RING, "src long, dst long")
+    got = {r.v: r.label for r in scc(ring, max_inner=10).collect()}
+    assert got == {i: 0 for i in range(60)}
+
+
 @pytest.mark.parametrize("budget", REGIMES, ids=["driver", "shuffle"])
-def test_scc_caps_raise_and_release(spark, budget):
+def test_scc_caps_raise_and_release(spark, monkeypatch, budget):
     """Both scc caps raise, and every exit leaves the persistent-RDD set as
     it found it: a containment flood that exhausts ``max_inner`` (a ring's
-    flood runs against the id order: one hop per shuffle round, one
-    partition crossing per driver-held pass — so the driver-held ring is
-    big enough to span two grouped partitions) and an outer loop that
-    exhausts ``max_rounds`` ({2, 3} is not in its color root's SCC, so it
-    needs a second round)."""
-    n = ENTRIES_PER_PARTITION if budget else 60
-    ring = spark.range(n).select(
-        F.col("id").alias("src"), ((F.col("id") + 1) % n).alias("dst")
-    )
+    flood runs against the id order: one hop per shuffle round, and in the
+    driver-held regime one partition crossing per pass, so the ring is
+    split into 15 grouped partitions of four vertices) and an outer loop
+    that exhausts ``max_rounds`` ({2, 3} is not in its color root's SCC, so
+    it needs a second round)."""
+    monkeypatch.setattr(vertex_state, "ENTRIES_PER_PARTITION", 8)
+    ring = spark.createDataFrame(RING, "src long, dst long")
     nested = spark.createDataFrame(
         [(0, 1), (1, 0), (1, 2), (2, 3), (3, 2)], "src long, dst long"
     )

@@ -13,13 +13,16 @@ Two regimes, chosen from |V| against ``tuning.BROADCAST_ROWS``:
     rows, after which the driver hooks each changed vertex's old label onto
     its new one and pointer-jumps ``label ← label[label]`` (a numpy gather)
     — min-label propagation with Shiloach-Vishkin shortcutting, so long
-    paths cost a few passes, not their length. Bound: the broadcast state
-    and the per-pass collect are O(|V|). Cost model (4-vCPU host, Spark
-    local[2]): a pass ~0.3 s, against a star round's checkpoint job plus
-    its fixpoint probes. On the benchmark's co-part graph (seed 5, 44k
-    edges, one grouped partition) a call is ONE pass: 9 Spark jobs where
-    the star rounds ran 46 (both counts include the caller's
-    count-distinct).
+    paths cost a few passes, not their length. The grouped rows are
+    range-partitioned by id and mapped once into index space. Bound: the
+    broadcast state and the per-pass collect are O(|V|). Cost model
+    (4-vCPU host, Spark local[2]): a pass 0.3-0.7 s, against a star
+    round's checkpoint job plus its fixpoint probes. On the benchmark's
+    co-part graph (seed 5, 44k edges, one grouped partition) a call is ONE
+    pass: 9 Spark jobs where the star rounds ran 46 (both counts include
+    the caller's count-distinct); on an R-MAT scale-17 graph (972k edges,
+    two grouped partitions) three passes and ~4.4 s, where the 46 jobs of
+    the star rounds took ~8.6 s.
   * otherwise, or with a ``checkpointer`` (resumable runs) — the star
     path. Both operations are pure DataFrame groupBy/join plans, no UDFs:
 

@@ -15,7 +15,7 @@ results are partitioning-invariant; the fixed-round form is oracle-matched
 regimes, chosen from |V| against ``tuning.BROADCAST_ROWS``: at or under the
 budget the h state is held on the driver and a round is one ``mapInArrow``
 pass over the cached grouped adjacency (``plans/vertex_state``; broadcast
-state and per-round collect O(|V|), ~300 ms a pass on a 4-vCPU host);
+state and per-round collect O(|V|), 0.3-0.45 s a pass on a 4-vCPU host);
 above it, a per-round shuffle join + aggregate with a checkpointed state.
 """
 
@@ -214,8 +214,10 @@ def _h_index_step(part, st):
     h = st["h"]
     rows = part.row("nbrs")
     nh = h[part.nbr("nbrs")]
-    # per-row descending h, then the prefix count #{i : a_i >= i}
-    snh = nh[np.lexsort((-nh, rows))]
+    # per-row descending h (one sort of the key (row, -h); rows ascend),
+    # then the prefix count #{i : a_i >= i}
+    k = int(nh.max(initial=0)) + 1
+    snh = k - 1 - np.sort(rows * k + (k - 1 - nh)) % k
     pos = np.arange(len(rows), dtype=np.int64) - np.searchsorted(rows, rows)
     hh = part.seg_sum("nbrs", (snh >= pos + 1).astype(np.int64))
     h0 = h[part.own]
@@ -247,9 +249,11 @@ def coreness(
       round is ONE narrow ``mapInArrow`` pass that maps every neighbor to
       its h and computes every vertex's H with one segment-sorted prefix
       count, plus a collect of the changed rows — zero joins, zero
-      exchanges, zero per-round checkpoints. Bound: the broadcast state and
+      exchanges, zero per-round checkpoints; the grouped rows are mapped
+      into index space once, not per round. Bound: the broadcast state and
       the per-round collect are O(|V|). Cost model (4-vCPU host, Spark
-      local[2]): a pass ~300 ms, one Spark job per round.
+      local[2]): a pass 0.3-0.45 s, one Spark job per round (R-MAT
+      scale 17, two grouped partitions: 24 passes, ~12.5 s).
     * otherwise (web scale, |V| not driver-boundable): per-round shuffle
       join of adjacency against the h state + one hash aggregate with
       ``_h_index_agg`` (an in-group array sort), the h state checkpointed

@@ -28,19 +28,24 @@ distributed SCC scheme):
 Two regimes, chosen from |V| against ``tuning.BROADCAST_ROWS``:
 
   * |V| ≤ budget — driver-held state (``plans/vertex_state``): the grouped
-    adjacency ``(v, ins, outs)`` is cached once; the active, color and
-    reach arrays live on the driver; every trim / color / containment pass
-    is ONE ``mapInArrow`` over whole partitions that iterates the monotone
+    adjacency ``(v, ins, outs)`` is cached once, range-partitioned by id
+    and mapped once into index space; the active, color and reach arrays
+    live on the driver; every trim / color / containment pass is ONE
+    ``mapInArrow`` over the cached partitions that iterates the monotone
     update to a partition-local fixpoint, plus a collect of the changed
     rows. Both floods also compose labels on the driver
     (color(v) ← color(color(v)): whatever reaches v's color reaches v).
-    Bound: the broadcast state and the per-pass collect are O(|V|). Cost
-    model (4-vCPU host, Spark local[2]): a pass ~0.3 s, against a
-    checkpointed DataFrame round's checkpoint job + changed-count probe +
-    plan construction. On the benchmark's reciprocated co-part sample
-    (seed 5, ~800 vertices, one grouped partition) a call is one trim,
-    one color and one containment pass: 11 Spark jobs where the shuffle
-    rounds ran 160 (both counts include the caller's count-distinct).
+    A phase may take ``2·max_inner`` passes (a pass moves a flood at least
+    one hop; a broadcast shuffle round moves it two). Bound: the broadcast
+    state and the per-pass collect are O(|V|). Cost model (4-vCPU host,
+    Spark local[2]): a pass 0.3-0.7 s, against a checkpointed DataFrame
+    round's checkpoint job + changed-count probe + plan construction. On
+    the benchmark's reciprocated co-part sample (seed 5, ~800 vertices,
+    one grouped partition) a call is one trim, one color and one
+    containment pass: 11 Spark jobs where the shuffle rounds ran 160
+    (both counts include the caller's count-distinct); on a directed
+    R-MAT scale-17 graph (1.05 M edges, three grouped partitions) 10
+    passes and ~9 s where the shuffle rounds took 140 jobs and 17-19 s.
   * otherwise — the shuffle path: every step is a vertex-keyed join +
     aggregate over the active edge subgraph, each round's |V|-row state
     checkpointed (tracked_checkpoint; a file barrier every
@@ -187,9 +192,10 @@ def scc(
     after ``max_rounds`` (each round removes ≥ 1 SCC per current color
     class, so only an adversarial chain of Ω(max_rounds) nested SCC levels
     trips this — raise the cap for such graphs), or if a trim / flood phase
-    has not converged in ``max_inner`` rounds (shuffle regime) or passes
-    (driver-held regime). Either way every block the call cached is
-    released before the error propagates.
+    has not converged in ``max_inner`` rounds (shuffle regime) or
+    ``2·max_inner`` passes (driver-held regime: a pass moves a flood at
+    least one hop, a broadcast shuffle round two). Either way every block
+    the call cached is released before the error propagates.
     """
     spark = directed_edges.sparkSession
     with released_on_error(spark):
@@ -257,6 +263,10 @@ def _scc_driver(
     ).unionAll(
         d.select(F.col("dst").alias("v"), F.when(~loop, F.col("src")).alias("ins"), none.alias("outs"))
     )
+    # a flood round of the shuffle regime moves two hops while the state is
+    # broadcastable; a pass moves at least one, so 2·max_inner passes reach
+    # at least as far as max_inner rounds
+    max_passes = 2 * max_inner
     with VertexState(entries, ("ins", "outs"), 2 * n_rows) as vs:
         idx = np.arange(vs.n, dtype=np.int64)
         active = np.ones(vs.n, dtype=bool)
@@ -265,17 +275,17 @@ def _scc_driver(
             if not active.any():
                 break
             active = vs.converge(
-                _trim_step, {"active": active}, "active", max_inner, what="scc trim"
+                _trim_step, {"active": active}, "active", max_passes, what="scc trim"
             )
             if not active.any():
                 break
             color = vs.converge(
-                _color_step, {"active": active, "color": idx}, "color", max_inner,
+                _color_step, {"active": active, "color": idx}, "color", max_passes,
                 what="scc forward coloring", compose=True,
             )
             reach = vs.converge(
                 _contain_step, {"active": active, "color": color, "reach": idx},
-                "reach", max_inner, what="scc backward containment", compose=True,
+                "reach", max_passes, what="scc backward containment", compose=True,
             )
             marked = active & (reach == color)
             label[marked] = color[marked]

@@ -7,29 +7,48 @@ budget (``tuning.BROADCAST_ROWS``) — the flat per-vertex arrays the
 reference engines iterate over, with one Spark job per pass instead of one
 checkpointed DataFrame plan per round:
 
-  * the adjacency is grouped ONCE into ``(v, <list columns>)`` rows and
-    cached by the same job that collects the sorted vertex ids, so every
-    vertex has a global index (its position in id order);
-  * a pass broadcasts the state arrays, runs ONE ``mapInArrow`` over whole
-    partitions of the cached rows, and collects only the rows whose state
-    changed — no joins, no exchanges, no per-round checkpoints, no
-    changed-count probes; global convergence is an array comparison;
+  * the adjacency is grouped ONCE into ``(v, <list columns>)`` rows,
+    range-partitioned by vertex id, and cached by the same job that
+    collects the sorted vertex ids, so every vertex has a global index (its
+    position in id order);
+  * each partition is then mapped ONCE into index space (neighbor indices,
+    the local row of every neighbor the partition owns, segment offsets)
+    and cached as ONE pickled ``Partition`` per partition — a binary row
+    Spark moves to Python without touching its elements;
+  * a pass broadcasts the state arrays, runs ONE ``mapInArrow`` over the
+    cached partitions, and collects only the rows whose state changed — no
+    joins, no exchanges, no per-round checkpoints, no changed-count probes;
+    global convergence is an array comparison;
   * inside a partition the monotone update runs to a LOCAL fixpoint: owned
     vertices are updated in place, remote vertices are read from the
     broadcast (the partition-centric model of Giraph++, VLDB'13). Chaotic
     iteration of a monotone update reaches the same fixpoint as the
-    synchronous one, so answers are partitioning-invariant while global
-    passes drop well below the graph diameter. A pass whose changed rows
-    have no neighbor in another partition leaves every partition at its
-    fixpoint, so it ends the loop without a confirming pass.
+    synchronous one, so answers are partitioning-invariant. A pass whose
+    changed rows have no neighbor in another partition leaves every
+    partition at its fixpoint, so it ends the loop without a confirming
+    pass.
+
+Passes: a pass moves a flood at least one hop, like a synchronous round,
+and a whole path segment at once where the segment lies in one partition.
+On a graph that fits one partition a phase is one pass. Across partitions
+the gain depends on how much of the graph's locality the id order carries
+(id ranges keep a crawl's URL order or an id-ordered chain together);
+with none, a label travelling against the id order — where the
+driver-side label composition cannot help — crosses about P/(P-1) hops
+per pass over P partitions.
 
 Bound: the broadcast state and the per-pass collect are O(|V|) ≤ the
-budget; one partition's grouped rows (about ``ENTRIES_PER_PARTITION`` list
-entries) are held in one Python worker. Cost model measured on a 4-vCPU
-host (Spark local[2]): a JVM-only action ~100 ms, an Arrow/Python pass
-0.25-0.35 s on a graph of 800 vertices, a py4j round trip ~1.6 ms. One
-pass replaces several checkpointed DataFrame rounds, each of which paid a
-checkpoint job, a changed-count probe and dozens of py4j calls.
+budget; one partition (about ``ENTRIES_PER_PARTITION`` list entries, more
+for a hub whose list alone is longer) is held in one Python worker, and
+its pickled index arrays (~25 bytes per entry and list) must stay under
+Arrow's 2 GB binary value. Cost model measured on a 4-vCPU host (Spark
+local[2]): a JVM-only action 0.1-0.2 s, a py4j round trip ~1.6 ms, a
+pass 0.25-0.35 s on a graph of 800 vertices and 0.35-0.7 s on R-MAT
+graphs of 1-2 M entries in one to three partitions, most of it Spark and
+Python-worker latency (a pass whose step does nothing costs ~0.4 s on
+956k entries); one pass replaces several checkpointed DataFrame rounds,
+each of which paid a checkpoint job, a changed-count probe and dozens of
+py4j calls.
 """
 
 from __future__ import annotations
@@ -41,10 +60,14 @@ from pyspark.storagelevel import StorageLevel
 from trianglecounting_spark.plans.tuning import BROADCAST_ROWS
 
 # Grouped-adjacency sizing: one partition per this many list entries, at
-# least one. A pass over fewer entries is bound by job latency, not work,
-# and every partition boundary a label has to cross costs a pass — a graph
-# that fits one partition converges each phase in a single pass.
-ENTRIES_PER_PARTITION = 250_000
+# least one. Every partition boundary a label has to cross costs a pass (a
+# graph that fits one partition converges each phase in a single pass), and
+# every partition costs a task: measured on a 4-vCPU host (Spark local[2])
+# a task of a pass costs ~140 ms before its numpy work, which runs at
+# 0.05-0.2 µs per entry — so a partition of fewer entries is bound by task
+# latency, and four partitions of an R-MAT graph's 956k entries made a
+# pass slower than one.
+ENTRIES_PER_PARTITION = 1_000_000
 
 
 def fits_driver(
@@ -64,6 +87,24 @@ def fits_driver(
         .count()
     )
     return n_v <= broadcast_rows, rows
+
+
+def _build_partitions(ids_bc, lists: tuple[str, ...]):
+    """mapInArrow body: one partition of grouped ``(v, <lists>)`` rows →
+    ONE row holding its pickled ``Partition`` (index arrays built once)."""
+
+    def run(batches):
+        import pickle
+
+        import pyarrow as pa
+
+        rbs = [rb for rb in batches if rb.num_rows > 0]
+        if rbs:
+            part = Partition(pa.Table.from_batches(rbs), ids_bc.value, lists)
+            blob = pickle.dumps(part, protocol=pickle.HIGHEST_PROTOCOL)
+            yield pa.RecordBatch.from_pydict({"part": pa.array([blob], pa.binary())})
+
+    return run
 
 
 class Partition:
@@ -87,30 +128,29 @@ class Partition:
             offs = offs - offs[0]
             nbr = np.searchsorted(ids, vals)
             pos = np.minimum(np.searchsorted(so, nbr), self.n - 1)
-            # the row owning the neighbor here, -1 when another partition does
-            local = np.where(so[pos] == nbr, order[pos], -1)
+            # entries whose neighbor this partition owns, and its row here
+            local = so[pos] == nbr
             lens = np.diff(offs)
             nz = lens > 0
             row = np.repeat(np.arange(self.n, dtype=np.int64), lens)
-            self._c[c] = (nbr, local, row, offs[:-1][nz], nz)
+            self._c[c] = (nbr, local, order[pos[local]], row, offs[:-1][nz], nz)
 
     def nbr(self, c: str) -> np.ndarray:
         return self._c[c][0]
 
     def row(self, c: str) -> np.ndarray:
-        return self._c[c][2]
+        return self._c[c][3]
 
     def gather(self, c: str, own_vals: np.ndarray, all_vals: np.ndarray) -> np.ndarray:
         """Each entry's neighbor value: the in-place value when this
         partition owns the neighbor, the broadcast value otherwise."""
-        nbr, local = self._c[c][:2]
+        nbr, local, local_row = self._c[c][:3]
         out = all_vals[nbr]
-        m = local >= 0
-        out[m] = own_vals[local[m]]
+        out[local] = own_vals[local_row]
         return out
 
     def _seg(self, ufunc, c: str, vals: np.ndarray, empty) -> np.ndarray:
-        starts, nz = self._c[c][3:]
+        starts, nz = self._c[c][4:]
         out = np.full(self.n, empty, dtype=vals.dtype)
         if len(starts):
             out[nz] = ufunc.reduceat(vals, starts)
@@ -130,7 +170,7 @@ class Partition:
 
     def remote(self, c: str) -> np.ndarray:
         """Rows with a ``c``-neighbor owned by another partition."""
-        return self.seg_any(c, self._c[c][1] < 0)
+        return self.seg_any(c, ~self._c[c][1])
 
     def min_flood(
         self, c: str, lab: np.ndarray, all_lab: np.ndarray, ok: np.ndarray | None = None
@@ -162,7 +202,10 @@ class VertexState:
     ``entries``: one row per adjacency entry, ``(v, <one column per list>)``
     — null entry values are dropped by the grouping, so a row of nulls only
     registers ``v``. ``n_entries`` (an upper bound) sizes the grouped table
-    at one partition per ``ENTRIES_PER_PARTITION`` entries. ``attrs``: extra
+    at one partition per ``ENTRIES_PER_PARTITION`` entries; the partitions
+    are ranges of vertex ids, so whatever locality the id order has (URL
+    order on a crawl, an id-ordered ring) stays inside a partition, where
+    the local fixpoint crosses it without a pass. ``attrs``: extra
     per-vertex columns over the grouped row, collected with the ids
     (aligned to the sorted ids in ``self.attrs``)."""
 
@@ -171,20 +214,21 @@ class VertexState:
         attrs: dict[str, Column] | None = None,
     ):
         self.spark = entries.sparkSession
-        self.lists = lists
         n_part = max(1, -(-n_entries // ENTRIES_PER_PARTITION))
         # SQL cache, not a checkpoint: the id collect below is the action
-        # that materializes it, so caching costs no job of its own
-        self._df = (
-            entries.repartition(n_part, "v")
+        # that materializes it, so caching costs no job of its own (range
+        # partitioning adds one sampling job when n_part > 1)
+        self._grouped = (
+            entries.repartitionByRange(n_part, "v")
             .groupBy("v")
             .agg(*(F.collect_list(c).alias(c) for c in lists))
             .persist(StorageLevel.MEMORY_AND_DISK)
         )
+        self._df = None
         self._ids_bc = None
         try:
             attrs = attrs or {}
-            pdf = self._df.select(
+            pdf = self._grouped.select(
                 "v", *(col.alias(k) for k, col in attrs.items())
             ).toPandas()
             ids = pdf["v"].to_numpy(dtype=np.int64)
@@ -193,6 +237,12 @@ class VertexState:
             self.attrs = {k: pdf[k].to_numpy(dtype=np.int64)[order] for k in attrs}
             self.n = len(self.ids)
             self._ids_bc = self.spark.sparkContext.broadcast(self.ids)
+            # every partition's index arrays, built ONCE and cached as one
+            # pickled row per partition: the first pass materializes this
+            # cache from the grouped one, which it then drops
+            self._df = self._grouped.mapInArrow(
+                _build_partitions(self._ids_bc, lists), "part binary"
+            ).persist(StorageLevel.MEMORY_AND_DISK)
         except BaseException:
             self.close()
             raise
@@ -204,7 +254,10 @@ class VertexState:
         self.close()
 
     def close(self) -> None:
-        self._df.unpersist()
+        for df in (self._grouped, self._df):
+            if df is not None:
+                df.unpersist()
+        self._grouped = self._df = None
         if self._ids_bc is not None:
             self._ids_bc.destroy()
             self._ids_bc = None
@@ -215,24 +268,26 @@ class VertexState:
         (``x`` typed like ``state[key]``)."""
         sc = self.spark.sparkContext
         state_bc = sc.broadcast(state)
-        ids_bc, lists = self._ids_bc, self.lists
         x_type = "boolean" if state[key].dtype == np.bool_ else "long"
 
         def run(batches):
+            import pickle
+
             import pyarrow as pa
 
-            rbs = [rb for rb in batches if rb.num_rows > 0]
-            if not rbs:
-                return
-            part = Partition(pa.Table.from_batches(rbs), ids_bc.value, lists)
-            out = step(part, state_bc.value)
-            if len(out["i"]):
-                yield pa.RecordBatch.from_pydict(out)
+            for rb in batches:
+                for blob in rb.column("part").to_pylist():
+                    out = step(pickle.loads(blob), state_bc.value)
+                    if len(out["i"]):
+                        yield pa.RecordBatch.from_pydict(out)
 
         try:
             pdf = self._df.mapInArrow(run, f"i long, x {x_type}, remote boolean").toPandas()
         finally:
             state_bc.destroy()
+        if self._grouped is not None:
+            self._grouped.unpersist()
+            self._grouped = None
         return (
             pdf["i"].to_numpy(dtype=np.int64),
             pdf["x"].to_numpy(),
