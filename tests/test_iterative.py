@@ -77,6 +77,24 @@ def test_ktruss_two_cliques(spark):
     assert t7.count() == 0
 
 
+def test_ktruss_resumes_from_canonical_snapshot(spark, tmp_path):
+    """A snapshot in the canonical ``(u, v)`` form (as written before the
+    peel ran on oriented ``(src, dst)`` rows) is re-oriented on restore and
+    peels to the closed-form 4-truss; a snapshot of any other schema is
+    rejected with the offending columns named."""
+    e = g.two_cliques_bridge(spark)
+    ck = IterationCheckpointer(spark, str(tmp_path / "uv"), every=1)
+    ck.save(1, e.select("u", "v"))
+    got = {(r.u, r.v) for r in ktruss(e, k=4, checkpointer=ck).collect()}
+    cliques = (range(0, 6), range(10, 16))
+    assert got == {(a, b) for c in cliques for a in c for b in c if a < b}
+
+    bad = IterationCheckpointer(spark, str(tmp_path / "ab"), every=1)
+    bad.save(1, e.select(F.col("u").alias("a"), F.col("v").alias("b")))
+    with pytest.raises(ValueError, match="'a', 'b'"):
+        ktruss(e, k=4, checkpointer=bad)
+
+
 def test_ktruss_rounds_converges_to_fixpoint(spark):
     e = g.two_cliques_bridge(spark)
     r1 = sorted((r.u, r.v) for r in ktruss_rounds(e, 4, 1).collect())

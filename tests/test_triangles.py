@@ -134,8 +134,7 @@ def test_hub_csr_budget_fallback(spark, monkeypatch):
     expected = triangle_count_kernel(e).collect()[0].triangles
     monkeypatch.setattr(T, "HUB_BUDGET_BYTES", 64)  # a few rows at most
     d = T.orient_dodg(e).localCheckpoint(eager=False)
-    adj = T.adjacency(d).localCheckpoint(eager=False)
-    hubs, flat = T._select_hub_csr(d, adj, hub_k=65536)
+    hubs, flat = T._select_hub_csr(d, hub_k=65536)
     assert hubs is None and flat is None  # the guard tripped
     assert T.triangle_count_kernel(e).collect()[0].triangles == expected
 
@@ -192,16 +191,17 @@ def test_triangle_count_delta_star_batch(spark):
 
 def test_hub_k_zero_and_env_tunables(spark):
     """hub_k=0 disables the hub split entirely (pure join path) with the
-    identical exact count — the knob the env tunables
-    (SPARK_GRAFT_HUB_K / SPARK_GRAFT_HUB_BUDGET_BYTES, read at import for
-    large-graph runs) ride on; hub_k=None resolves to the module default."""
+    identical exact count; hub_k=None resolves to the module default, a
+    constant. The byte budget and full-CSR row cap stay env-tunable
+    (SPARK_GRAFT_HUB_BUDGET_BYTES / SPARK_GRAFT_FULL_CSR_ROWS, read at import
+    for large-graph runs)."""
     import trianglecounting_spark.operators.triangles as T
 
     e = normalize_edges(g.rmat_graph(spark, scale=9, edge_factor=8))
     default = T.triangle_count_kernel(e).collect()[0].triangles
     hubless = T.triangle_count_kernel(e, hub_k=0).collect()[0].triangles
     assert hubless == default > 0
-    assert T.HUB_K_DEFAULT == 65536  # baked default when env unset
+    assert T.HUB_K_DEFAULT == 65536
 
 
 def test_clustering_by_degree_closed_form(spark):
@@ -250,3 +250,50 @@ def test_edge_jaccard_closed_form(spark):
     assert (rows[(0, 2)].support, rows[(0, 2)].jaccard) == (1, 0.5)
     assert (rows[(2, 9)].support, rows[(2, 9)].jaccard) == (0, 0.0)
     assert rows[(100, 101)].jaccard is None
+
+
+@pytest.mark.parametrize(
+    "name,builder",
+    [
+        ("k6", lambda s: g.complete_graph(s, 6)),
+        ("rmat9", lambda s: normalize_edges(g.rmat_graph(s, scale=9, edge_factor=8))),
+    ],
+)
+def test_kernel_variants_identical_across_layout_regimes(spark, monkeypatch, name, builder):
+    """Every kernel variant (count with its probe/hit counters, per-directed-
+    edge counts, enumeration, partial support) gives identical rows in all
+    three layout regimes: full broadcast CSR (the default on small graphs),
+    the hub split (full CSR disabled) and the plain dst join (``hub_k=0``).
+    The hub split and plain join are the only regimes that probe joined
+    adjacency slices, so small graphs reach them only through this test."""
+    from pyspark.sql import Observation
+
+    import trianglecounting_spark.operators.triangles as T
+
+    e = builder(spark).localCheckpoint(eager=True)
+    d = T.orient_dodg(e).localCheckpoint(eager=True)
+    n = 3
+
+    def run(hub_k):
+        obs = Observation(f"regime_{name}_{hub_k}")
+        tri = T.triangle_count_kernel(e, n, hub_k, observation=obs).collect()[0].triangles
+        return {
+            "count": (tri, obs.get["probes"], obs.get["hits"]),
+            "per_edge": sorted(
+                T.triangle_count_per_directed_edge_kernel(e, n, hub_k).collect()
+            ),
+            "enumerate": sorted(T.triangle_enumerate_kernel(e, n, hub_k).collect()),
+            "support": sorted(T.triangle_support_counts_oriented(d, n, hub_k).collect()),
+        }
+
+    full_csr = run(None)
+    plain_join = run(0)
+    monkeypatch.setattr(T, "FULL_CSR_MAX_ROWS", 0)
+    hub_split = run(None)
+    tri, probes, hits = full_csr["count"]
+    assert tri == hits == len(full_csr["enumerate"]) > 0
+    assert sum(r.cnt for r in full_csr["per_edge"]) == tri
+    assert sum(r.support for r in full_csr["support"]) == 3 * tri
+    assert probes >= hits
+    assert hub_split == full_csr
+    assert plain_join == full_csr

@@ -23,14 +23,14 @@ def main() -> None:
     ap.add_argument("--repeats", type=int, default=3)
     args = ap.parse_args()
 
-    from pyspark.sql import functions as F
+    from pyspark.sql import Observation
 
     from trianglecounting_spark.session import get_spark
     from trianglecounting_spark.sources import generators as g
-    from trianglecounting_spark.operators.normalize import normalize_edges
+    from trianglecounting_spark.operators.normalize import normalize_edges, orient_dodg
     from trianglecounting_spark.operators.triangles import (
-        _edges_with_dst_adjacency,
-        _make_tc_partition,
+        _count_from_layout,
+        _layout_from_dodg,
         triangle_count_kernel,
         triangle_count_sql,
     )
@@ -61,7 +61,8 @@ def main() -> None:
     # counting kernel on a BUILT CSR — BASELINE.md reports "kernel" and
     # "total" separately), then time the set-intersection stage best-of-N
     # (the sandbox hypervisor shows ~2x run-to-run noise).
-    laid_out, hub_bc = _edges_with_dst_adjacency(edges, 128)
+    d = orient_dodg(edges).localCheckpoint(eager=False)
+    laid_out, hub_bc = _layout_from_dodg(d, 128)
     laid_out = laid_out.localCheckpoint(eager=True)
     laid_out.count()
     # one UNTIMED full-size pass first: Python worker pool spawn, hub-CSR
@@ -70,27 +71,16 @@ def main() -> None:
     # into repeat 1 would bias the measurement against the higher core count
     # (more workers to warm). The reference's kernel timings likewise exclude
     # one-time setup (BASELINE.md reports kernel vs total separately).
-    laid_out.mapInArrow(
-        _make_tc_partition(hub_bc), schema="tri_cnt long, probes long"
-    ).agg(F.sum("tri_cnt")).collect()
+    _count_from_layout(laid_out, hub_bc).collect()
     t_kernel = float("inf")
     tri_kernel = probes = None
     for _ in range(args.repeats):
+        obs = Observation("kernel")
         t0 = time.time()
-        row = (
-            laid_out.mapInArrow(
-                _make_tc_partition(hub_bc), schema="tri_cnt long, probes long"
-            )
-            .agg(
-                F.sum("tri_cnt").cast("long").alias("triangles"),
-                F.sum("probes").cast("long").alias("probes"),
-            )
-            .collect()[0]
-        )
-        tri = row.triangles
+        tri = _count_from_layout(laid_out, hub_bc, obs).collect()[0].triangles
         t_kernel = min(t_kernel, time.time() - t0)
         assert tri_kernel is None or tri == tri_kernel
-        tri_kernel, probes = tri, row.probes
+        tri_kernel, probes = tri, obs.get["probes"]
 
     # --- end-to-end pipeline timing (scan→normalize excluded; DODG→count) ---
     t_pipeline = float("inf")

@@ -43,7 +43,7 @@ def _peel_once_oriented(
 ) -> DataFrame:
     """One support peel on an already-oriented edge table — identical edge
     sets to ``_peel_once`` on the canonical form (support is
-    orientation-invariant; see ``triangle_per_edge_support_oriented``), but
+    orientation-invariant; see ``triangle_support_counts_oriented``), but
     no per-round degree aggregation or orientation joins — and, for the
     k ≥ 3 peel, no join back to the edge table at all: the kernel's
     partial-aggregated support counts omit zero-support edges, which are
@@ -65,6 +65,25 @@ def _canon_uv(d: DataFrame) -> DataFrame:
     )
 
 
+def _oriented_snapshot(state: DataFrame) -> DataFrame:
+    """A restored k-truss snapshot as the oriented ``(src, dst)`` table the
+    peel runs on. Snapshots in the canonical ``(u, v)`` form (written before
+    the peel ran oriented) are re-oriented by degree: any acyclic
+    orientation enumerates each triangle exactly once, so support stays
+    exact. Any other schema is rejected before the peel starts."""
+    from trianglecounting_spark.operators.normalize import orient_dodg
+
+    cols = set(state.columns)
+    if {"src", "dst"} <= cols:
+        return state.select("src", "dst")
+    if {"u", "v"} <= cols:
+        return orient_dodg(state.select("u", "v"))
+    raise ValueError(
+        f"k-truss snapshot has columns {state.columns}; "
+        "expected (src, dst) or (u, v)"
+    )
+
+
 def ktruss(
     edges: DataFrame,
     k: int,
@@ -83,14 +102,13 @@ def ktruss(
     from trianglecounting_spark.operators.normalize import orient_dodg
 
     spark = edges.sparkSession
-    cur, cur_ids = tracked_checkpoint(orient_dodg(edges))
+    restored = checkpointer.restore() if checkpointer is not None else None
+    if restored is None:
+        start, cur = 0, orient_dodg(edges)
+    else:
+        start, cur = restored[0], _oriented_snapshot(restored[1])
+    cur, cur_ids = tracked_checkpoint(cur)
     n_cur = cur.count()
-    start = 0
-    if checkpointer is not None:
-        restored = checkpointer.restore()
-        if restored is not None:
-            start, cur = restored
-            n_cur = cur.count()
     for it in range(start + 1, max_iterations + 1):
         # eager localCheckpoint: materialize + truncate lineage per round;
         # tracked so the previous round's blocks AND the peel's kernel-internal

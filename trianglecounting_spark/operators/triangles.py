@@ -14,8 +14,9 @@ hand-picked physical intersection strategies (SURVEY.md §2.5, J3–J7). Here:
    with the hub path re-expressing the dense-range bitmap/packed-words
    strategy (J2/J3) as a broadcast flat-CSR, and ``np.searchsorted`` standing
    in for the galloping intersector (J5, `util/set_inter_cnt_utils.h:13-48`).
-   ``triangle_enumerate_kernel`` additionally emits triangle corners — the
-   per-edge-support / k-truss input.
+   One intersection loop serves every variant: the count, per-directed-edge
+   counts, ``triangle_enumerate_kernel`` (triangle corners) and the partial
+   per-edge support that k-truss peels on are short reducers over it.
 
 Both return exact LongType counts — integer end-to-end, so results are
 partitioning-invariant (no FP accumulation; north_rule requires exact parity).
@@ -31,10 +32,7 @@ wedge-candidate volume — kept as the declarative differential oracle.
 
 from __future__ import annotations
 
-
-
 import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from trianglecounting_spark.operators.normalize import adjacency, orient_dodg, undirect
@@ -66,19 +64,6 @@ def triangle_count_sql(edges: DataFrame) -> DataFrame:
     )
 
 
-def triangle_enumerate(edges: DataFrame) -> DataFrame:
-    """Materialize each triangle once as ``(a, b, c)`` with rank a < b < c.
-
-    Same join as ``triangle_count_sql`` without the final aggregate; feeds
-    per-edge support and k-truss.
-    """
-    d = orient_dodg(edges).localCheckpoint(eager=False)
-    e1 = d.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    e2 = d.select(F.col("src").alias("b"), F.col("dst").alias("c"))
-    e3 = d.select(F.col("src").alias("a"), F.col("dst").alias("c"))
-    return e1.join(e2, "b").join(e3, ["a", "c"]).select("a", "b", "c")
-
-
 def triangle_per_edge_support(edges: DataFrame) -> DataFrame:
     """Per-undirected-edge triangle count (support) — the k-truss input.
 
@@ -89,48 +74,9 @@ def triangle_per_edge_support(edges: DataFrame) -> DataFrame:
     """
     # kernel support counts with in-partition partial aggregation (round 6:
     # replaces the 3-per-triangle explode + full-row groupBy; the SMJ
-    # enumerate remains the differential oracle via the SQL path). Corners
-    # are in RANK order (deg, id) — canonicalize each pair by id so it
-    # joins the (u < v by id) edge table.
+    # enumerate remains the differential oracle via the SQL path)
     d = orient_dodg(edges).localCheckpoint(eager=False)
-    counts = triangle_support_counts_oriented(d)
-    support = counts.select(
-        F.least("src", "dst").alias("u"),
-        F.greatest("src", "dst").alias("v"),
-        "support",
-    )
-    return (
-        edges.join(support, ["u", "v"], "left")
-        .select("u", "v", F.coalesce("support", F.lit(0)).cast("long").alias("support"))
-    )
-
-
-def triangle_per_edge_support_oriented(
-    d: DataFrame, num_partitions: int | None = None, hub_k: int | None = None
-) -> DataFrame:
-    """Per-edge support keyed on an ALREADY-ORIENTED acyclic edge table
-    ``(src, dst)`` (any orientation induced by a fixed total vertex order —
-    e.g. ``orient_dodg``'s output or any subgraph of it).
-
-    Support is an undirected-edge property and every orientation from a total
-    order enumerates each triangle exactly once, so the counts are identical
-    to ``triangle_per_edge_support`` on the canonicalized edges — but the
-    caller skips the per-call degree aggregation + orientation joins, which
-    is what makes the k-truss peel loop pay orientation ONCE instead of once
-    per round (the orientation of the shrinking subgraph under the ORIGINAL
-    order stays acyclic; out-degrees only shrink, so the O(√m) bound holds).
-
-    Output: ``(src, dst, support: long)`` for every input row (0 kept).
-    Corners from the enumerate kernel come out in rank order, so the three
-    incidence pairs of a triangle ARE oriented input rows — no
-    least/greatest canonicalization anywhere.
-    """
-    support = triangle_support_counts_oriented(d, num_partitions, hub_k)
-    return d.join(support, ["src", "dst"], "left").select(
-        "src",
-        "dst",
-        F.coalesce("support", F.lit(0)).cast("long").alias("support"),
-    )
+    return _attach_support(edges, triangle_support_counts_oriented(d))
 
 
 def wedge_count(edges: DataFrame) -> DataFrame:
@@ -223,6 +169,19 @@ def clustering_by_degree(edges: DataFrame) -> DataFrame:
 # Plan 2: Arrow-vectorized intersection kernel over co-partitioned adjacency
 # ---------------------------------------------------------------------------
 #
+# One intersection core, one layout function. `_segments` walks a
+# partition's src groups once and yields every probed segment with its hit
+# mask; count, per-directed-edge counts, enumeration and partial support are
+# short reducers over it. `_layout` lays the DODG out for the kernel as a
+# function of ONE choice, the broadcast set: every vertex (full CSR, no
+# adjacency join), the hubs (hub split), or none (plain dst join). Which set
+# is chosen is decided in `_layout_from_dodg` and `bucketed_kernel_layout`;
+# the kernel never knows, because a row's N⁺(dst) is either its joined list
+# or its broadcast list. This is the reference's single kernel over one
+# degree-ordered CSR (`CountTriBMPAndMergeWithPackDODG`,
+# `triangle_counting.h:36-129`) with the partitioning deciding which sets
+# are broadcast (HERO, SIGMOD'24).
+#
 # Intersection strategy: ONE strategy, deliberately. The reference dispatches
 # per neighbor-pair on a size-ratio rule between a merge intersector (J4,
 # `util/set_inter_cnt_utils.h:161-171`) and a galloping binary-search
@@ -231,11 +190,10 @@ def clustering_by_degree(edges: DataFrame) -> DataFrame:
 # cost model is different: per-CALL dispatch overhead (~µs) dominates
 # per-element cost, so the winning move is to batch EVERY pair of a src group
 # into a single `searchsorted` over the concatenated neighbor segments
-# (`_hits` / the reduceat variants below) — one vectorized binary search per
-# group, the galloping analogue, regardless of size ratio. A per-pair
-# merge/gallop dispatch was measured slower at every ratio because it
-# re-introduces per-pair Python/numpy call overhead; it is therefore not
-# implemented.
+# (`_hit` in `_segments`) — one vectorized binary search per group, the
+# galloping analogue, regardless of size ratio. A per-pair merge/gallop
+# dispatch was measured slower at every ratio because it re-introduces
+# per-pair Python/numpy call overhead; it is therefore not implemented.
 #
 # Round-3 measurement — whole-PARTITION vectorization rejected: the obvious
 # next step (segment-offset keys grp·M+dst, one partition-wide lexsort +
@@ -249,24 +207,34 @@ def clustering_by_degree(edges: DataFrame) -> DataFrame:
 # steps of cache-missing binary search) — a per-PROBE cost increase that
 # swamps the ~µs-per-GROUP dispatch it saves (probes outnumber groups ~250:1).
 # What survives from that experiment: the per-group `np.sort` is hoisted into
-# one stable partition-wide lexsort below (sorted neighbor sets become views,
-# zero per-group allocations).
+# one stable partition-wide lexsort (sorted neighbor sets become views, zero
+# per-group allocations).
 
 
-def _partition_views(tbl, hub_idx):
-    """One partition's (src, dst, nbrs) Arrow table → zero-copy numpy views.
+def _partition_views(batches, hub_idx):
+    """One partition's (src, dst[, nbrs]) Arrow batches → zero-copy numpy views.
 
-    Returns (srcs, dsts, j_offsets, j_values, hub_pos):
+    The partition is one CSR block (src groups are contiguous thanks to
+    sortWithinPartitions), so whole-partition processing needs no
+    batch-boundary carry logic. Returns (srcs, dsts, j_offsets, j_values,
+    hub_pos):
       * j_values / j_offsets — the list column's raw Arrow buffers: this is
         literally the reference's CSR (values = `adj`, offsets = `row_ptrs`,
         `util/graph.h:11-12`) arriving over the wire. Spark's Arrow writer
         repeats offsets at null rows, so a group's joined neighbor data is
         the contiguous slice j_values[j_offsets[gs]:j_offsets[ge]] — no copy.
-      * hub_pos[i] — for null rows (hub destinations), the row's position in
-        the broadcast hub CSR (-1 when absent = true sink), resolved with one
-        vectorized searchsorted.
+      * hub_pos[i] — for null rows (broadcast destinations), the row's
+        position in the broadcast CSR (-1 when absent = true sink), resolved
+        with one vectorized searchsorted.
     Nothing here is O(neighbor volume); peak extra memory is O(rows).
     """
+    import pyarrow as pa
+
+    rbs = [rb for rb in batches if rb.num_rows > 0]
+    if not rbs:
+        empty = np.empty(0, dtype=np.int64)
+        return empty, empty, np.zeros(1, dtype=np.int64), empty, empty
+    tbl = pa.Table.from_batches(rbs)
     srcs = tbl.column("src").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
     dsts = tbl.column("dst").to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
     n = len(srcs)
@@ -279,288 +247,185 @@ def _partition_views(tbl, hub_idx):
         j_values = np.empty(0, dtype=np.int64)
         valid = np.zeros(n, dtype=bool)
     else:
-        nb = tbl.column("nbrs")
-        if hasattr(nb, "combine_chunks"):
-            nb = nb.combine_chunks()
+        nb = tbl.column("nbrs").combine_chunks()
         j_offsets = np.asarray(nb.offsets).astype(np.int64, copy=False)
         j_values = nb.values.to_numpy(zero_copy_only=False).astype(np.int64, copy=False)
         valid = np.asarray(nb.is_valid())
     hub_pos = np.full(n, -1, dtype=np.int64)
-    if hub_idx is not None and (~valid).any():
-        ids, _offs, _vals = hub_idx
-        if len(ids):
-            cand = dsts[~valid]
-            j = np.searchsorted(ids, cand)
-            j_clip = np.minimum(j, len(ids) - 1)
-            found = ids[j_clip] == cand
-            hub_pos[~valid] = np.where(found, j_clip, -1)
+    if hub_idx is not None and len(hub_idx[0]) and not valid.all():
+        ids = hub_idx[0]
+        cand = dsts[~valid]
+        j = np.minimum(np.searchsorted(ids, cand), len(ids) - 1)
+        hub_pos[~valid] = np.where(ids[j] == cand, j, -1)
     return srcs, dsts, j_offsets, j_values, hub_pos
 
 
-def _group_bounds(srcs: np.ndarray) -> np.ndarray:
-    """Segment boundaries of the (sorted) src column: [0, ..., n]."""
-    n = len(srcs)
-    changes = np.flatnonzero(srcs[1:] != srcs[:-1]) + 1
-    return np.concatenate((np.array([0], dtype=np.int64), changes,
-                           np.array([n], dtype=np.int64)))
-
-
-def _partition_table(batches):
-    """Concatenate a partition's Arrow batches into one table (the partition
-    is one CSR block; src groups are contiguous thanks to
-    sortWithinPartitions, and whole-partition processing needs no
-    batch-boundary carry logic). Returns None for an empty partition."""
-    import pyarrow as pa
-
-    rbs = [rb for rb in batches if rb.num_rows > 0]
-    if not rbs:
-        return None
-    return pa.Table.from_batches(rbs)
-
-
-def _hits(nbrs_u: np.ndarray, seg: np.ndarray) -> int:
-    """|{x ∈ seg : x ∈ nbrs_u}| for sorted nbrs_u — the intersection-count
-    primitive (numpy binary search ≈ the reference's galloping intersector
-    J5, `util/set_inter_cnt_utils.h:13-48`)."""
+def _hit(nbrs_u: np.ndarray, seg: np.ndarray) -> np.ndarray:
+    """seg[i] ∈ nbrs_u for sorted nbrs_u — the intersection primitive (numpy
+    binary search ≈ the reference's galloping intersector J5,
+    `util/set_inter_cnt_utils.h:13-48`)."""
     idx = np.searchsorted(nbrs_u, seg)
     idx[idx == len(nbrs_u)] = len(nbrs_u) - 1
-    return int(np.count_nonzero(nbrs_u[idx] == seg))
+    return nbrs_u[idx] == seg
 
 
-def _make_tc_partition(hub_bc):
-    """Whole-partition kernel (mapInArrow).
+def _segments(views, hub_idx):
+    """The intersection core. Walks the partition's src groups once and
+    yields ``(seg, hit, owner)`` for every probed segment of a group u:
 
-    Per src group: one vectorized count over the group's *joined* neighbor
-    data (a contiguous zero-copy slice of the Arrow values buffer), plus one
-    vectorized count per *hub* row against the broadcast CSR (a view —
-    nothing is ever gathered/copied, so peak memory stays O(rows), immune to
-    wedge-volume skew). Emits one partial row per partition:
-    ``(tri_cnt, probes)`` where probes = the number of intersection
-    candidates binary-searched (Σ |N⁺(dst)| over the partition's edges — the
-    instrumented work counter the reference reports as probes/MP-sec,
-    `2017-karypis-hepc-tc/ptc.c:282-397`, `main.c:49-51`). The public count
-    queries aggregate only tri_cnt; callers attach ``df.observe`` to read the
-    probe totals without a second job."""
+      * its joined neighbor data — a contiguous zero-copy slice of the Arrow
+        values buffer holding N⁺(dst) of every joined row of the group;
+      * its broadcast rows' lists — views into the broadcast CSR, batched
+        into ONE concat so the group costs one vectorized search (per-row
+        numpy dispatch would cost ~40µs/row; this is volume-bound).
 
-    def run(batches):
-        import pyarrow as pa
-
-        hub_idx = hub_bc.value if hub_bc is not None else None
-        tbl = _partition_table(batches)
-        total = 0
-        probes = 0
-        if tbl is not None:
-            srcs, dsts, j_offsets, j_values, hub_pos = _partition_views(tbl, hub_idx)
-            offs = vals = None
-            if hub_idx is not None:
-                _ids, offs, vals = hub_idx
-            hub_rows = np.flatnonzero(hub_pos >= 0)
-            bounds = _group_bounds(srcs)
-            # one stable partition-wide sort replaces a np.sort per group:
-            # group boundaries are unchanged (srcs is the major key), so each
-            # group's sorted neighbor set is a zero-copy VIEW of sdsts
-            sdsts = dsts[np.lexsort((dsts, srcs))]
-            lo = 0
-            for k in range(len(bounds) - 1):
-                gs, ge = bounds[k], bounds[k + 1]
-                nbrs_u = sdsts[gs:ge]
-                jseg = j_values[j_offsets[gs]:j_offsets[ge]]
-                if jseg.size:
-                    total += _hits(nbrs_u, jseg)
-                    probes += int(jseg.size)
-                hi = np.searchsorted(hub_rows, ge, side="left")
-                if hi > lo:
-                    # batch the group's hub segments: views → one concat →
-                    # ONE vectorized search (per-row numpy dispatch would cost
-                    # ~40µs/row; this is volume-bound). Peak memory = one
-                    # group's hub volume ≤ outdeg(u)·max_hub_len — bounded.
-                    ps = hub_pos[hub_rows[lo:hi]]
-                    segs = [vals[offs[p]:offs[p + 1]] for p in ps]
-                    hseg = np.concatenate(segs) if len(segs) > 1 else segs[0]
-                    if hseg.size:
-                        total += _hits(nbrs_u, hseg)
-                        probes += int(hseg.size)
-                lo = hi
-        yield pa.RecordBatch.from_pydict(
-            {
-                "tri_cnt": pa.array([total], pa.int64()),
-                "probes": pa.array([probes], pa.int64()),
-            }
-        )
-
-    return run
-
-
-def _make_tc_partition_per_edge(hub_bc):
-    def run(batches):
-        import pyarrow as pa
-
-        hub_idx = hub_bc.value if hub_bc is not None else None
-        tbl = _partition_table(batches)
-        if tbl is None:
-            return
-        srcs, dsts, j_offsets, j_values, hub_pos = _partition_views(tbl, hub_idx)
-        offs = vals = None
-        if hub_idx is not None:
-            _ids, offs, vals = hub_idx
-        counts = np.zeros(len(srcs), dtype=np.int64)
-        hub_rows = np.flatnonzero(hub_pos >= 0)
-        bounds = _group_bounds(srcs)
-        sdsts = dsts[np.lexsort((dsts, srcs))]  # see _make_tc_partition
-        lo = 0
-        for k in range(len(bounds) - 1):
-            gs, ge = bounds[k], bounds[k + 1]
-            base = j_offsets[gs]
-            jseg = j_values[base:j_offsets[ge]]
-            nbrs_u = sdsts[gs:ge]
-            if jseg.size:
-                idx = np.searchsorted(nbrs_u, jseg)
-                idx[idx == len(nbrs_u)] = len(nbrs_u) - 1
-                h = (nbrs_u[idx] == jseg).astype(np.int64)
-                starts = (j_offsets[gs:ge] - base).astype(np.int64)
-                lens = np.diff(j_offsets[gs:ge + 1])
-                nonempty = lens > 0
-                if nonempty.any():
-                    counts[gs:ge][nonempty] = np.add.reduceat(h, starts[nonempty])
-            hi = np.searchsorted(hub_rows, ge, side="left")
-            if hi > lo:
-                rows_here = hub_rows[lo:hi]
-                ps = hub_pos[rows_here]
-                segs = [vals[offs[p]:offs[p + 1]] for p in ps]
-                hseg = np.concatenate(segs) if len(segs) > 1 else segs[0]
-                if hseg.size:
-                    idx = np.searchsorted(nbrs_u, hseg)
-                    idx[idx == len(nbrs_u)] = len(nbrs_u) - 1
-                    h = (nbrs_u[idx] == hseg).astype(np.int64)
-                    seg_lens = (offs[ps + 1] - offs[ps]).astype(np.int64)
-                    starts = np.zeros(len(ps), dtype=np.int64)
-                    np.cumsum(seg_lens[:-1], out=starts[1:])
-                    ne = seg_lens > 0
-                    if ne.any():
-                        counts[rows_here[ne]] = np.add.reduceat(h, starts[ne])
-            lo = hi
-        yield pa.RecordBatch.from_pydict(
-            {"src": pa.array(srcs, pa.int64()), "dst": pa.array(dsts, pa.int64()),
-             "cnt": pa.array(counts, pa.int64())}
-        )
-
-    return run
-
-
-def _make_tc_partition_enumerate(hub_bc):
-    """Kernel variant that EMITS each triangle once as (a, b, c):
-    a = src, b = dst, c = the matched common out-neighbor. The materialized
-    output is exactly one row per triangle — the kernel analogue of the
-    declarative ``triangle_enumerate`` without the three-way sort-merge join.
-    """
-
-    def run(batches):
-        import pyarrow as pa
-
-        hub_idx = hub_bc.value if hub_bc is not None else None
-        tbl = _partition_table(batches)
-        if tbl is None:
-            return
-        srcs, dsts, j_offsets, j_values, hub_pos = _partition_views(tbl, hub_idx)
-        offs = vals = None
-        if hub_idx is not None:
-            _ids, offs, vals = hub_idx
-        hub_rows = np.flatnonzero(hub_pos >= 0)
-        bounds = _group_bounds(srcs)
-        sdsts = dsts[np.lexsort((dsts, srcs))]  # see _make_tc_partition
-        out_a, out_b, out_c = [], [], []
-        lo = 0
-        for k in range(len(bounds) - 1):
-            gs, ge = bounds[k], bounds[k + 1]
-            nbrs_u = sdsts[gs:ge]
-            base = j_offsets[gs]
-            jseg = j_values[base:j_offsets[ge]]
-            if jseg.size:
-                idx = np.searchsorted(nbrs_u, jseg)
-                idx[idx == len(nbrs_u)] = len(nbrs_u) - 1
-                hit = nbrs_u[idx] == jseg
-                if hit.any():
-                    pos = np.flatnonzero(hit)
-                    # row attribution: position → owning row via offsets
-                    row = np.searchsorted(j_offsets[gs:ge + 1], base + pos, side="right") - 1 + gs
-                    out_a.append(srcs[row])
-                    out_b.append(dsts[row])
-                    out_c.append(jseg[pos])
-            hi = np.searchsorted(hub_rows, ge, side="left")
-            if hi > lo:
-                rows_here = hub_rows[lo:hi]
-                ps = hub_pos[rows_here]
-                segs = [vals[offs[p]:offs[p + 1]] for p in ps]
-                hseg = np.concatenate(segs) if len(segs) > 1 else segs[0]
-                if hseg.size:
-                    idx = np.searchsorted(nbrs_u, hseg)
-                    idx[idx == len(nbrs_u)] = len(nbrs_u) - 1
-                    hit = nbrs_u[idx] == hseg
-                    if hit.any():
-                        pos = np.flatnonzero(hit)
-                        seg_lens = (offs[ps + 1] - offs[ps]).astype(np.int64)
-                        seg_starts = np.zeros(len(ps) + 1, dtype=np.int64)
-                        np.cumsum(seg_lens, out=seg_starts[1:])
-                        row = rows_here[
-                            np.searchsorted(seg_starts, pos, side="right") - 1
-                        ]
-                        out_a.append(srcs[row])
-                        out_b.append(dsts[row])
-                        out_c.append(hseg[pos])
-            lo = hi
-        if out_a:
-            yield pa.RecordBatch.from_pydict(
-                {
-                    "a": pa.array(np.concatenate(out_a), pa.int64()),
-                    "b": pa.array(np.concatenate(out_b), pa.int64()),
-                    "c": pa.array(np.concatenate(out_c), pa.int64()),
-                }
+    ``hit[i]`` says seg[i] ∈ N⁺(u), i.e. closes a triangle. ``owner(pos)``
+    maps hit positions to the rows whose lists they came from; it is lazy,
+    so counting never pays for it (building the closure costs ~0.1 µs per
+    segment, 0.3% of a count pass at R-MAT scale 14). Nothing is gathered
+    per row, so peak memory stays O(rows) plus one group's broadcast volume
+    (≤ outdeg(u)·max list length), immune to wedge skew."""
+    srcs, dsts, j_offsets, j_values, hub_pos = views
+    if hub_idx is not None:
+        _ids, offs, vals = hub_idx
+    hub_rows = np.flatnonzero(hub_pos >= 0)
+    # src group boundaries [0, ..., n] of the sorted src column
+    bounds = [0, *(np.flatnonzero(srcs[1:] != srcs[:-1]) + 1).tolist(), len(srcs)]
+    # one stable partition-wide sort replaces a np.sort per group: group
+    # boundaries are unchanged (srcs is the major key), so each group's
+    # sorted neighbor set is a zero-copy VIEW of sdsts
+    sdsts = dsts[np.lexsort((dsts, srcs))]
+    lo = 0
+    for gs, ge in zip(bounds[:-1], bounds[1:]):
+        nbrs_u = sdsts[gs:ge]
+        base = j_offsets[gs]
+        seg = j_values[base:j_offsets[ge]]
+        if seg.size:
+            yield seg, _hit(nbrs_u, seg), lambda pos, gs=gs, ge=ge, base=base: (
+                gs - 1 + np.searchsorted(j_offsets[gs:ge + 1], base + pos, side="right")
             )
+        hi = int(np.searchsorted(hub_rows, ge))
+        if hi > lo:
+            rows = hub_rows[lo:hi]
+            ps = hub_pos[rows]
+            segs = [vals[offs[p]:offs[p + 1]] for p in ps]
+            seg = np.concatenate(segs) if len(segs) > 1 else segs[0]
+            if seg.size:
+                yield seg, _hit(nbrs_u, seg), lambda pos, rows=rows, ps=ps: rows[
+                    np.searchsorted(np.cumsum(offs[ps + 1] - offs[ps]), pos, side="right")
+                ]
+            lo = hi
 
-    return run
+
+def _cat(parts):
+    return np.concatenate(parts) if parts else np.empty(0, dtype=np.int64)
 
 
-def _make_tc_partition_support_partial(hub_bc):
-    """Kernel variant emitting per-partition PARTIAL per-edge support:
-    every triangle (a, b, c) found here contributes +1 to its three edges
-    (a,b), (a,c), (b,c) — pre-aggregated inside the partition with one
-    numpy lexsort+run-length pass, so the downstream groupBy-sum moves one
-    row per partition-distinct edge instead of three rows per triangle
-    (the map-side combine the Catalyst explode+count could not do across
-    the Arrow boundary). Pairs stay in rank order = the DODG's oriented
-    rows; edges in no triangle are absent (support 0)."""
+def _count_reducer(views, hub_idx):
+    """One partial row per partition: ``(tri_cnt, probes)``; probes = the
+    intersection candidates binary-searched (Σ |N⁺(dst)| over the
+    partition's edges — the instrumented work counter the reference reports
+    as probes/MP-sec, `2017-karypis-hepc-tc/ptc.c:282-397`, `main.c:49-51`)."""
+    hits = probes = 0
+    for seg, hit, _ in _segments(views, hub_idx):
+        hits += int(np.count_nonzero(hit))
+        probes += seg.size
+    return {"tri_cnt": [hits], "probes": [probes]}
+
+
+def _per_edge_reducer(views, hub_idx):
+    """``(src, dst, cnt)`` for every row: |N⁺(src) ∩ N⁺(dst)|."""
+    rows = [owner(np.flatnonzero(hit)) for _, hit, owner in _segments(views, hub_idx)]
+    srcs, dsts = views[0], views[1]
+    return {"src": srcs, "dst": dsts, "cnt": np.bincount(_cat(rows), minlength=len(srcs))}
+
+
+def _enumerate_reducer(views, hub_idx):
+    """Each triangle once as ``(a, b, c)`` in rank order: a = src, b = dst,
+    c = the matched common out-neighbor."""
+    srcs, dsts = views[0], views[1]
+    a, b, c = [], [], []
+    for seg, hit, owner in _segments(views, hub_idx):
+        pos = np.flatnonzero(hit)
+        if pos.size:
+            row = owner(pos)
+            a.append(srcs[row])
+            b.append(dsts[row])
+            c.append(seg[pos])
+    return {"a": _cat(a), "b": _cat(b), "c": _cat(c)}
+
+
+def _support_reducer(views, hub_idx):
+    """Partial per-edge support: every triangle (a, b, c) found here adds 1
+    to (a,b), (a,c), (b,c), run-length encoded inside the partition, so the
+    downstream groupBy-sum moves one row per partition-distinct edge instead
+    of three rows per triangle (the map-side combine a Catalyst explode
+    cannot do across the Arrow boundary). Pairs stay in rank order = the
+    DODG's oriented rows; edges in no triangle are absent (support 0)."""
+    t = _enumerate_reducer(views, hub_idx)
+    xs = np.concatenate((t["a"], t["a"], t["b"]))
+    ys = np.concatenate((t["b"], t["c"], t["c"]))
+    order = np.lexsort((ys, xs))
+    xs, ys = xs[order], ys[order]
+    new = np.ones(len(xs), dtype=bool)
+    new[1:] = (xs[1:] != xs[:-1]) | (ys[1:] != ys[:-1])
+    starts = np.flatnonzero(new)
+    return {"src": xs[starts], "dst": ys[starts], "cnt": np.diff(np.append(starts, len(xs)))}
+
+
+def _apply(laid_out: DataFrame, hub_bc, reducer, schema: str) -> DataFrame:
+    """Run ``reducer`` over every whole partition of a kernel layout
+    (mapInArrow); ``schema`` names the reducer's long columns in order."""
 
     def run(batches):
         import pyarrow as pa
 
-        enum = _make_tc_partition_enumerate(hub_bc)
-        pairs_x, pairs_y = [], []
-        for rb in enum(batches):
-            a = rb.column("a").to_numpy(zero_copy_only=False)
-            b = rb.column("b").to_numpy(zero_copy_only=False)
-            c = rb.column("c").to_numpy(zero_copy_only=False)
-            pairs_x.append(np.concatenate((a, a, b)))
-            pairs_y.append(np.concatenate((b, c, c)))
-        if not pairs_x:
-            return
-        xs = np.concatenate(pairs_x)
-        ys = np.concatenate(pairs_y)
-        order = np.lexsort((ys, xs))
-        xs, ys = xs[order], ys[order]
-        new = np.empty(len(xs), dtype=bool)
-        new[0] = True
-        new[1:] = (xs[1:] != xs[:-1]) | (ys[1:] != ys[:-1])
-        starts = np.flatnonzero(new)
-        cnts = np.diff(np.append(starts, len(xs)))
+        hub_idx = hub_bc.value if hub_bc is not None else None
+        cols = reducer(_partition_views(batches, hub_idx), hub_idx)
         yield pa.RecordBatch.from_pydict(
-            {
-                "src": pa.array(xs[starts], pa.int64()),
-                "dst": pa.array(ys[starts], pa.int64()),
-                "cnt": pa.array(cnts.astype(np.int64), pa.int64()),
-            }
+            {k: pa.array(v, pa.int64()) for k, v in cols.items()}
         )
 
-    return run
+    return laid_out.mapInArrow(run, schema=schema)
+
+
+def _count_from_layout(laid_out: DataFrame, hub_bc, observation=None) -> DataFrame:
+    """Global count over a built layout: the kernel's per-partition partials
+    and one sum. ``observation`` (a ``pyspark.sql.Observation``) reads the
+    probe and hit totals off the same job."""
+    partials = _apply(laid_out, hub_bc, _count_reducer, "tri_cnt long, probes long")
+    if observation is not None:
+        partials = partials.observe(
+            observation,
+            F.sum("probes").alias("probes"),
+            F.sum("tri_cnt").alias("hits"),
+        )
+    # coalesce: an empty graph (zero partitions after AQE) must count 0,
+    # not NULL — the incremental-delta path feeds empty batches here
+    return partials.agg(
+        F.coalesce(F.sum("tri_cnt"), F.lit(0)).cast("long").alias("triangles")
+    )
+
+
+def _support_from_layout(laid_out: DataFrame, hub_bc) -> DataFrame:
+    """``(src, dst, support)`` over a built layout, edges in ≥ 1 triangle
+    only: the kernel's partial support and one groupBy-sum."""
+    partials = _apply(laid_out, hub_bc, _support_reducer, "src long, dst long, cnt long")
+    return partials.groupBy("src", "dst").agg(F.sum("cnt").cast("long").alias("support"))
+
+
+def _attach_support(edges_uv: DataFrame, counts: DataFrame) -> DataFrame:
+    """Oriented support counts → ``(u, v, support)`` on every canonical
+    (u < v by id) edge, support 0 kept. Corners are in RANK order (deg, id),
+    so each pair is canonicalized by id before the join."""
+    support = counts.select(
+        F.least("src", "dst").alias("u"),
+        F.greatest("src", "dst").alias("v"),
+        "support",
+    )
+    return edges_uv.join(support, ["u", "v"], "left").select(
+        "u", "v", F.coalesce("support", F.lit(0)).cast("long").alias("support")
+    )
 
 
 def triangle_support_counts_oriented(
@@ -569,25 +434,19 @@ def triangle_support_counts_oriented(
     hub_k: int | None = None,
     n_rows: int | None = None,
 ) -> DataFrame:
-    """Per-edge triangle support over an already-oriented edge table, WITHOUT
-    zero-support rows: ``(src, dst, support)`` keyed on the oriented rows,
-    only for edges in ≥ 1 triangle. One kernel pass with in-partition
-    partial aggregation (``_make_tc_partition_support_partial``) + one
-    groupBy-sum — no 3-per-triangle explode, no join back to the edge
-    table. The k-truss peel (k ≥ 3) filters ``support >= k-2 >= 1``, so the
-    absent zero rows are exactly the rows the filter would drop.
+    """Per-edge triangle support over an already-oriented acyclic edge table
+    ``(src, dst)`` (any orientation induced by a fixed total vertex order —
+    ``orient_dodg``'s output or any subgraph of it — enumerates each triangle
+    exactly once, so support is exact), WITHOUT zero-support rows:
+    ``(src, dst, support)`` keyed on the oriented rows, only for edges in
+    ≥ 1 triangle. One kernel pass with in-partition
+    partial aggregation (``_support_reducer``) + one groupBy-sum — no
+    3-per-triangle explode, no join back to the edge table. The k-truss peel
+    (k ≥ 3) filters ``support >= k-2 >= 1``, so the absent zero rows are
+    exactly the rows the filter would drop.
     ``n_rows``: the caller's known row count of ``d`` (skips the layout's
     budget-probe count job — the peel loop already counts every round)."""
-    adj = adjacency(d, num_partitions).localCheckpoint(eager=False)
-    laid_out, hub_bc = _layout_from_dodg(d, adj, num_partitions, hub_k,
-                                         n_rows=n_rows)
-    partials = laid_out.mapInArrow(
-        _make_tc_partition_support_partial(hub_bc),
-        schema="src long, dst long, cnt long",
-    )
-    return partials.groupBy("src", "dst").agg(
-        F.sum("cnt").cast("long").alias("support")
-    )
+    return _support_from_layout(*_layout_from_dodg(d, num_partitions, hub_k, n_rows))
 
 
 def triangle_enumerate_kernel(
@@ -607,90 +466,89 @@ def triangle_enumerate_from_dodg(
     """`triangle_enumerate_kernel` over an already-materialized DODG —
     callers that also join against the DODG afterwards (e.g. the 4-clique
     extension in `operators/motifs.py`) build it once and share it."""
-    adj = adjacency(d, num_partitions).localCheckpoint(eager=False)
-    laid_out, hub_bc = _layout_from_dodg(d, adj, num_partitions, hub_k)
-    return laid_out.mapInArrow(
-        _make_tc_partition_enumerate(hub_bc), schema="a long, b long, c long"
-    )
+    laid_out, hub_bc = _layout_from_dodg(d, num_partitions, hub_k)
+    return _apply(laid_out, hub_bc, _enumerate_reducer, "a long, b long, c long")
 
 
-def _edges_with_dst_adjacency(
-    edges: DataFrame, num_partitions: int | None, hub_k: int | None = None
-):
-    """DODG edges joined with the adjacency list of their *destination*,
-    co-partitioned + sorted by src for the partition kernel, with the hub
-    path: the top-``hub_k`` destinations by DODG in-degree are EXCLUDED from
-    the join and their (short — high rank ⇒ low out-degree) adjacency lists
-    broadcast instead.
+def _layout(d: DataFrame, adj, flat_pdf, hubs, num_partitions: int | None):
+    """The kernel layout as one function of the broadcast set.
 
-    Rationale: the join replicates N⁺(dst) once per in-edge of dst, i.e.
-    Σ indeg·outdeg = the wedge count — the dominant data volume on power-law
-    graphs, concentrated on high-in-degree hubs. Broadcasting those lists is
-    the re-expression of the reference's dense-hub-range bitmap/packed-words
-    strategy (J2/J3, `triangle_counting.h:9,11-34`): pay O(hub lists) once per
-    executor instead of once per edge.
+    ``flat_pdf`` is the broadcast flat CSR (src, nbr) (None: nothing is
+    broadcast); ``adj`` the adjacency table whose lists are JOINED onto the
+    rows of every destination outside the broadcast set (None: every
+    destination is broadcast, no join at all); ``hubs`` the excluded (= hub)
+    destinations, anti-joined out of ``adj`` (None: exclude nothing).
 
-    Left join keeps sink vertices (empty N⁺(dst)) — they contribute 0. The
-    final repartition(src) + sortWithinPartitions(src) makes every src group
-    contiguous — the DataFrame analogue of the reference's CSR row layout
-    (`util/graph.h:11-12`).
+    Full CSR is (d, None, all edges, None), the hub split (d, adj, hub
+    lists, hubs), the plain join (d, adj, None, None). The left join keeps
+    sinks (empty N⁺(dst)) and broadcast destinations as null rows, which the
+    kernel resolves against the broadcast CSR (a miss = empty = 0). The
+    final repartition(src) + sortWithinPartitions(src) makes every src
+    group contiguous — the DataFrame analogue of the reference's CSR row
+    layout (`util/graph.h:11-12`). When ``d``/``adj`` are tables bucketed by
+    dst/src, the join plans with ZERO shuffle exchanges (both scans already
+    satisfy the join distribution) — the SURVEY §4 "bucketed write" layout
+    contract.
 
-    Returns (laid_out_df, hub_broadcast_or_None).
-    """
-    d = orient_dodg(edges).localCheckpoint(eager=False)
-    # adjacency is referenced by the hub-collect job AND the kernel job —
-    # materialize once (lazy localCheckpoint), don't rebuild the collect_list
-    adj = adjacency(d, num_partitions).localCheckpoint(eager=False)
-    return _layout_from_dodg(d, adj, num_partitions, hub_k)
+    Returns (laid_out_df, broadcast_or_None)."""
+    laid = d
+    if adj is not None:
+        adj_dst = adj.select(F.col("src").alias("dst"), F.col("nbrs"))
+        if hubs is not None:
+            adj_dst = adj_dst.join(hubs.hint("broadcast"), "dst", "left_anti")
+        laid = d.join(adj_dst, "dst", "left")
+    if num_partitions is not None:
+        laid = laid.repartition(num_partitions, "src")
+    else:
+        laid = laid.repartition("src")
+    hub_bc = None if flat_pdf is None else _broadcast_hub_csr(d.sparkSession, flat_pdf)
+    return laid.sortWithinPartitions("src"), hub_bc
 
 
 def _layout_from_dodg(
     d: DataFrame,
-    adj: DataFrame,
-    num_partitions: int | None,
+    num_partitions: int | None = None,
     hub_k: int | None = None,
-    full_csr: bool = True,
     n_rows: int | None = None,
+    adj: DataFrame | None = None,
+    full_csr: bool = True,
 ):
-    """Core of the kernel layout, shared by the edge-derived path above and
-    the pre-bucketed-table path (`bucketed_kernel_layout`): hub split + the
-    edges ⋈ dst-adjacency join + the src CSR grouping. When ``d``/``adj`` come
-    from tables bucketed by dst/src, the join plans with ZERO shuffle
-    exchanges (both scans already satisfy the join distribution) — the
-    SURVEY §4 "bucketed write" layout contract.
+    """Choose the broadcast set for the DODG ``d`` and lay it out (``_layout``).
 
-    Full-CSR fast path (round 6): when the WHOLE oriented edge table fits
-    the hub byte budget (``HUB_BUDGET_BYTES`` — the same size guard the hub
-    split already enforces), broadcasting everything strictly dominates the
-    hub split: the adjacency grouping shuffle, the hub-selection
-    aggregation/explode jobs, and the dst-adjacency join all disappear —
-    the layout is the edge table itself (every dst resolved against the
-    broadcast CSR), one repartition+sort from being kernel-ready. Counts
-    and the instrumented probe totals are identical (every edge's
-    |N⁺(dst)| is probed exactly once either way); at web scale the budget
-    fails and the ordinary hub-split path runs unchanged."""
-    hubs = hub_flat = None
+    * Every vertex (full CSR, round 6) when the WHOLE oriented edge table
+      fits the hub byte budget (``HUB_BUDGET_BYTES``) and the measured
+      crossover cap ``FULL_CSR_MAX_ROWS``: broadcasting everything then
+      strictly dominates the hub split — the adjacency grouping shuffle, the
+      hub-selection aggregation jobs and the dst-adjacency join all
+      disappear; the layout is the edge table itself, one repartition+sort
+      from kernel-ready. Counts and probe totals are identical (every edge's
+      |N⁺(dst)| is probed exactly once either way).
+    * Otherwise the hubs ``_select_hub_csr`` picks (J2/J3 analogue): the
+      join replicates N⁺(dst) once per in-edge of dst, Σ indeg·outdeg = the
+      wedge count, concentrated on high-in-degree destinations; their
+      (short — high rank ⇒ low out-degree) lists are broadcast instead, paid
+      once per executor rather than once per edge.
+    * Nothing (plain dst join) at ``hub_k=0`` or past the byte budget.
+
+    ``adj``: a pre-grouped adjacency table (the bucketed path), grouped here
+    from ``d`` otherwise. ``full_csr=False`` skips the full-CSR regime.
+    ``n_rows``: the caller's known row count of ``d`` (skips the count job
+    that checks the full-CSR caps)."""
     if hub_k is None:
         hub_k = HUB_K_DEFAULT
-    if hub_k > 0:
-        budget_rows = max(1, HUB_BUDGET_BYTES // 16)
+    if full_csr and hub_k > 0:
         if n_rows is None:
             n_rows = d.count()
-        if full_csr and n_rows <= min(budget_rows, FULL_CSR_MAX_ROWS):
+        if n_rows <= min(max(1, HUB_BUDGET_BYTES // 16), FULL_CSR_MAX_ROWS):
             flat_pdf = d.toPandas().rename(columns={"dst": "nbr"})
-            # no nbrs column: the kernel resolves every dst via the broadcast
-            # CSR (see _partition_views — shipping an all-null list column
-            # through Arrow costs more than the whole intersection pass)
-            if num_partitions is not None:
-                laid = d.repartition(num_partitions, "src")
-            else:
-                laid = d.repartition("src")
-            return (
-                laid.sortWithinPartitions("src"),
-                _broadcast_hub_csr(d.sparkSession, flat_pdf),
-            )
-        hubs, hub_flat = _select_hub_csr(d, adj, hub_k)
-    return _assemble_layout(d, adj, hubs, hub_flat, num_partitions)
+            return _layout(d, None, flat_pdf, None, num_partitions)
+    if adj is None:
+        # read once, by the layout join (hub selection reads the edge table)
+        adj = adjacency(d, num_partitions)
+    hubs = flat_pdf = None
+    if hub_k > 0:
+        hubs, flat_pdf = _select_hub_csr(d, hub_k)
+    return _layout(d, adj, flat_pdf, hubs, num_partitions)
 
 
 # Hard ceiling for the broadcast flat hub CSR (two int64 columns). The
@@ -708,7 +566,7 @@ import os as _os
 # appendix). On a real cluster this scales with executor memory; here it is
 # env-tunable for the large-graph runs.
 HUB_BUDGET_BYTES = int(_os.environ.get("SPARK_GRAFT_HUB_BUDGET_BYTES", 256 << 20))
-HUB_K_DEFAULT = int(_os.environ.get("SPARK_GRAFT_HUB_K", 65536))
+HUB_K_DEFAULT = 65536
 # Row cap for the full-graph broadcast-CSR fast path (round 6), separate from
 # (and additionally bounded by) the byte budget above. MEASURED crossover vs
 # the hub-split path on R-MAT ef=16, local[32], identical counts:
@@ -719,8 +577,17 @@ HUB_K_DEFAULT = int(_os.environ.get("SPARK_GRAFT_HUB_K", 65536))
 FULL_CSR_MAX_ROWS = int(_os.environ.get("SPARK_GRAFT_FULL_CSR_ROWS", 4_000_000))
 
 
-def _select_hub_csr(d: DataFrame, adj: DataFrame, hub_k: int | None,
-                    budget_bytes: int | None = None):
+def _collect_within_budget(flat: DataFrame):
+    """Collect a flat (src, nbr) CSR to the driver as pandas, or None when it
+    exceeds ``HUB_BUDGET_BYTES``. A LIMIT probe: at most budget + 1 rows
+    ever move, through Arrow as two FLAT int columns (a row-object collect
+    of 65k list rows costs tens of seconds of single-threaded driver work)."""
+    budget_rows = max(1, HUB_BUDGET_BYTES // 16)  # two int64 columns per row
+    pdf = flat.limit(budget_rows + 1).toPandas()
+    return pdf if len(pdf) <= budget_rows else None
+
+
+def _select_hub_csr(d: DataFrame, hub_k: int):
     """Pick the hub set and collect its flat CSR to the driver.
 
     Hub selection by in-degree THRESHOLD, not top-K: orderBy().limit(K)
@@ -733,14 +600,10 @@ def _select_hub_csr(d: DataFrame, adj: DataFrame, hub_k: int | None,
     longs; in practice high in-degree ⇒ high rank ⇒ short out-list: 65k hubs
     ≈ 48 MB at m = 7.7M while absorbing 99.3% of replication).
 
-    Returns (hubs_df (dst: long), flat_pdf (src, nbr) pandas, unsorted) — the
-    flat CSR is collected through Arrow as two FLAT int columns (explode):
-    a row-object collect of 65k list rows costs tens of seconds of
-    single-threaded driver work; this is two zero-copy numpy columns. The
-    collect is a LIMIT probe against the byte budget: if the flat CSR would
-    exceed it, returns (None, None) and the caller runs hub-less.
+    Returns (hubs_df (dst: long), flat_pdf (src, nbr) pandas, unsorted), or
+    (None, None) when the flat CSR would exceed the byte budget and the
+    caller runs hub-less.
     """
-    budget = HUB_BUDGET_BYTES if budget_bytes is None else budget_bytes
     indeg = d.groupBy("dst").agg(F.count(F.lit(1)).alias("indeg"))
     candidates = indeg.where(F.col("indeg") >= 8).localCheckpoint(eager=False)
     n_cand = candidates.count()
@@ -749,17 +612,14 @@ def _select_hub_csr(d: DataFrame, adj: DataFrame, hub_k: int | None,
         thresh = candidates.approxQuantile("indeg", [frac], 0.01)[0]
         candidates = candidates.where(F.col("indeg") >= thresh)
     hubs = candidates.select("dst").localCheckpoint(eager=False)
-    budget_rows = max(1, budget // 16)  # two int64 columns per row
     # the flat CSR is the hub vertices' out-EDGES — read them straight off
     # the edge table instead of exploding the grouped adjacency lists (same
     # rows; _broadcast_hub_csr lexsorts driver-side, so order is free)
-    flat_pdf = (
+    flat_pdf = _collect_within_budget(
         d.join(hubs.withColumnRenamed("dst", "src"), "src")
         .select("src", F.col("dst").alias("nbr"))
-        .limit(budget_rows + 1)
-        .toPandas()
     )
-    if len(flat_pdf) > budget_rows:
+    if flat_pdf is None:
         return None, None
     return hubs, flat_pdf
 
@@ -785,24 +645,6 @@ def _broadcast_hub_csr(spark, flat_pdf):
     return spark.sparkContext.broadcast((ids, offsets, values))
 
 
-def _assemble_layout(d, adj, hubs, hub_flat, num_partitions):
-    """Join + src CSR grouping given an (optional) pre-selected hub set."""
-    spark = d.sparkSession
-    hub_bc = None
-    adj_dst = adj.select(F.col("src").alias("dst"), F.col("nbrs"))
-    if hubs is not None:
-        hub_bc = _broadcast_hub_csr(spark, hub_flat)
-        adj_dst = adj_dst.join(hubs.hint("broadcast"), "dst", "left_anti")
-        # hub dsts now miss the join → nbrs NULL → kernel consults the
-        # broadcast CSR; genuine sinks are in neither → count 0 either way.
-    joined = d.join(adj_dst, "dst", "left")
-    if num_partitions is not None:
-        joined = joined.repartition(num_partitions, "src")
-    else:
-        joined = joined.repartition("src")
-    return joined.sortWithinPartitions("src"), hub_bc
-
-
 def triangle_count_kernel(
     edges: DataFrame,
     num_partitions: int | None = None,
@@ -811,10 +653,9 @@ def triangle_count_kernel(
 ) -> DataFrame:
     """Global exact triangle count via the vectorized intersection kernel.
 
-    Physical plan: DODG → adjacency (one shuffle) → hub split (broadcast of
-    top-in-degree adjacency, J2/J3 analogue) → edges ⋈ non-hub adj on dst
-    (one shuffle, AQE-skew-split) → repartition+sort by src → mapInPandas
-    partial sums → final sum over ≤ num_partitions rows. Mirrors
+    Physical plan: DODG → broadcast-set layout (``_layout_from_dodg``: full
+    CSR, hub split or plain dst join; repartition+sort by src) → per-partition
+    partial sums (mapInArrow) → final sum over ≤ num_partitions rows. Mirrors
     `CountTriBMPAndMergeWithPackDODG` (`triangle_counting.h:36-129`) with
     numpy replacing SIMD intrinsics and map-side partial aggregation replacing
     the OpenMP reduction. Output: one row ``(triangles: long)``.
@@ -824,33 +665,18 @@ def triangle_count_kernel(
     intersection work (not wall-time-derived), mirroring the reference's probe
     counters (`2017-karypis-hepc-tc/main.c:49-51`).
     """
-    laid_out, hub_bc = _edges_with_dst_adjacency(edges, num_partitions, hub_k)
-    partials = laid_out.mapInArrow(
-        _make_tc_partition(hub_bc), schema="tri_cnt long, probes long"
-    )
-    if observation is not None:
-        partials = partials.observe(
-            observation,
-            F.sum("probes").alias("probes"),
-            F.sum("tri_cnt").alias("hits"),
-        )
-    # coalesce: an empty graph (zero partitions after AQE) must count 0,
-    # not NULL — the incremental-delta path feeds empty batches here
-    return partials.agg(
-        F.coalesce(F.sum("tri_cnt"), F.lit(0)).cast("long").alias("triangles")
-    )
+    d = orient_dodg(edges).localCheckpoint(eager=False)
+    return _count_from_layout(*_layout_from_dodg(d, num_partitions, hub_k), observation)
 
 
 def triangle_count_per_directed_edge_kernel(
     edges: DataFrame, num_partitions: int | None = None, hub_k: int | None = None
 ) -> DataFrame:
     """Per-DODG-edge intersection counts ``(src, dst, cnt)`` — the kernel
-    analogue of the reference's per-edge loop body, and the base quantity the
-    per-edge support explode starts from."""
-    laid_out, hub_bc = _edges_with_dst_adjacency(edges, num_partitions, hub_k)
-    return laid_out.mapInArrow(
-        _make_tc_partition_per_edge(hub_bc), schema="src long, dst long, cnt long"
-    )
+    analogue of the reference's per-edge loop body."""
+    d = orient_dodg(edges).localCheckpoint(eager=False)
+    laid_out, hub_bc = _layout_from_dodg(d, num_partitions, hub_k)
+    return _apply(laid_out, hub_bc, _per_edge_reducer, "src long, dst long, cnt long")
 
 
 # ---------------------------------------------------------------------------
@@ -880,17 +706,16 @@ def bucketed_kernel_layout(
     have no adjacency row, so both paths yield the same empty set."""
     d, adj = spark.table(edges_table), spark.table(adj_table)
     if hub_table is not None:
-        budget_rows = max(1, HUB_BUDGET_BYTES // 16)
-        flat_pdf = spark.table(hub_table).limit(budget_rows + 1).toPandas()
-        if len(flat_pdf) <= budget_rows:
+        flat_pdf = _collect_within_budget(spark.table(hub_table))
+        if flat_pdf is not None:
             hubs = spark.table(hub_table).select(F.col("src").alias("dst")).distinct()
-            return _assemble_layout(d, adj, hubs, flat_pdf, None)
+            return _layout(d, adj, flat_pdf, hubs, None)
         # pre-materialized CSR over budget (layout written under a larger
         # budget): fall through to fresh selection, whose own guard applies
     # full_csr=False: the bucketed tables exist precisely so the kernel join
     # is exchange-free on read — collecting the whole edge table would waive
     # the pay-once layout this path demonstrates (and re-collect per query)
-    return _layout_from_dodg(d, adj, None, hub_k, full_csr=False)
+    return _layout_from_dodg(d, None, hub_k, adj=adj, full_csr=False)
 
 
 def triangle_count_kernel_bucketed(
@@ -904,57 +729,22 @@ def triangle_count_kernel_bucketed(
     """`triangle_count_kernel` over the pre-bucketed layout: identical result,
     but the DODG build + adjacency grouping shuffles are already on disk and
     the dst join needs no exchange. Output: one row ``(triangles: long)``."""
-    laid_out, hub_bc = bucketed_kernel_layout(
-        spark, edges_table, adj_table, hub_k, hub_table
-    )
-    partials = laid_out.mapInArrow(
-        _make_tc_partition(hub_bc), schema="tri_cnt long, probes long"
-    )
-    if observation is not None:
-        partials = partials.observe(
-            observation,
-            F.sum("probes").alias("probes"),
-            F.sum("tri_cnt").alias("hits"),
-        )
-    # coalesce: an empty graph (zero partitions after AQE) must count 0,
-    # not NULL — the incremental-delta path feeds empty batches here
-    return partials.agg(
-        F.coalesce(F.sum("tri_cnt"), F.lit(0)).cast("long").alias("triangles")
-    )
+    layout = bucketed_kernel_layout(spark, edges_table, adj_table, hub_k, hub_table)
+    return _count_from_layout(*layout, observation)
 
 
 def triangle_per_edge_support_bucketed(
     spark, edges_table: str, adj_table: str, hub_k: int | None = None,
     hub_table: str | None = None,
 ) -> DataFrame:
-    """`triangle_per_edge_support` over the pre-bucketed layout (same explode
-    + groupBy on kernel-enumerated corners; the canonical (u<v) edge set is
-    recovered from the DODG table, which holds each edge exactly once)."""
-    laid_out, hub_bc = bucketed_kernel_layout(
-        spark, edges_table, adj_table, hub_k, hub_table
-    )
-    tris = laid_out.mapInArrow(
-        _make_tc_partition_enumerate(hub_bc), schema="a long, b long, c long"
-    )
-
-    def pair(x, y):
-        return F.struct(
-            F.least(F.col(x), F.col(y)).alias("u"),
-            F.greatest(F.col(x), F.col(y)).alias("v"),
-        )
-
-    incidences = tris.select(
-        F.explode(F.array(pair("a", "b"), pair("a", "c"), pair("b", "c"))).alias("e")
-    ).select(F.col("e.u").alias("u"), F.col("e.v").alias("v"))
-    support = incidences.groupBy("u", "v").agg(
-        F.count(F.lit(1)).cast("long").alias("support")
-    )
+    """`triangle_per_edge_support` over the pre-bucketed layout (the same
+    partial-support kernel; the canonical (u<v) edge set is recovered from
+    the DODG table, which holds each edge exactly once)."""
+    layout = bucketed_kernel_layout(spark, edges_table, adj_table, hub_k, hub_table)
     edges = spark.table(edges_table).select(
         F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
     )
-    return edges.join(support, ["u", "v"], "left").select(
-        "u", "v", F.coalesce("support", F.lit(0)).cast("long").alias("support")
-    )
+    return _attach_support(edges, _support_from_layout(*layout))
 
 
 # ---------------------------------------------------------------------------

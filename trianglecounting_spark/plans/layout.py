@@ -83,7 +83,7 @@ def write_graph_layout(
         .option("path", os.path.join(base_dir, a_tbl))
         .saveAsTable(a_tbl)
     )
-    _hubs, flat_pdf = _select_hub_csr(d, adj, hub_k)
+    _hubs, flat_pdf = _select_hub_csr(d, hub_k)
     # over-budget hub CSR (triangles.HUB_BUDGET_BYTES) → write an empty table:
     # steady-state readers then run hub-less, the same fallback the per-query
     # path takes
