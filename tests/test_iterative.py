@@ -686,6 +686,13 @@ def test_mis_independence_maximality_and_greedy_equality(spark):
         for r in maximal_independent_set(edges.repartition(7)).collect()
     }
     assert again == got
+    # the shuffle-join fallback (undecided set over the broadcast budget)
+    # picks the same winners
+    shuffled = {
+        r.v: r.in_mis
+        for r in maximal_independent_set(edges, broadcast_rows=0).collect()
+    }
+    assert shuffled == got
 
 
 def test_mis_matches_unrolled_sql_oracle(spark):

@@ -1,12 +1,15 @@
-"""Regime forcing: scc, connected_components and coreness hold |V|-row state
-on the driver when |V| fits ``BROADCAST_ROWS`` and run DataFrame shuffle
-rounds above it. No test graph is big enough to cross the budget, so each
-case runs at the default budget, with ``broadcast_rows=0``, and at the
-default budget with the grouped adjacency split into many id-range
-partitions (so partition-local fixpoints meet remote neighbors); all runs
-must agree exactly (and with the closed form)."""
+"""Regime forcing: scc, connected_components, coreness and pagerank hold
+|V|-row state on the driver when |V| fits ``BROADCAST_ROWS`` and run
+DataFrame shuffle rounds above it. No test graph is big enough to cross the
+budget, so each case runs at the default budget, with ``broadcast_rows=0``,
+and at the default budget with the grouped adjacency split into many
+id-range partitions (so partition-local fixpoints meet remote neighbors);
+all runs must agree exactly (and with the closed form) — pagerank's
+float scores to 1e-12 relative, since summation order differs."""
 
 from __future__ import annotations
+
+import math
 
 import pytest
 from pyspark.sql import functions as F
@@ -14,6 +17,7 @@ from pyspark.sql import functions as F
 from trianglecounting_spark.operators.components import connected_components
 from trianglecounting_spark.operators.kcore import coreness
 from trianglecounting_spark.operators.normalize import normalize_edges
+from trianglecounting_spark.operators.pagerank import pagerank
 from trianglecounting_spark.operators.scc import scc
 from trianglecounting_spark.plans import vertex_state
 from trianglecounting_spark.plans.cache import persistent_rdd_ids, release_all_cached
@@ -25,15 +29,15 @@ REGIMES = (BROADCAST_ROWS, 0)  # driver-held state, shuffle rounds
 RING = [(i, (i + 1) % 60) for i in range(60)]
 
 
-def _both(run):
+def _both(run, same=lambda a, b: a == b, per_part=16):
     """run(broadcast_rows) -> result; asserts both regimes agree, the
     driver-held one also with its grouped adjacency split into many
-    partitions (16 list entries each)."""
+    partitions (``per_part`` list entries each)."""
     driver, shuffle = (run(b) for b in REGIMES)
     with pytest.MonkeyPatch.context() as mp:
-        mp.setattr(vertex_state, "ENTRIES_PER_PARTITION", 16)
+        mp.setattr(vertex_state, "ENTRIES_PER_PARTITION", per_part)
         split = run(BROADCAST_ROWS)
-    assert driver == split == shuffle
+    assert same(driver, split) and same(driver, shuffle)
     return driver
 
 
@@ -158,3 +162,64 @@ def test_coreness_regimes_agree(spark):
         .groupBy("v").agg(F.count(F.lit(1)).alias("d")).collect()
     }
     assert all(full[v] <= capped[v] <= deg[v] for v in deg)
+
+
+def _close(a, b):
+    return a.keys() == b.keys() and all(
+        math.isclose(a[v], b[v], rel_tol=1e-12) for v in a
+    )
+
+
+def _ranks(e, **kw):
+    return {r.v: r.score for r in pagerank(e, **kw).collect()}
+
+
+def test_pagerank_regimes_agree(spark):
+    def ranks(e, per_part=16):
+        return _both(
+            lambda b: _ranks(e, iterations=10, broadcast_rows=b), _close, per_part
+        )
+
+    tcb = ranks(g.two_cliques_bridge(spark))
+    assert len(tcb) == 12 and math.isclose(sum(tcb.values()), 1.0, rel_tol=1e-12)
+    # ~3.5k list entries: four partitions, not the ~220 tasks per pass that
+    # 16 entries each would cost
+    rmat = ranks(normalize_edges(g.rmat_graph(spark, scale=9, edge_factor=4)), 1024)
+    assert math.isclose(sum(rmat.values()), 1.0, rel_tol=1e-12)
+    assert ranks(spark.createDataFrame([], "u long, v long")) == {}
+
+
+def test_pagerank_tol_mode_regimes_agree(spark):
+    """In every regime a huge tol stops after the first step, a vanishing
+    one never binds, and tol=1e-8 stops at the same step."""
+    e = g.two_cliques_bridge(spark)
+
+    def check(b):
+        assert _close(_ranks(e, iterations=6, tol=1e9, broadcast_rows=b),
+                      _ranks(e, iterations=1, broadcast_rows=b))
+        assert _close(_ranks(e, iterations=4, tol=1e-300, broadcast_rows=b),
+                      _ranks(e, iterations=4, broadcast_rows=b))
+        return _ranks(e, iterations=60, tol=1e-8, broadcast_rows=b)
+
+    _both(check, _close)
+
+
+def test_pagerank_passes_per_regime(spark, monkeypatch):
+    """One grouped partition owns every vertex, so one pass runs all the
+    steps; a split adjacency runs one pass per step."""
+    passes = []
+    run_pass = vertex_state.VertexState.run_pass
+
+    def counted(self, *a, **kw):
+        passes.append(self.n_part)
+        return run_pass(self, *a, **kw)
+
+    monkeypatch.setattr(vertex_state.VertexState, "run_pass", counted)
+    e = g.two_cliques_bridge(spark)
+    whole = _ranks(e, iterations=7)
+    assert passes == [1]
+    passes.clear()
+    monkeypatch.setattr(vertex_state, "ENTRIES_PER_PARTITION", 16)
+    split = _ranks(e, iterations=7)
+    assert len(passes) == 7 and passes[0] > 1
+    assert _close(whole, split)

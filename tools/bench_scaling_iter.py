@@ -2,8 +2,13 @@
 local[N] vs local[4N] — the companion to tools/bench_scaling.py (which
 measures the triangle kernel). The north_rule's ≥0.8 efficiency criterion
 is about the ENGINE's jobs generally; the kernel is embarrassingly parallel
-by construction, while the iterative jobs are shuffle-round-trip bound, so
-they are the harder case worth evidencing separately.
+by construction, while the iterative jobs are the harder case worth
+evidencing separately. Under the broadcast budget both run on driver-held
+vertex state (``plans/vertex_state``): one ``mapInArrow`` pass per PageRank
+step (every step in one pass when the graph fits one grouped partition) or
+per CC round, over one id-range partition per ~1 M adjacency entries — so
+they are bound by Python task latency and can use at most as many cores as
+there are grouped partitions, not by shuffle round trips.
 
 Protocol matches bench_scaling.py: separate subprocess JVMs per level,
 IDENTICAL shuffle partitioning at both levels (partitions sized to data,

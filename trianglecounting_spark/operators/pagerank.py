@@ -1,37 +1,89 @@
-"""PageRank over the undirected link graph — driver-side loop of join-agg steps.
+"""PageRank over the undirected link graph and the other link-analysis
+scores (directed, personalized, weighted, TrustRank, HITS, SALSA,
+eigenvector, Katz), each with its unrolled-SQL oracle.
 
 Absent from the reference (strictly a TC engine); mandated by the north_star.
-Idiomatic Spark: each iteration is one shuffle join (ranks ⋈ edges on src) and
-one partial+final aggregation (contributions by dst). No Python touches data.
+
+``pagerank`` runs in two regimes, chosen from |V| against
+``tuning.BROADCAST_ROWS`` like ``connected_components``:
+
+  * |V| ≤ budget and no ``checkpointer`` — driver-held ranks
+    (``plans/vertex_state``): the symmetric adjacency is grouped once into
+    ``(v, nbrs)`` rows and cached, the degrees ride the id collect, and the
+    float64 rank array lives on the driver. A pass is ONE ``mapInArrow``
+    that computes ``base + d·Σ rank(u)/deg(u)`` per vertex (a gather and a
+    segment sum) plus a collect of the new ranks. When the grouped
+    adjacency is one partition (up to ``ENTRIES_PER_PARTITION`` list
+    entries) that partition owns every vertex, so ONE pass runs every step
+    and stops at the first step whose L1 delta is under ``tol``; otherwise
+    a pass is one synchronous step and the driver checks ``tol``. Bound:
+    the broadcast state and the per-pass collect are O(|V|). Measured on a
+    4-vCPU host (Spark local[2]), 10 steps: on the benchmark's co-part
+    graph (one grouped partition) a call ran 9 Spark jobs in 1.0 s where
+    the shuffle loop ran 39 in 2.8 s; on R-MAT scale 16 ef16 (909k edges,
+    two grouped partitions, ten passes) 5.1-6.3 s against 8.2-9.4 s.
+  * otherwise (|V| over the budget, or a ``checkpointer``, whose snapshots
+    are the resume point) — the shuffle loop: each iteration is one shuffle
+    join (ranks ⋈ edges on src) and one partial+final aggregation
+    (contributions by dst), all Column expressions.
+      - ranks and degrees are |V|-row tables joined by shuffle. (An explicit
+        F.broadcast(ranks) for small |V| was A/B-measured in round 4 at
+        sf0.1, 10 iterations, 32 cores: 12.4–13.9 s both ways — no win; the
+        per-iteration cost is the contribution aggregation, which
+        broadcasting cannot remove.)
+      - the edge side is pre-partitioned by src and persisted once, so every
+        iteration's rank join reuses that hash partitioning and only the
+        rank table shuffles.
+      - lineage grows linearly with iterations → a tracked checkpoint every
+        5 steps (every step in ``tol`` mode), or the checkpointer's snapshot.
+
+The other functions here run their DataFrame loops at any size.
 
 Determinism/parity: scores are doubles; the oracle comparison rounds to 1e-6
-(north_rule: allclose 1e-6). The iteration count is an explicit parameter so
-the DuckDB unrolled-SQL oracle computes the *same* function, not "until
-converged" (which is not a deterministic query).
-
-Scale notes (10^10-vertex web graph):
-  * ranks and degrees are |V|-row tables — shuffle joins, never broadcast.
-    (An explicit F.broadcast(ranks) for small |V| was A/B-measured in
-    round 4 at sf0.1, 10 iterations, 32 cores: 12.4–13.9 s both ways —
-    no win; AQE already plans the tiny rank side efficiently and the
-    per-iteration cost is the contribution aggregation, which
-    broadcasting cannot remove.)
-  * edges are re-used every iteration: persist (or read from the bucketed
-    Iceberg table) so the scan cost is paid once; the rank join then reuses
-    the same hash partitioning on src every iteration.
-  * lineage grows linearly with iterations → checkpoint every `ckpt_every`
-    (parquet/Iceberg snapshot, also the resume point).
+(north_rule: allclose 1e-6). The two regimes sum in different orders, so
+their scores agree to ~1e-15 relative, not bit for bit. The iteration count
+is an explicit parameter so the DuckDB unrolled-SQL oracle computes the
+*same* function, not "until converged" (which is not a deterministic query).
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.storagelevel import StorageLevel
 
 from trianglecounting_spark.operators.normalize import undirect
 from trianglecounting_spark.plans.cache import release_ids, tracked_checkpoint
 from trianglecounting_spark.plans.checkpoint import IterationCheckpointer
-from trianglecounting_spark.plans.tuning import iteration_partitions, scoped_shuffle_partitions
+from trianglecounting_spark.plans.tuning import (
+    BROADCAST_ROWS,
+    iteration_partitions,
+    scoped_shuffle_partitions,
+)
+from trianglecounting_spark.plans.vertex_state import VertexState, fits_driver
+
+
+def _rank_steps(steps: int, damping: float, tol: float | None):
+    """Pass body: ``steps`` synchronous PageRank steps for the partition's
+    vertices — one when other partitions own neighbors (their ranks come
+    from the broadcast), all of them when this partition owns every vertex,
+    stopping early at the first L1 delta under ``tol``."""
+
+    def step(part, st):
+        deg = st["deg"]
+        own_deg, all_c = deg[part.own], st["rank"] / deg
+        base = (1.0 - damping) / len(deg)
+        r = r0 = st["rank"][part.own]
+        for _ in range(steps):
+            c = part.gather("nbrs", r / own_deg, all_c)
+            new = base + damping * part.seg_sum("nbrs", c)
+            delta, r = np.abs(new - r).sum(), new
+            if tol is not None and delta < tol:
+                break
+        return part.changes(r != r0, r, np.zeros(part.n, dtype=bool))
+
+    return step
 
 
 def pagerank(
@@ -40,6 +92,7 @@ def pagerank(
     damping: float = 0.85,
     checkpointer: IterationCheckpointer | None = None,
     tol: float | None = None,
+    broadcast_rows: int = BROADCAST_ROWS,
 ) -> DataFrame:
     """`iterations` synchronous PageRank steps on the undirected simple graph.
 
@@ -52,10 +105,35 @@ def pagerank(
 
     ``tol``: optional convergence mode (the north_star's "at convergence"
     contract) — stop once the L1 delta Σ|rank_k − rank_{k−1}| < tol, with
-    ``iterations`` as the cap. Costs one extra join-aggregate action per step,
-    so the default (None) keeps the fixed-iteration oracle-matched behavior.
+    ``iterations`` as the cap. In the shuffle regime it costs one extra
+    join-aggregate action per step, so the default (None) keeps the
+    fixed-iteration oracle-matched behavior.
+
+    ``broadcast_rows``: |V| at or under it (and no ``checkpointer``) runs
+    the driver-held regime, otherwise the shuffle loop (module docstring).
     """
     spark = edges.sparkSession
+    if checkpointer is None:
+        driver, n_rows = fits_driver(edges, ("u", "v"), broadcast_rows)
+        if driver:
+            entries = undirect(edges).select(
+                F.col("src").cast("long").alias("v"), F.col("dst").cast("long").alias("nbrs")
+            )
+            with VertexState(entries, ("nbrs",), 2 * n_rows, attrs={"deg": F.size("nbrs")}) as vs:
+                whole = vs.n_part == 1  # one pass runs every step and the tol stop
+                step = _rank_steps(iterations if whole else 1, damping, tol)
+                deg = vs.attrs["deg"].astype(np.float64)
+                rank = np.full(vs.n, 1.0 / max(vs.n, 1))
+                for _ in range(1 if whole else iterations):
+                    i, x, _ = vs.run_pass(step, {"rank": rank, "deg": deg}, "rank")
+                    new = rank.copy()
+                    new[i] = x
+                    delta, rank = np.abs(new - rank).sum(), new
+                    if tol is not None and delta < tol:
+                        break
+                out = pd.DataFrame({"v": vs.ids, "score": rank})
+            return spark.createDataFrame(out, "v long, score double")
+
     sym = undirect(edges)
     out_deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     n = out_deg.count()

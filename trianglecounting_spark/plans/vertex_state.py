@@ -1,11 +1,11 @@
 """Driver-held vertex state with partition-local fixpoints.
 
 The iterative vertex programs whose state is one value per vertex (SCC's
-trim and min-color floods, CC's min-label flood, coreness' h-index) keep
-that state on the DRIVER as numpy arrays whenever |V| fits the broadcast
-budget (``tuning.BROADCAST_ROWS``) — the flat per-vertex arrays the
-reference engines iterate over, with one Spark job per pass instead of one
-checkpointed DataFrame plan per round:
+trim and min-color floods, CC's min-label flood, coreness' h-index,
+PageRank's ranks) keep that state on the DRIVER as numpy arrays whenever
+|V| fits the broadcast budget (``tuning.BROADCAST_ROWS``) — the flat
+per-vertex arrays the reference engines iterate over, with one Spark job
+per pass instead of one checkpointed DataFrame plan per round:
 
   * the adjacency is grouped ONCE into ``(v, <list columns>)`` rows,
     range-partitioned by vertex id, and cached by the same job that
@@ -26,7 +26,12 @@ checkpointed DataFrame plan per round:
     synchronous one, so answers are partitioning-invariant. A pass whose
     changed rows have no neighbor in another partition leaves every
     partition at its fixpoint, so it ends the loop without a confirming
-    pass.
+    pass;
+  * a fixed-step program (PageRank: ``iterations`` synchronous steps, not
+    a monotone update, so chaotic iteration would change its answer) runs
+    ONE synchronous step per pass from the broadcast state — or every step
+    in one pass when one partition owns every vertex (``n_part == 1``),
+    since no step then reads a value another partition holds.
 
 Passes: a pass moves a flood at least one hop, like a synchronous round,
 and a whole path segment at once where the segment lies in one partition.
@@ -207,19 +212,21 @@ class VertexState:
     order on a crawl, an id-ordered ring) stays inside a partition, where
     the local fixpoint crosses it without a pass. ``attrs``: extra
     per-vertex columns over the grouped row, collected with the ids
-    (aligned to the sorted ids in ``self.attrs``)."""
+    (aligned to the sorted ids in ``self.attrs``). ``n_part``: the number of
+    id-range partitions; when it is 1, a pass's one partition owns every
+    vertex."""
 
     def __init__(
         self, entries: DataFrame, lists: tuple[str, ...], n_entries: int,
         attrs: dict[str, Column] | None = None,
     ):
         self.spark = entries.sparkSession
-        n_part = max(1, -(-n_entries // ENTRIES_PER_PARTITION))
+        self.n_part = max(1, -(-n_entries // ENTRIES_PER_PARTITION))
         # SQL cache, not a checkpoint: the id collect below is the action
         # that materializes it, so caching costs no job of its own (range
         # partitioning adds one sampling job when n_part > 1)
         self._grouped = (
-            entries.repartitionByRange(n_part, "v")
+            entries.repartitionByRange(self.n_part, "v")
             .groupBy("v")
             .agg(*(F.collect_list(c).alias(c) for c in lists))
             .persist(StorageLevel.MEMORY_AND_DISK)
@@ -268,7 +275,7 @@ class VertexState:
         (``x`` typed like ``state[key]``)."""
         sc = self.spark.sparkContext
         state_bc = sc.broadcast(state)
-        x_type = "boolean" if state[key].dtype == np.bool_ else "long"
+        x_type = {"b": "boolean", "f": "double"}.get(state[key].dtype.kind, "long")
 
         def run(batches):
             import pickle

@@ -169,26 +169,6 @@ COPART_EDGES_WEIGHTED_SQL = (
     "AND a.l_partkey < b.l_partkey GROUP BY 1, 2"
 )
 
-# Smaller graph for the expensive iterative oracles (k-truss, PageRank, CC, LP):
-# suppliers co-occurring in the same order — ~100·sf vertices, dense enough for
-# triangles, small enough that unrolled-SQL oracles stay fast in DuckDB.
-def supplier_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    a = li.select(F.col("l_orderkey").alias("o"), F.col("l_suppkey").alias("s1"))
-    b = li.select(F.col("l_orderkey").alias("o"), F.col("l_suppkey").alias("s2"))
-    return (
-        a.join(b, "o")
-        .where(F.col("s1") < F.col("s2"))
-        .select(F.col("s1").cast("long").alias("u"), F.col("s2").cast("long").alias("v"))
-        .distinct()
-    )
-
-SUPPLIER_EDGES_SQL = (
-    "SELECT DISTINCT CAST(a.l_suppkey AS BIGINT) AS u, CAST(b.l_suppkey AS BIGINT) AS v "
-    "FROM lineitem a JOIN lineitem b ON a.l_orderkey = b.l_orderkey "
-    "AND a.l_suppkey < b.l_suppkey"
-)
-
 
 def synth_corpus(spark: SparkSession, n_docs: int, seed: int = 42) -> DataFrame:
     """Deterministic synthetic web-text corpus for SCALE benching of the
