@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from trianglecounting_spark.operators import triangles as t
 from trianglecounting_spark.operators.components import connected_components
 from trianglecounting_spark.operators.kcore import coreness
-from trianglecounting_spark.operators.ktruss import ktruss_rounds
+from trianglecounting_spark.operators.ktruss import ktruss, ktruss_rounds
 from trianglecounting_spark.operators.labelprop import label_propagation
 from trianglecounting_spark.operators.pagerank import pagerank
 from trianglecounting_spark.operators.scc import scc
@@ -77,6 +77,11 @@ def test_label_propagation_no_cache_leak(spark):
 
 def test_ktruss_rounds_no_cache_leak(spark):
     _assert_clean(spark, lambda e: ktruss_rounds(e, k=4, rounds=2).count())
+
+
+def test_ktruss_no_cache_leak(spark):
+    """The one-task peel leaves only its result's block."""
+    _assert_clean(spark, lambda e: ktruss(e, k=4).count())
 
 
 def test_tracked_checkpoint_releases_intermediates(spark):

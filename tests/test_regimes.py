@@ -5,7 +5,9 @@ budget, so each case runs at the default budget, with ``broadcast_rows=0``,
 and at the default budget with the grouped adjacency split into many
 id-range partitions (so partition-local fixpoints meet remote neighbors);
 all runs must agree exactly (and with the closed form) — pagerank's
-float scores to 1e-12 relative, since summation order differs."""
+float scores to 1e-12 relative, since summation order differs. ktruss peels
+in one task up to ``ENTRIES_PER_PARTITION`` edges and in checkpointed rounds
+above it (forced by setting the bound to -1); both return the same edges."""
 
 from __future__ import annotations
 
@@ -15,12 +17,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from trianglecounting_spark.operators.components import connected_components
+from trianglecounting_spark.operators import ktruss as ktruss_mod
 from trianglecounting_spark.operators.kcore import coreness
 from trianglecounting_spark.operators.normalize import normalize_edges
 from trianglecounting_spark.operators.pagerank import pagerank
 from trianglecounting_spark.operators.scc import scc
 from trianglecounting_spark.plans import vertex_state
 from trianglecounting_spark.plans.cache import persistent_rdd_ids, release_all_cached
+from trianglecounting_spark.plans.checkpoint import IterationCheckpointer
 from trianglecounting_spark.plans.tuning import BROADCAST_ROWS
 from trianglecounting_spark.sources import generators as g
 
@@ -223,3 +227,57 @@ def test_pagerank_passes_per_regime(spark, monkeypatch):
     split = _ranks(e, iterations=7)
     assert len(passes) == 7 and passes[0] > 1
     assert _close(whole, split)
+
+
+def _truss(e, k, **kw):
+    return {(r.u, r.v) for r in ktruss_mod.ktruss(e, k, **kw).collect()}
+
+
+def _k6_and_tail(spark):
+    """K_6 on 0..5 plus a triangle strip 5-6-7-8-9 hanging off vertex 5
+    (edges (i, i+1) and (i, i+2)): at k=4 the first round keeps only the
+    strip's two edges in two triangles, the second round drops them too."""
+    k6 = [(a, b) for a in range(6) for b in range(a + 1, 6)]
+    strip = [(i, i + 1) for i in range(5, 9)] + [(i, i + 2) for i in range(5, 8)]
+    return spark.createDataFrame(k6 + strip, "u long, v long")
+
+
+@pytest.mark.parametrize("graph", ["k6_tail", "rmat9", "empty"])
+def test_ktruss_regimes_agree(spark, monkeypatch, graph):
+    if graph == "k6_tail":
+        e = _k6_and_tail(spark)
+    elif graph == "rmat9":
+        e = normalize_edges(g.rmat_graph(spark, scale=9, edge_factor=4))
+    else:
+        e = spark.createDataFrame([], "u long, v long")
+    e = e.localCheckpoint(eager=True)
+    got = {}
+    for k in (2, 3, 4, 6):
+        for cap in (1, 2, 100):  # 100: the default cap
+            got[k, cap] = _truss(e, k, max_iterations=cap)
+            with monkeypatch.context() as mp:
+                # -1: even the empty table takes the round loop
+                mp.setattr(vertex_state, "ENTRIES_PER_PARTITION", -1)
+                assert _truss(e, k, max_iterations=cap) == got[k, cap], (k, cap)
+    assert got[2, 100] == {(r.u, r.v) for r in e.collect()}
+    if graph == "k6_tail":
+        k6 = {(a, b) for a in range(6) for b in range(a + 1, 6)}
+        assert len(got[3, 100]) == 15 + 7
+        assert got[4, 1] == k6 | {(6, 7), (7, 8)}
+        assert got[4, 2] == got[4, 100] == got[6, 1] == got[6, 100] == k6
+
+
+def test_ktruss_checkpointer_takes_round_loop(spark, monkeypatch, tmp_path):
+    """With a checkpointer the round loop runs (its snapshots are the resume
+    point), under the one-task bound too, and returns the same edges."""
+    e = _k6_and_tail(spark)
+    one_task = _truss(e, 4)
+    calls = []
+    peel = ktruss_mod._peel_in_one_task
+    monkeypatch.setattr(
+        ktruss_mod, "_peel_in_one_task", lambda *a: calls.append(a) or peel(*a)
+    )
+    ck = IterationCheckpointer(spark, str(tmp_path / "ck"), every=1)
+    assert _truss(e, 4, checkpointer=ck) == one_task
+    assert calls == [] and ck.latest() is not None
+    assert _truss(e, 4) == one_task and calls == [(4, 100)]

@@ -6,20 +6,39 @@ output of the triangle operators), drop under-supported edges, repeat until a
 pass removes nothing. The reference computes only the global count; per-edge
 support + peeling are our extension (SURVEY.md §7 step 5).
 
-Each round = one triangle enumeration (three-way DODG self-join) + a filter —
-integer-exact, so partitioning-invariant. For the deterministic oracle
-contract the fixed-round form ``ktruss_rounds`` peels exactly R times (the
-final rounds are idempotent once converged); `ktruss` runs to fixpoint.
+Rounds are synchronous: a round drops every edge whose support among the
+current survivors is below k-2, so a run capped at R rounds returns the same
+edges in either regime below (integer-exact, partitioning-invariant). A peel
+past the fixpoint removes nothing, so R forced peels (``ktruss_rounds``, the
+oracle-matched contract form) are a fixpoint run capped at R.
 
-Scale: each round's cost is the triangle join on the *surviving* subgraph —
-monotonically shrinking. Persist + lineage checkpoint per round.
+Two regimes, chosen per call:
+
+* **One task** — the edge table has at most
+  ``vertex_state.ENTRIES_PER_PARTITION`` rows (the one-Python-worker bound,
+  1 M) and no checkpointer is given. The whole table goes to one
+  ``mapInArrow`` task, which orients it by (degree, id), enumerates every
+  triangle once through the kernel's intersection core, and peels with one
+  ``bincount`` of the surviving triangles per round; the survivors come
+  back as one checkpointed block. Spark local[2], 4-vCPU host, k=6: the
+  co-part sf0.004 graph (44,404 edges) peels in 0.63 s against 2.22 s for
+  the round loop (medians of 9); R-MAT scale 16 ef16 (909,391 edges, 15.7 M
+  triangles, 12 rounds) in 22-27 s against 129-133 s, with a task peak of
+  ~1.8 GB.
+* **Round loop** — over that bound, or with a checkpointer (its snapshots
+  are the resume point). The degree orientation is computed once and each
+  round is one kernel support pass (``triangle_support_counts_oriented``:
+  a collect and rebroadcast of the oriented survivors in the full-CSR
+  layout, partial support, a groupBy-sum) plus a checkpoint and a count.
 """
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 from trianglecounting_spark.operators.triangles import triangle_per_edge_support
+from trianglecounting_spark.plans import vertex_state
 from trianglecounting_spark.plans.cache import (
     barrier_checkpoint,
     persistent_rdd_ids,
@@ -84,23 +103,80 @@ def _oriented_snapshot(state: DataFrame) -> DataFrame:
     )
 
 
+def _peel_in_one_task(k: int, max_iterations: int):
+    """``mapInArrow`` body: the whole ``(u, v)`` edge table in one task →
+    its k-truss survivors ``(u, v)``, u < v, after the same synchronous
+    rounds as the round loop."""
+
+    def run(batches):
+        import pyarrow as pa
+
+        from trianglecounting_spark.operators.triangles import (
+            _enumerate_reducer,
+            _flat_csr,
+            _partition_views,
+        )
+
+        rbs = [rb for rb in batches if rb.num_rows > 0]
+        if not rbs:
+            return
+        tbl = pa.Table.from_batches(rbs)
+        u, v = (tbl.column(c).to_numpy().astype(np.int64, copy=False) for c in "uv")
+        # index space: ids ascending, so index order is id order
+        ids, inv = np.unique(np.concatenate((u, v)), return_inverse=True)
+        iu, iv, n = inv[: len(u)], inv[len(u):], len(ids)
+        deg = np.bincount(inv, minlength=n)
+        up = (deg[iu] < deg[iv]) | ((deg[iu] == deg[iv]) & (iu < iv))  # rank order
+        csr = _flat_csr(np.where(up, iu, iv), np.where(up, iv, iu))
+        src, dst = np.repeat(csr[0], np.diff(csr[1])), csr[2]
+        rows = pa.RecordBatch.from_pydict({"src": src, "dst": dst})
+        t = _enumerate_reducer(_partition_views([rows], csr), csr)
+        # each triangle as the positions of its three edges in the sorted rows
+        key = src * n + dst
+        tri = np.searchsorted(
+            key, np.stack((t["a"] * n + t["b"], t["a"] * n + t["c"], t["b"] * n + t["c"]))
+        )
+        alive = np.ones(len(key), dtype=bool)
+        for _ in range(max_iterations):
+            drop = alive & (np.bincount(tri.ravel(), minlength=len(key)) < k - 2)
+            if not drop.any():
+                break
+            alive &= ~drop
+            tri = tri[:, alive[tri].all(axis=0)]
+        a, b = ids[src[alive]], ids[dst[alive]]
+        yield pa.RecordBatch.from_pydict({"u": np.minimum(a, b), "v": np.maximum(a, b)})
+
+    return run
+
+
 def ktruss(
     edges: DataFrame,
     k: int,
     max_iterations: int = 100,
     checkpointer: IterationCheckpointer | None = None,
 ) -> DataFrame:
-    """Edges of the k-truss subgraph: ``(u, v)`` with u < v. Runs to fixpoint.
+    """Edges of the k-truss subgraph: ``(u, v)`` with u < v, peeled until a
+    round drops nothing or ``max_iterations`` rounds have run.
 
-    Round-6 plan change (same integers every round): the degree-ordered
-    orientation is computed ONCE on the input and the peel iterates on the
-    ORIENTED survivor table — each round is adjacency grouping + the Arrow
-    intersection kernel + the support filter, with the per-round degree
-    aggregation and the two orientation joins gone (the original total order
-    stays acyclic on every subgraph, so triangle enumeration remains exact
-    and exactly-once; measured ~1.3× per round at sf0.1)."""
+    Up to ``vertex_state.ENTRIES_PER_PARTITION`` edges and without a
+    ``checkpointer``, the whole peel runs in one task (``_peel_in_one_task``;
+    ``ktruss(...).count()`` on the co-part sf0.004 graph at k=6 runs 4 Spark
+    jobs against 21 for the round loop). Otherwise the round loop runs on the ORIENTED
+    survivor table: the degree-ordered orientation is computed once (the
+    total order stays acyclic on every subgraph, so triangle enumeration
+    stays exact and exactly-once), and each round is the kernel support pass
+    + the filter + a checkpoint, which ``checkpointer`` can snapshot."""
     from trianglecounting_spark.operators.normalize import orient_dodg
 
+    if checkpointer is None and edges.count() <= vertex_state.ENTRIES_PER_PARTITION:
+        # coalesce, not repartition: no shuffle job, and the block keeps its
+        # single partitioning, so a count of the result needs no exchange
+        # (4 Spark jobs for ``ktruss(...).count()`` instead of 6)
+        peel = _peel_in_one_task(k, max_iterations)
+        out, _ = tracked_checkpoint(
+            edges.select("u", "v").coalesce(1).mapInArrow(peel, "u long, v long")
+        )
+        return out
     spark = edges.sparkSession
     restored = checkpointer.restore() if checkpointer is not None else None
     if restored is None:
@@ -129,23 +205,10 @@ def ktruss(
 
 
 def ktruss_rounds(edges: DataFrame, k: int, rounds: int) -> DataFrame:
-    """Exactly `rounds` peels — the deterministic oracle-matched contract.
-
-    Each round materializes (eager localCheckpoint): the peel references its
-    input several times (triangle join ×3), so an unmaterialized chain
-    re-evaluates upstream work exponentially in the round count. Rides the
-    same orient-once peel as ``ktruss`` (identical per-round edge sets).
-    """
-    from trianglecounting_spark.operators.normalize import orient_dodg
-
-    spark = edges.sparkSession
-    cur, cur_ids = tracked_checkpoint(orient_dodg(edges))
-    for _ in range(rounds):
-        before = persistent_rdd_ids(spark)
-        cur, nxt_ids = tracked_checkpoint(_peel_once_oriented(cur, k), before=before)
-        release_ids(spark, cur_ids)
-        cur_ids = nxt_ids
-    return _canon_uv(cur)
+    """Exactly ``rounds`` peels — the deterministic oracle-matched contract.
+    Peels past the fixpoint remove nothing, so this is ``ktruss`` capped at
+    ``rounds``."""
+    return ktruss(edges, k, max_iterations=rounds)
 
 
 def ktruss_unrolled_sql(edges_sql: str, k: int, rounds: int) -> str:

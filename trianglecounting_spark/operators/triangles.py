@@ -625,24 +625,33 @@ def _select_hub_csr(d: DataFrame, hub_k: int):
 
 
 def _broadcast_hub_csr(spark, flat_pdf):
-    """(src, nbr) flat pandas frame → broadcast (ids, offsets, values) CSR.
-    Grouping happens here with one driver-side lexsort (the collect is
-    order-free, so the limit probe needs no distributed sort); values need no
-    order — they are the PROBE side of the intersection, the searched side is
-    always the partition-sorted group neighbors. Hubs with empty out-lists
-    vanish in the explode — a kernel lookup miss means empty, which is
-    exactly right."""
-    hub_srcs = flat_pdf["src"].to_numpy(dtype=np.int64)
-    values = flat_pdf["nbr"].to_numpy(dtype=np.int64)
-    if len(hub_srcs):
-        order = np.lexsort((values, hub_srcs))
-        hub_srcs, values = hub_srcs[order], values[order]
-        ids, first_idx = np.unique(hub_srcs, return_index=True)
-        offsets = np.concatenate((first_idx, [len(hub_srcs)])).astype(np.int64)
+    """(src, nbr) flat pandas frame → broadcast (ids, offsets, values) CSR
+    (``_flat_csr``). The collect is order-free, so the limit probe needs no
+    distributed sort. Hubs with empty out-lists vanish in the explode — a
+    kernel lookup miss means empty, which is exactly right."""
+    return spark.sparkContext.broadcast(
+        _flat_csr(
+            flat_pdf["src"].to_numpy(dtype=np.int64),
+            flat_pdf["nbr"].to_numpy(dtype=np.int64),
+        )
+    )
+
+
+def _flat_csr(srcs: np.ndarray, values: np.ndarray):
+    """Flat int64 (src, nbr) pairs in any order → the kernel's (ids,
+    offsets, values) CSR, grouped with one lexsort: ids ascending, each
+    list sorted (values need no order for the kernel — they are the PROBE
+    side of the intersection, the searched side is always the
+    partition-sorted group neighbors)."""
+    if len(srcs):
+        order = np.lexsort((values, srcs))
+        srcs, values = srcs[order], values[order]
+        ids, first_idx = np.unique(srcs, return_index=True)
+        offsets = np.concatenate((first_idx, [len(srcs)])).astype(np.int64)
     else:
         ids = np.empty(0, dtype=np.int64)
         offsets = np.zeros(1, dtype=np.int64)
-    return spark.sparkContext.broadcast((ids, offsets, values))
+    return ids, offsets, values
 
 
 def triangle_count_kernel(
