@@ -6,20 +6,44 @@ every iterative loop's localCheckpoint blocks lingered until an unrelated JVM
 GC. The contract now: after an operator returns and its result is consumed,
 the ONLY persistent blocks left are the result's own materialization (≤1 RDD),
 and `release_all_cached` sweeps those once the caller is done — no System.gc()
-workarounds anywhere.
+workarounds anywhere. An operator that raises mid-loop leaves none at all
+(``plans/cache.IterationScope`` frees everything it made on every exit).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import itertools
 
+import pytest
+from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+
+from trianglecounting_spark.functions.textstats import bpe_train
+from trianglecounting_spark.operators import (
+    bfs,
+    centrality,
+    coloring,
+    hyperball,
+    kcore,
+    linkpred,
+    mis,
+    redirects,
+)
+from trianglecounting_spark.operators import ktruss as ktruss_mod
+from trianglecounting_spark.operators import pagerank as pr
+from trianglecounting_spark.operators import scc as scc_mod
 from trianglecounting_spark.operators import triangles as t
-from trianglecounting_spark.operators.components import connected_components
+from trianglecounting_spark.operators.components import (
+    attack_tolerance,
+    connected_components,
+    connected_components_incremental,
+)
 from trianglecounting_spark.operators.kcore import coreness
 from trianglecounting_spark.operators.ktruss import ktruss, ktruss_rounds
 from trianglecounting_spark.operators.labelprop import label_propagation
 from trianglecounting_spark.operators.pagerank import pagerank
 from trianglecounting_spark.operators.scc import scc
+from trianglecounting_spark.plans import vertex_state
 from trianglecounting_spark.plans.cache import (
     persistent_rdd_ids,
     release_all_cached,
@@ -131,3 +155,137 @@ def test_tracked_checkpoint_spares_sql_caches(spark):
     base.unpersist()
     release_all_cached(spark)
     assert persistent_rdd_ids(spark) == set()
+
+
+def _directed(e):
+    """Directed edges with some reciprocated pairs (non-trivial SCCs)."""
+    return e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
+        e.where(F.col("u") % 3 == 0).select(F.col("v").alias("src"), F.col("u").alias("dst"))
+    )
+
+
+def _ktruss_round_loop(e):
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(vertex_state, "ENTRIES_PER_PARTITION", -1)
+        return ktruss(e, k=4).count()
+
+
+def _redirects(e):
+    m = e.sparkSession.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (5, 6), (6, 5)], "src long, dst long"
+    )
+    return redirects.resolve_redirects(m, cap=4).count()
+
+
+def _bpe(e):
+    docs = e.sparkSession.createDataFrame(
+        [("the cat sat on the mat",), ("that hat",)], "text string"
+    )
+    return bpe_train(docs, n_merges=3).count()
+
+
+def _cc_incremental(e):
+    # driver-regime labels: an input that holds no block of its own
+    labels = connected_components(e.where(F.col("u") < 10))
+    return connected_components_incremental(labels, e.where(F.col("u") >= 10)).count()
+
+
+# Every operator whose rounds run in an IterationScope and that the named
+# tests above do not cover; both regimes where an operator has two
+# (``broadcast_rows=0`` forces the shuffle one).
+LEAK_CASES = {
+    "hyperball_balls": lambda e: hyperball.hyperball_balls(e, 3).count(),
+    "neighborhood_function": lambda e: hyperball.neighborhood_function(e, 3),
+    "harmonic_centrality": lambda e: hyperball.harmonic_centrality_approx(e, 3).count(),
+    "trussness": lambda e: ktruss_mod.trussness(e).count(),
+    "ktruss_round_loop": _ktruss_round_loop,
+    "ktruss_incremental": lambda e: ktruss_mod.ktruss_incremental(
+        e, 5, delta_frac=float("inf")
+    ).count(),
+    "kcore": lambda e: kcore.kcore(e, 4).count(),
+    "kcore_incremental": lambda e: kcore.kcore_incremental(e, 5).count(),
+    "coreness_shuffle": lambda e: coreness(e, broadcast_rows=0).count(),
+    "bfs_distances": lambda e: bfs.bfs_distances(e).count(),
+    "sssp_weighted": lambda e: bfs.sssp_weighted(bfs.hash_weights(e)).count(),
+    "pagerank_shuffle": lambda e: pagerank(e, iterations=7, broadcast_rows=0).count(),
+    "pagerank_directed": lambda e: pr.pagerank_directed(_directed(e), iterations=2).count(),
+    "personalized_pagerank": lambda e: pr.personalized_pagerank(
+        _directed(e), [1, 2], iterations=2
+    ).count(),
+    "pagerank_weighted": lambda e: pr.pagerank_weighted(
+        bfs.hash_weights(e), iterations=6
+    ).count(),
+    "hits": lambda e: pr.hits(_directed(e), iterations=2).count(),
+    "salsa": lambda e: pr.salsa(_directed(e), iterations=2).count(),
+    "eigenvector_centrality": lambda e: pr.eigenvector_centrality(e, 2).count(),
+    "katz_centrality": lambda e: pr.katz_centrality(e, iterations=2).count(),
+    "connected_components_shuffle": lambda e: connected_components(
+        e, broadcast_rows=0
+    ).count(),
+    "connected_components_incremental": _cc_incremental,
+    "attack_tolerance": lambda e: attack_tolerance(e, (0.1,)).count(),
+    "mis": lambda e: mis.maximal_independent_set(e).count(),
+    "mis_shuffle": lambda e: mis.maximal_independent_set(e, broadcast_rows=0).count(),
+    "greedy_coloring": lambda e: coloring.greedy_coloring(e).count(),
+    "scc_shuffle": lambda e: scc(_directed(e), broadcast_rows=0).count(),
+    "bowtie_classes": lambda e: scc_mod.bowtie_classes(_directed(e)).count(),
+    "condensation_levels": lambda e: scc_mod.condensation_levels(_directed(e)).count(),
+    "betweenness_pivots": lambda e: centrality.betweenness_pivots(e, n_pivots=4).count(),
+    "resolve_redirects": _redirects,
+    "simrank": lambda e: linkpred.simrank(_directed(e), iterations=2).count(),
+    "bpe_train": _bpe,
+}
+
+
+@pytest.mark.parametrize("name", sorted(LEAK_CASES))
+def test_iterative_operator_no_cache_leak(spark, name):
+    _assert_clean(spark, LEAK_CASES[name])
+
+
+class _Injected(Exception):
+    pass
+
+
+# (operator, n): the n-th DataFrame.localCheckpoint call of the run raises —
+# a mid-loop round of each operator's shuffle loop
+ERROR_CASES = {
+    "bfs_distances": (lambda e: bfs.bfs_distances(e).count(), 3),
+    "trussness": (lambda e: ktruss_mod.trussness(e).count(), 4),
+    # tol mode: every step kept, the old state released after the delta probe
+    "pagerank_shuffle_tol": (
+        lambda e: pagerank(e, iterations=7, tol=1e-12, broadcast_rows=0).count(), 3
+    ),
+    "connected_components_shuffle": (
+        lambda e: connected_components(e, broadcast_rows=0).count(), 3
+    ),
+    "mis_shuffle": (
+        lambda e: mis.maximal_independent_set(e, broadcast_rows=0).count(), 3
+    ),
+    "greedy_coloring": (lambda e: coloring.greedy_coloring(e).count(), 3),
+    "label_propagation": (lambda e: label_propagation(e, rounds=3).count(), 2),
+    "hyperball_balls": (lambda e: hyperball.hyperball_balls(e, 3).count(), 3),
+}
+
+
+@pytest.mark.parametrize("name", sorted(ERROR_CASES))
+def test_iterative_operator_releases_on_error(spark, monkeypatch, name):
+    """A failure mid-loop (here: the n-th checkpoint) must leave the session's
+    persistent blocks exactly as they were before the call."""
+    run, n = ERROR_CASES[name]
+    release_all_cached(spark)
+    e = _graph(spark)
+    before = persistent_rdd_ids(spark)
+    calls = itertools.count(1)
+    local_checkpoint = ClassicDataFrame.localCheckpoint
+
+    def failing(self, eager=True):
+        if next(calls) == n:
+            raise _Injected(name)
+        return local_checkpoint(self, eager)
+
+    monkeypatch.setattr(ClassicDataFrame, "localCheckpoint", failing)
+    with pytest.raises(_Injected):
+        run(e)
+    monkeypatch.undo()
+    assert persistent_rdd_ids(spark) == before
+    release_all_cached(spark)

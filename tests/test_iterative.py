@@ -576,7 +576,7 @@ def test_kcore_incremental_matches_bulk(spark):
 def test_incremental_peels_survive_deep_cascades(spark):
     """Regression for the deep-cascade driver blowup: localCheckpoint leaves
     the RDD DAG chained, and the driver's per-job lineage-path walk is
-    O(refs^depth) — before the _BARRIER_EVERY reliable-checkpoint barrier, a
+    O(refs^depth) — before the BARRIER_EVERY reliable-checkpoint barrier, a
     ~20-round k-core cascade at sf0.1 pinned the driver single-core in
     BigInteger stats arithmetic for >25 min (bulk form: 23 s). These cascades
     run 2.5×+ past the barrier cadence (12), so a reintroduced unbounded walk

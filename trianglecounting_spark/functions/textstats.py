@@ -1512,7 +1512,7 @@ def bpe_train(docs: DataFrame, n_merges: int = 8, min_word_count: int = 1) -> Da
     No counterpart in /root/reference; the tokenizer-training member of the
     LLM-training-data family.
     """
-    from trianglecounting_spark.plans.cache import release_ids, tracked_checkpoint
+    from trianglecounting_spark.plans.cache import IterationScope
 
     spark = docs.sparkSession
     sep = F.lit(_BPE_SEP)
@@ -1534,46 +1534,44 @@ def bpe_train(docs: DataFrame, n_merges: int = 8, min_word_count: int = 1) -> Da
             F.lit("</w>"),
         ).alias("syms"),
     )
-    state, prev_ids = tracked_checkpoint(state)
-
     rows: list[tuple[int, str, str, int]] = []
-    for k in range(1, int(n_merges) + 1):
-        toks = F.split("syms", _BPE_SEP)
-        sz = F.size(toks)
-        pairs = state.select(
-            "n",
-            F.explode(
-                F.arrays_zip(
-                    F.slice(toks, 1, sz - 1).alias("l"),
-                    F.slice(toks, 2, sz - 1).alias("r"),
-                )
-            ).alias("p"),
-        )
-        top = (
-            pairs.groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
-            .agg(F.sum("n").alias("cnt"))
-            .orderBy(F.col("cnt").desc(), F.col("l").asc(), F.col("r").asc())
-            .limit(1)
-            .collect()
-        )
-        if not top:
-            break
-        l, r, cnt = top[0]["l"], top[0]["r"], int(top[0]["cnt"])
-        rows.append((k, l, r, cnt))
-        lft, rgt = F.lit(l), F.lit(r)
-        folded = F.aggregate(
-            F.slice(toks, 2, sz - 1),
-            F.element_at(toks, 1),
-            lambda acc, x: F.when(
-                ((acc == lft) | acc.endswith(F.concat(sep, lft))) & (x == rgt),
-                F.concat(acc, x),
-            ).otherwise(F.concat(acc, sep, x)),
-        )
-        state = state.select("n", folded.alias("syms"))
-        state, new_ids = tracked_checkpoint(state)
-        release_ids(spark, prev_ids)
-        prev_ids = new_ids
-    release_ids(spark, prev_ids)
+    with IterationScope(spark) as it:
+        state = it.keep(state)
+        for k in range(1, int(n_merges) + 1):
+            toks = F.split("syms", _BPE_SEP)
+            sz = F.size(toks)
+            pairs = state.select(
+                "n",
+                F.explode(
+                    F.arrays_zip(
+                        F.slice(toks, 1, sz - 1).alias("l"),
+                        F.slice(toks, 2, sz - 1).alias("r"),
+                    )
+                ).alias("p"),
+            )
+            top = (
+                pairs.groupBy(F.col("p.l").alias("l"), F.col("p.r").alias("r"))
+                .agg(F.sum("n").alias("cnt"))
+                .orderBy(F.col("cnt").desc(), F.col("l").asc(), F.col("r").asc())
+                .limit(1)
+                .collect()
+            )
+            if not top:
+                break
+            l, r, cnt = top[0]["l"], top[0]["r"], int(top[0]["cnt"])
+            rows.append((k, l, r, cnt))
+            lft, rgt = F.lit(l), F.lit(r)
+            folded = F.aggregate(
+                F.slice(toks, 2, sz - 1),
+                F.element_at(toks, 1),
+                lambda acc, x: F.when(
+                    ((acc == lft) | acc.endswith(F.concat(sep, lft))) & (x == rgt),
+                    F.concat(acc, x),
+                ).otherwise(F.concat(acc, sep, x)),
+            )
+            new_state = it.keep(state.select("n", folded.alias("syms")))
+            it.release(state)
+            state = new_state
     return spark.createDataFrame(
         rows, "merge_rank long, left_sym string, right_sym string, pair_count long"
     )

@@ -12,7 +12,7 @@ Scale notes: the (big) symmetric edge side is pre-partitioned by src once and
 cached; each round shuffles only frontier-sized tables. Power-law graphs
 reach most vertices in 2–4 rounds (the frontier IS the skew absorber — a
 mega-hub simply lands the bulk of V in one round's frontier, which AQE
-splits). Rounds are materialized + released via tracked checkpoints like the
+splits). Rounds are kept + released through ``IterationScope`` like the
 other iterative operators.
 
 Output: ``(v: long, dist: long)`` for every vertex REACHABLE from the
@@ -23,10 +23,9 @@ decides the sentinel). Integer-exact, partitioning-invariant.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from trianglecounting_spark.operators.normalize import undirect
-from trianglecounting_spark.plans.cache import release_ids, tracked_checkpoint
+from trianglecounting_spark.plans.cache import IterationScope
 from trianglecounting_spark.plans.tuning import (
     iteration_partitions,
     scoped_shuffle_partitions,
@@ -43,40 +42,27 @@ def bfs_distances(
     if source is None:
         source = int(edges.agg(F.min(F.least("u", "v"))).collect()[0][0])
     n_part = iteration_partitions(spark, edges.count() * 2)
-    sym = (
-        undirect(edges)
-        .repartition(n_part, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym.count()  # materialize before the loop (cache must survive sweeps)
-    dist = spark.createDataFrame([(source, 0)], "v long, dist long")
-    frontier = dist
-    dist, dist_ids = tracked_checkpoint(dist)
-    frontier_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for k in range(1, max_iterations + 1):
-            reached = (
-                sym.join(
-                    frontier.select(F.col("v").alias("src")), "src"
+    with IterationScope(spark) as it:
+        sym = it.cache(undirect(edges).repartition(n_part, "src"))
+        sym.count()  # materialize before the loop (cache must survive sweeps)
+        frontier = dist = it.keep(spark.createDataFrame([(source, 0)], "v long, dist long"))
+        with scoped_shuffle_partitions(spark, n_part):
+            for k in range(1, max_iterations + 1):
+                new_frontier = it.keep(
+                    sym.join(
+                        frontier.select(F.col("v").alias("src")), "src"
+                    )
+                    .select(F.col("dst").alias("v"))
+                    .distinct()
+                    .join(dist, "v", "left_anti")
+                    .select("v", F.lit(k).cast("long").alias("dist"))
                 )
-                .select(F.col("dst").alias("v"))
-                .distinct()
-                .join(dist, "v", "left_anti")
-                .select("v", F.lit(k).cast("long").alias("dist"))
-            )
-            new_frontier, new_frontier_ids = tracked_checkpoint(reached)
-            if new_frontier.count() == 0:
-                release_ids(spark, new_frontier_ids)
-                break
-            new_dist, new_dist_ids = tracked_checkpoint(
-                dist.unionAll(new_frontier)
-            )
-            release_ids(spark, dist_ids | frontier_ids)
-            dist, dist_ids = new_dist, new_dist_ids
-            frontier, frontier_ids = new_frontier, new_frontier_ids
-    release_ids(spark, frontier_ids)
-    sym.unpersist()
-    return dist
+                if new_frontier.count() == 0:
+                    break
+                new_dist = it.keep(dist.unionAll(new_frontier))
+                it.release(dist, frontier)
+                dist, frontier = new_dist, new_frontier
+        return it.result(dist)
 
 
 def double_sweep_diameter(edges: DataFrame, max_iterations: int = 50) -> DataFrame:
@@ -210,53 +196,44 @@ def sssp_weighted(
     if source is None:
         source = int(edges_w.agg(F.min(F.least("u", "v"))).collect()[0][0])
     n_part = iteration_partitions(spark, edges_w.count() * 2)
-    sym = (
-        edges_w.select(F.col("u").alias("src"), F.col("v").alias("dst"), "w")
-        .unionAll(
-            edges_w.select(F.col("v").alias("src"), F.col("u").alias("dst"), "w")
+    with IterationScope(spark) as it:
+        sym = it.cache(
+            edges_w.select(F.col("u").alias("src"), F.col("v").alias("dst"), "w")
+            .unionAll(
+                edges_w.select(F.col("v").alias("src"), F.col("u").alias("dst"), "w")
+            )
+            .repartition(n_part, "src")
         )
-        .repartition(n_part, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym.count()
-    dist = spark.createDataFrame([(source, 0)], "v long, dist long")
-    frontier = dist
-    dist, dist_ids = tracked_checkpoint(dist)
-    frontier_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for _ in range(max_iterations):
-            cand = (
-                sym.join(
-                    frontier.select(F.col("v").alias("src"), "dist"), "src"
+        sym.count()
+        frontier = dist = it.keep(spark.createDataFrame([(source, 0)], "v long, dist long"))
+        with scoped_shuffle_partitions(spark, n_part):
+            for _ in range(max_iterations):
+                cand = (
+                    sym.join(
+                        frontier.select(F.col("v").alias("src"), "dist"), "src"
+                    )
+                    .select(
+                        F.col("dst").alias("v"),
+                        (F.col("dist") + F.col("w")).alias("nd"),
+                    )
+                    .groupBy("v")
+                    .agg(F.min("nd").alias("nd"))
                 )
-                .select(
-                    F.col("dst").alias("v"),
-                    (F.col("dist") + F.col("w")).alias("nd"),
+                new_frontier = it.keep(
+                    cand.join(dist, "v", "left_outer")
+                    .where(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
+                    .select("v", F.col("nd").alias("dist"))
                 )
-                .groupBy("v")
-                .agg(F.min("nd").alias("nd"))
-            )
-            improved = (
-                cand.join(dist, "v", "left_outer")
-                .where(F.col("dist").isNull() | (F.col("nd") < F.col("dist")))
-                .select("v", F.col("nd").alias("dist"))
-            )
-            new_frontier, new_frontier_ids = tracked_checkpoint(improved)
-            if new_frontier.count() == 0:
-                release_ids(spark, new_frontier_ids)
-                break
-            merged = (
-                dist.unionAll(new_frontier)
-                .groupBy("v")
-                .agg(F.min("dist").alias("dist"))
-            )
-            new_dist, new_dist_ids = tracked_checkpoint(merged)
-            release_ids(spark, dist_ids | frontier_ids)
-            dist, dist_ids = new_dist, new_dist_ids
-            frontier, frontier_ids = new_frontier, new_frontier_ids
-    release_ids(spark, frontier_ids)
-    sym.unpersist()
-    return dist
+                if new_frontier.count() == 0:
+                    break
+                new_dist = it.keep(
+                    dist.unionAll(new_frontier)
+                    .groupBy("v")
+                    .agg(F.min("dist").alias("dist"))
+                )
+                it.release(dist, frontier)
+                dist, frontier = new_dist, new_frontier
+        return it.result(dist)
 
 
 def sssp_weighted_unrolled_sql(edges_sql: str, rounds: int = 25) -> str:

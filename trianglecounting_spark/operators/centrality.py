@@ -19,8 +19,9 @@ Both phases are relational and run for ALL pivots simultaneously, keyed by
   (same portability contract as the PageRank family: rounded to 6dp at the
   very end only).
 
-Per-round state is checkpointed (eager localCheckpoint, tracked) like every
-iterative loop in this repo; the adjacency stays persisted across rounds.
+Per-round state is kept in an ``IterationScope`` (eager localCheckpoint)
+like every iterative loop in this repo; the adjacency stays materialized
+across rounds.
 Cost: 2·depth shuffle rounds, each O(K·|E touched|) — the textbook
 distributed Brandes schedule; K controls work, not correctness.
 
@@ -32,12 +33,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from trianglecounting_spark.plans.cache import (
-    persistent_rdd_ids,
-    release_ids,
-    tracked_checkpoint,
-)
-from trianglecounting_spark.plans.tuning import BROADCAST_ROWS
+from trianglecounting_spark.plans.cache import IterationScope
+from trianglecounting_spark.plans.tuning import BROADCAST_ROWS, maybe_broadcast
 
 
 def betweenness_pivots(edges: DataFrame, n_pivots: int = 16,
@@ -51,108 +48,95 @@ def betweenness_pivots(edges: DataFrame, n_pivots: int = 16,
     (size-aware; shuffle joins at web scale), so each BFS/backward level is
     a narrow pass over the cached symmetric edge table plus one aggregate
     exchange instead of sort-merge-joining the edge table per level."""
-    spark = edges.sparkSession
-    adj, adj_ids = tracked_checkpoint(
-        edges.select("u", "v").unionAll(
-            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-    )
-    verts = adj.select(F.col("u").alias("v")).distinct()
-    small = n_pivots * verts.count() <= broadcast_rows
-
-    def _bc(df):
-        return F.broadcast(df) if small else df
-
-    pivots = verts.orderBy("v").limit(n_pivots).select(F.col("v").alias("src"))
-
-    # ---- forward: levels (src, v, d, sigma) ----
-    frontier, f_ids = tracked_checkpoint(
-        pivots.select(
-            "src",
-            F.col("src").alias("v"),
-            F.lit(0).cast("long").alias("d"),
-            F.lit(1.0).alias("sigma"),
-        )
-    )
-    levels = [frontier]   # per-depth frontiers; also the visited set union
-    visited, vis_ids = frontier, set()
-    depth = 0
-    for l in range(1, max_depth + 1):
-        nxt_plan = (
-            adj.join(_bc(frontier), frontier["v"] == adj["u"])
-            .select("src", adj["v"].alias("w"), "sigma")
-            .join(
-                _bc(visited.select("src", F.col("v").alias("w"), F.lit(1).alias("__seen"))),
-                ["src", "w"],
-                "left",
+    with IterationScope(edges.sparkSession) as it:
+        adj = it.keep(
+            edges.select("u", "v").unionAll(
+                edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
             )
-            .where(F.col("__seen").isNull())
-            .groupBy("src", "w")
-            .agg(F.sum("sigma").alias("sigma"))
-            .select(
+        )
+        verts = adj.select(F.col("u").alias("v")).distinct()
+        n_state = n_pivots * verts.count()  # bound on every (src, v) table
+        pivots = verts.orderBy("v").limit(n_pivots).select(F.col("v").alias("src"))
+
+        # ---- forward: levels (src, v, d, sigma) ----
+        frontier = visited = it.keep(
+            pivots.select(
                 "src",
-                F.col("w").alias("v"),
-                F.lit(l).cast("long").alias("d"),
-                "sigma",
+                F.col("src").alias("v"),
+                F.lit(0).cast("long").alias("d"),
+                F.lit(1.0).alias("sigma"),
             )
         )
-        before = persistent_rdd_ids(spark)
-        nxt, nxt_ids = tracked_checkpoint(nxt_plan, before=before)
-        if nxt.count() == 0:
-            release_ids(spark, nxt_ids)
-            break
-        new_vis, new_vis_ids = tracked_checkpoint(visited.unionAll(nxt))
-        release_ids(spark, vis_ids)
-        visited, vis_ids = new_vis, new_vis_ids
-        levels.append(nxt)
-        f_ids |= nxt_ids
-        frontier = nxt
-        depth = l
+        levels = [frontier]   # per-depth frontiers; also the visited set union
+        depth = 0
+        for l in range(1, max_depth + 1):
+            seen = visited.select("src", F.col("v").alias("w"), F.lit(1).alias("__seen"))
+            nxt = it.keep(
+                adj.join(
+                    maybe_broadcast(frontier, n_state, broadcast_rows),
+                    frontier["v"] == adj["u"],
+                )
+                .select("src", adj["v"].alias("w"), "sigma")
+                .join(maybe_broadcast(seen, n_state, broadcast_rows), ["src", "w"], "left")
+                .where(F.col("__seen").isNull())
+                .groupBy("src", "w")
+                .agg(F.sum("sigma").alias("sigma"))
+                .select(
+                    "src",
+                    F.col("w").alias("v"),
+                    F.lit(l).cast("long").alias("d"),
+                    "sigma",
+                )
+            )
+            if nxt.count() == 0:
+                break
+            new_vis = it.keep(visited.unionAll(nxt))
+            it.release(visited)
+            visited = new_vis
+            levels.append(nxt)
+            frontier = nxt
+            depth = l
 
-    # ---- backward: delta per level (deepest level's delta is all-zero and
-    # only feeds the recurrence; level 0 is the pivot itself, excluded) ----
-    delta = levels[depth].select("src", "v", F.lit(0.0).alias("delta"))
-    deltas = []   # levels depth-1 .. 1 — the rows that contribute to bc
-    for l in range(depth - 1, 0, -1):
-        up = (
-            levels[l + 1]
-            .join(delta, ["src", "v"])
-            .select("src", F.col("v").alias("w"), F.col("sigma").alias("sw"),
-                    F.col("delta").alias("dw"))
-        )
-        lv = levels[l].select(
-            "src", "v", F.col("sigma").alias("sv")
-        )
-        contrib = (
-            adj.select(F.col("u").alias("v"), F.col("v").alias("w"))
-            .join(_bc(lv), "v")
-            .join(_bc(up), ["src", "w"])
-            .groupBy("src", "v")
-            .agg(F.sum(F.col("sv") / F.col("sw") * (F.lit(1.0) + F.col("dw"))).alias("delta"))
-        )
-        delta_plan = (
-            levels[l].select("src", "v")
-            .join(contrib, ["src", "v"], "left")
-            .select("src", "v", F.coalesce("delta", F.lit(0.0)).alias("delta"))
-        )
-        before = persistent_rdd_ids(spark)
-        nd, nd_ids = tracked_checkpoint(delta_plan, before=before)
-        delta = nd
-        f_ids |= nd_ids
-        deltas.append(nd)
-    if deltas:
-        bc_src = deltas[0]
-        for d_ in deltas[1:]:
-            bc_src = bc_src.unionAll(d_)
-        agg = bc_src.groupBy("v").agg(F.sum("delta").alias("bc"))
-    else:
-        agg = verts.limit(0).select("v", F.lit(0.0).alias("bc"))
-    bc = verts.join(agg, "v", "left").select(
-        "v", F.round(F.coalesce("bc", F.lit(0.0)), 6).alias("bc")
-    )
-    out = bc.localCheckpoint(eager=True)
-    release_ids(spark, adj_ids | f_ids | vis_ids)
-    return out
+        # ---- backward: delta per level (deepest level's delta is all-zero
+        # and only feeds the recurrence; level 0 is the pivot itself,
+        # excluded) ----
+        delta = levels[depth].select("src", "v", F.lit(0.0).alias("delta"))
+        deltas = []   # levels depth-1 .. 1 — the rows that contribute to bc
+        for l in range(depth - 1, 0, -1):
+            up = (
+                levels[l + 1]
+                .join(delta, ["src", "v"])
+                .select("src", F.col("v").alias("w"), F.col("sigma").alias("sw"),
+                        F.col("delta").alias("dw"))
+            )
+            lv = levels[l].select(
+                "src", "v", F.col("sigma").alias("sv")
+            )
+            contrib = (
+                adj.select(F.col("u").alias("v"), F.col("v").alias("w"))
+                .join(maybe_broadcast(lv, n_state, broadcast_rows), "v")
+                .join(maybe_broadcast(up, n_state, broadcast_rows), ["src", "w"])
+                .groupBy("src", "v")
+                .agg(F.sum(F.col("sv") / F.col("sw") * (F.lit(1.0) + F.col("dw"))).alias("delta"))
+            )
+            delta = it.keep(
+                levels[l].select("src", "v")
+                .join(contrib, ["src", "v"], "left")
+                .select("src", "v", F.coalesce("delta", F.lit(0.0)).alias("delta"))
+            )
+            deltas.append(delta)
+        if deltas:
+            bc_src = deltas[0]
+            for d_ in deltas[1:]:
+                bc_src = bc_src.unionAll(d_)
+            agg = bc_src.groupBy("v").agg(F.sum("delta").alias("bc"))
+        else:
+            agg = verts.limit(0).select("v", F.lit(0.0).alias("bc"))
+        return it.result(it.keep(
+            verts.join(agg, "v", "left").select(
+                "v", F.round(F.coalesce("bc", F.lit(0.0)), 6).alias("bc")
+            )
+        ))
 
 
 def betweenness_pivots_sql(edges_sql: str, n_pivots: int = 16,

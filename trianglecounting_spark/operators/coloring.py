@@ -28,11 +28,10 @@ operators/mis.py (the two are the canonical symmetry-breaking pair).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from trianglecounting_spark.operators.mis import _h, _h_sql
 from trianglecounting_spark.operators.normalize import undirect
-from trianglecounting_spark.plans.cache import release_ids, tracked_checkpoint
+from trianglecounting_spark.plans.cache import IterationScope
 from trianglecounting_spark.plans.tuning import iteration_partitions, scoped_shuffle_partitions
 
 
@@ -44,85 +43,76 @@ def greedy_coloring(edges: DataFrame, max_iterations: int = 100) -> DataFrame:
     spark = edges.sparkSession
     m2 = edges.count() * 2
     n_part = iteration_partitions(spark, m2)
-    sym = (
-        undirect(edges)
-        .repartition(n_part, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    vertices = sym.select(F.col("src").alias("v")).distinct()
-    und = vertices
-    colored = None  # accumulated (v, color)
-    prev_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for _ in range(max_iterations):
-            if und.limit(1).count() == 0:
-                break
-            # readiness: no uncolored neighbor with smaller priority key
-            act = (
-                sym.join(und.withColumnRenamed("v", "src"), "src")
-                .join(und.withColumnRenamed("v", "dst"), "dst")
-                .select("src", "dst")
-            )
-            nbr_min = act.groupBy(F.col("src").alias("v")).agg(
-                F.min(F.struct(_h(F.col("dst")).alias("h"), F.col("dst").alias("v")))
-                .alias("mn")
-            )
-            ready = (
-                und.join(nbr_min, "v", "left")
-                .where(
-                    F.col("mn").isNull()
-                    | (F.struct(_h(F.col("v")).alias("h"), F.col("v").alias("v"))
-                       < F.col("mn"))
+    with IterationScope(spark) as it:
+        sym = it.cache(undirect(edges).repartition(n_part, "src"))
+        vertices = sym.select(F.col("src").alias("v")).distinct()
+        und = vertices
+        colored = None  # accumulated (v, color)
+        with scoped_shuffle_partitions(spark, n_part):
+            for _ in range(max_iterations):
+                if und.limit(1).count() == 0:
+                    break
+                # readiness: no uncolored neighbor with smaller priority key
+                act = (
+                    sym.join(und.withColumnRenamed("v", "src"), "src")
+                    .join(und.withColumnRenamed("v", "dst"), "dst")
+                    .select("src", "dst")
                 )
-                .select("v")
-            )
-            # mex over already-colored neighbors' colors
-            if colored is None:
-                newly = ready.select("v", F.lit(0).cast("long").alias("color"))
-            else:
-                nbr_colors = (
-                    sym.join(ready.withColumnRenamed("v", "src"), "src")
-                    .join(
-                        colored.select(F.col("v").alias("dst"), "color"), "dst"
+                nbr_min = act.groupBy(F.col("src").alias("v")).agg(
+                    F.min(F.struct(_h(F.col("dst")).alias("h"), F.col("dst").alias("v")))
+                    .alias("mn")
+                )
+                ready = (
+                    und.join(nbr_min, "v", "left")
+                    .where(
+                        F.col("mn").isNull()
+                        | (F.struct(_h(F.col("v")).alias("h"), F.col("v").alias("v"))
+                           < F.col("mn"))
                     )
-                    .groupBy(F.col("src").alias("v"))
-                    .agg(F.collect_set("color").alias("cs"))
+                    .select("v")
                 )
-                newly = (
-                    ready.join(nbr_colors, "v", "left")
-                    .select(
-                        "v",
-                        F.when(F.col("cs").isNull(), F.lit(0).cast("long"))
-                        .otherwise(
-                            F.filter(
-                                F.sequence(
-                                    F.lit(0).cast("long"),
-                                    F.size("cs").cast("long"),
-                                ),
-                                lambda x: ~F.array_contains(F.col("cs"), x),
-                            )[0]
+                # mex over already-colored neighbors' colors
+                if colored is None:
+                    newly = ready.select("v", F.lit(0).cast("long").alias("color"))
+                else:
+                    nbr_colors = (
+                        sym.join(ready.withColumnRenamed("v", "src"), "src")
+                        .join(
+                            colored.select(F.col("v").alias("dst"), "color"), "dst"
                         )
-                        .alias("color"),
+                        .groupBy(F.col("src").alias("v"))
+                        .agg(F.collect_set("color").alias("cs"))
                     )
+                    newly = (
+                        ready.join(nbr_colors, "v", "left")
+                        .select(
+                            "v",
+                            F.when(F.col("cs").isNull(), F.lit(0).cast("long"))
+                            .otherwise(
+                                F.filter(
+                                    F.sequence(
+                                        F.lit(0).cast("long"),
+                                        F.size("cs").cast("long"),
+                                    ),
+                                    lambda x: ~F.array_contains(F.col("cs"), x),
+                                )[0]
+                            )
+                            .alias("color"),
+                        )
+                    )
+                prev = (und, colored)
+                und = it.keep(und.join(ready, "v", "left_anti"))
+                colored = it.keep(newly if colored is None else colored.unionAll(newly))
+                it.release(*prev)
+            else:
+                raise RuntimeError(
+                    f"coloring did not converge in {max_iterations} rounds"
                 )
-            colored = newly if colored is None else colored.unionAll(newly)
-            und = und.join(ready, "v", "left_anti")
-            und, ids_u = tracked_checkpoint(und)
-            colored, ids_c = tracked_checkpoint(colored)
-            release_ids(spark, prev_ids)
-            prev_ids = ids_u | ids_c
-        else:
-            sym.unpersist()
-            raise RuntimeError(
-                f"coloring did not converge in {max_iterations} rounds"
-            )
-    out = colored if colored is not None else vertices.select(
-        "v", F.lit(0).cast("long").alias("color")
-    ).limit(0)
-    out, _ = tracked_checkpoint(out)
-    sym.unpersist()
-    release_ids(spark, prev_ids)
-    return out
+        return it.result(it.keep(
+            colored if colored is not None else vertices.select(
+                "v", F.lit(0).cast("long").alias("color")
+            ).limit(0)
+        ))
 
 
 def greedy_coloring_unrolled_sql(edges_sql: str, rounds: int = 30) -> str:

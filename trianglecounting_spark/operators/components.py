@@ -47,10 +47,9 @@ import math
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from trianglecounting_spark.operators.normalize import undirect
-from trianglecounting_spark.plans.cache import release_ids, tracked_checkpoint
+from trianglecounting_spark.plans.cache import IterationScope
 from trianglecounting_spark.plans.checkpoint import IterationCheckpointer
 from trianglecounting_spark.plans.tuning import (
     BROADCAST_ROWS,
@@ -128,66 +127,53 @@ def connected_components(
                 out = pd.DataFrame({"v": vs.ids, "component": vs.ids[label]})
             return spark.createDataFrame(out, "v long, component long")
 
-    vertices = (
-        edges.select(F.explode(F.array("u", "v")).alias("v")).distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    cur = undirect(edges).distinct()
-    start = 0
-    if checkpointer is not None:
-        restored = checkpointer.restore()
-        if restored is not None:
-            start, cur = restored
-    cur, cur_ids = tracked_checkpoint(cur)
-    n_cur = cur.count()
-    with scoped_shuffle_partitions(spark, iteration_partitions(spark, 2 * n_cur)):
-        for k in range(start + 1, max_iterations + 1):
-            # large-star needs the symmetric closure of the current pointer
-            # graph; duplicates don't change mins, and _large_star/_small_star
-            # dedup their outputs, so no distinct here.
-            sym = cur.unionAll(
-                cur.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-            )
-            after_large = _large_star(sym)
-            # tracked localCheckpoint (eager) truncates lineage — without it
-            # each round's plan contains all previous rounds and planning grows
-            # superlinearly — and lets us release round k-1's blocks on time.
-            after_small, next_ids = tracked_checkpoint(_small_star(after_large))
-            # Fixpoint check: both sides are distinct sets, so equal size +
-            # zero rows missing from `cur` ⇒ equal sets. The size probe is a
-            # near-free count on the just-materialized checkpoint; the
-            # membership join runs ONLY when sizes agree (i.e. at most the
-            # final round plus rare coincidences) — early rounds pay one
-            # metadata-cheap action, not a join.
-            n_next = after_small.count()
-            if n_next != n_cur:
-                changed = True
-            else:
-                added = (
-                    after_small.join(cur, ["src", "dst"], "left_anti")
-                    .limit(1)
-                    .count()
+    with IterationScope(spark, checkpointer) as it:
+        vertices = it.cache(
+            edges.select(F.explode(F.array("u", "v")).alias("v")).distinct()
+        )
+        start, cur = it.restore(undirect(edges).distinct())
+        cur = it.keep(cur)
+        n_cur = cur.count()
+        with scoped_shuffle_partitions(spark, iteration_partitions(spark, 2 * n_cur)):
+            for k in range(start + 1, max_iterations + 1):
+                # large-star needs the symmetric closure of the current pointer
+                # graph; duplicates don't change mins, and _large_star/_small_star
+                # dedup their outputs, so no distinct here.
+                sym = cur.unionAll(
+                    cur.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
                 )
-                changed = added > 0
-            if checkpointer is not None:
-                after_small = checkpointer.maybe_save(k, after_small)
-            # round k is durable and the probe has read round k-1 — release it
-            release_ids(spark, cur_ids)
-            cur, cur_ids, n_cur = after_small, next_ids, n_next
-            if not changed:
-                break
-    # At fixpoint cur is (v, component_min) for every non-minimum vertex;
-    # component minima point at themselves.
-    labels = cur.select(F.col("src").alias("v"), F.col("dst").alias("component"))
-    out, _ = tracked_checkpoint(
-        vertices.join(labels, "v", "left")
-        .select("v", F.coalesce("component", F.col("v")).cast("long").alias("component"))
-    )
-    # the result is materialized — the vertex cache and the final round's
-    # pointer blocks are no longer referenced
-    vertices.unpersist()
-    release_ids(spark, cur_ids)
-    return out
+                # the keep (eager localCheckpoint) truncates lineage — without
+                # it each round's plan contains all previous rounds and planning
+                # grows superlinearly
+                after_small = it.keep(_small_star(_large_star(sym)), k)
+                # Fixpoint check: both sides are distinct sets, so equal size +
+                # zero rows missing from `cur` ⇒ equal sets. The size probe is a
+                # near-free count on the just-materialized checkpoint; the
+                # membership join runs ONLY when sizes agree (i.e. at most the
+                # final round plus rare coincidences) — early rounds pay one
+                # metadata-cheap action, not a join.
+                n_next = after_small.count()
+                if n_next != n_cur:
+                    changed = True
+                else:
+                    added = (
+                        after_small.join(cur, ["src", "dst"], "left_anti")
+                        .limit(1)
+                        .count()
+                    )
+                    changed = added > 0
+                # round k is durable and the probe has read round k-1 — release it
+                it.release(cur)
+                cur, n_cur = after_small, n_next
+                if not changed:
+                    break
+        # At fixpoint cur is (v, component_min) for every non-minimum vertex;
+        # component minima point at themselves.
+        labels = cur.select(F.col("src").alias("v"), F.col("dst").alias("component"))
+        return it.result(it.keep(
+            vertices.join(labels, "v", "left")
+            .select("v", F.coalesce("component", F.col("v")).cast("long").alias("component"))
+        ))
 
 
 def cc_minlabel_unrolled_sql(edges_sql: str, rounds: int = 20) -> str:
@@ -263,32 +249,31 @@ def attack_tolerance(
 
     spark = edges.sparkSession
     sym = undirect(edges)
-    deg = sym.groupBy(F.col("src").alias("v")).agg(
-        F.count(F.lit(1)).cast("long").alias("deg")
-    )
-    deg, deg_ids = tracked_checkpoint(deg)
-    n = deg.count()
-    ranked = scalable_dense_rank(
-        deg, [F.col("deg").desc(), F.col("v").asc()], ["v", "deg"], out_col="rn"
-    )
-    ranked, rk_ids = tracked_checkpoint(ranked)
     rows = []
-    for f in fracs:
-        k = math.ceil(f * n)
-        cut = ranked.where(F.col("rn") < k).select("v")
-        surv = edges.join(
-            cut.withColumnRenamed("v", "u"), "u", "left_anti"
-        ).join(cut, "v", "left_anti")
-        sizes = (
-            connected_components(surv)
-            .groupBy("component")
-            .agg(F.count(F.lit(1)).alias("size"))
-            .agg(F.coalesce(F.max("size"), F.lit(1)).cast("long").alias("g"))
+    with IterationScope(spark) as it:
+        deg = it.keep(
+            sym.groupBy(F.col("src").alias("v")).agg(
+                F.count(F.lit(1)).cast("long").alias("deg")
+            )
         )
-        giant = sizes.collect()[0]["g"]
-        rows.append((float(f), int(k), int(n - k), int(giant)))
-    release_ids(spark, deg_ids)
-    release_ids(spark, rk_ids)
+        n = deg.count()
+        ranked = it.keep(scalable_dense_rank(
+            deg, [F.col("deg").desc(), F.col("v").asc()], ["v", "deg"], out_col="rn"
+        ))
+        for f in fracs:
+            k = math.ceil(f * n)
+            cut = ranked.where(F.col("rn") < k).select("v")
+            surv = edges.join(
+                cut.withColumnRenamed("v", "u"), "u", "left_anti"
+            ).join(cut, "v", "left_anti")
+            sizes = (
+                connected_components(surv)
+                .groupBy("component")
+                .agg(F.count(F.lit(1)).alias("size"))
+                .agg(F.coalesce(F.max("size"), F.lit(1)).cast("long").alias("g"))
+            )
+            giant = sizes.collect()[0]["g"]
+            rows.append((float(f), int(k), int(n - k), int(giant)))
     # the one float division rides Spark's round (matches the oracle's
     # round text), not Python's banker's rounding
     return spark.createDataFrame(
@@ -390,7 +375,6 @@ def connected_components_incremental(
     |V|-row label table against the (tiny, broadcast) remap table.
     Output: ``(v, component)`` for every vertex in labels ∪ batch.
     """
-    spark = labels.sparkSession
     lab_u = labels.select(F.col("v").alias("u"), F.col("component").alias("cu"))
     lab_v = labels.select("v", F.col("component").alias("cv"))
     tagged = (
@@ -408,28 +392,26 @@ def connected_components_incremental(
         )
         .distinct()
     )
-    pairs, pair_ids = tracked_checkpoint(pairs)
-    # every vertex the result must cover: old labels + both batch endpoints
-    # (a batch vertex absent from labels starts as its own singleton)
-    batch_verts = new_edges.select(
-        F.explode(F.array("u", "v")).alias("v")
-    ).distinct()
-    base = labels.unionByName(
-        batch_verts.join(labels, "v", "left_anti").select(
-            "v", F.col("v").alias("component")
+    with IterationScope(labels.sparkSession) as it:
+        pairs = it.keep(pairs)
+        # every vertex the result must cover: old labels + both batch endpoints
+        # (a batch vertex absent from labels starts as its own singleton)
+        batch_verts = new_edges.select(
+            F.explode(F.array("u", "v")).alias("v")
+        ).distinct()
+        base = labels.unionByName(
+            batch_verts.join(labels, "v", "left_anti").select(
+                "v", F.col("v").alias("component")
+            )
         )
-    )
-    if pairs.limit(1).count() == 0:
-        release_ids(spark, pair_ids)
-        out, _ = tracked_checkpoint(base)
-        return out
-    remap = connected_components(pairs)  # (v=old label, component=new label)
-    remap = remap.select(
-        F.col("v").alias("component"), F.col("component").alias("__new")
-    )
-    out = base.join(F.broadcast(remap), "component", "left").select(
-        "v", F.coalesce("__new", F.col("component")).alias("component")
-    )
-    out, _ = tracked_checkpoint(out)
-    release_ids(spark, pair_ids)
-    return out
+        if pairs.limit(1).count() == 0:
+            return it.result(it.keep(base))
+        remap = connected_components(pairs)  # (v=old label, component=new label)
+        remap = remap.select(
+            F.col("v").alias("component"), F.col("component").alias("__new")
+        )
+        return it.result(it.keep(
+            base.join(F.broadcast(remap), "component", "left").select(
+                "v", F.coalesce("__new", F.col("component")).alias("component")
+            )
+        ))

@@ -30,9 +30,9 @@ rationals with granularity 2^-16 and total < 64, hence EXACTLY representable
 Scale notes: state ≤ m rows/vertex ⇒ the round join's output is
 Σ_v deg(v)·nnz(v) ≤ m·2m rows — the same O(m·|E|) bound HyperBall proves;
 keys are (v, j) pairs so reducer skew is mild even on hub vertices. Each
-round is checkpointed (``tracked_checkpoint``: eager, releases the previous
-round's blocks, resets degenerate origin stats), so no action replays
-lineage and the loop survives arbitrarily many rounds.
+round is kept in the call's ``IterationScope`` (eager localCheckpoint; the
+previous round's blocks released), so no action replays lineage and the
+loop survives arbitrarily many rounds.
 """
 
 from __future__ import annotations
@@ -40,8 +40,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from trianglecounting_spark.operators.normalize import undirect
-from trianglecounting_spark.plans.cache import tracked_checkpoint
-from trianglecounting_spark.plans.tuning import BROADCAST_ROWS
+from trianglecounting_spark.plans.cache import IterationScope
+from trianglecounting_spark.plans.tuning import BROADCAST_ROWS, maybe_broadcast
 
 M_REG = 64          # HLL registers per vertex (b = 6)
 ALPHA_64 = 0.709    # Flajolet et al. 2007 bias constant for m = 64
@@ -112,6 +112,36 @@ def _estimate_expr() -> str:
     )
 
 
+def _initial_state(it: IterationScope, edges: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """``(sym, state)``: the symmetric edge table, held for the call, and the
+    kept register state of every vertex's distance-0 ball (itself)."""
+    j_expr, rho_expr = _register_exprs()
+    sym = it.hold(undirect(edges).localCheckpoint(eager=False))
+    verts = sym.select(F.col("src").alias("v")).distinct()
+    state = it.keep(verts.select(
+        "v", F.expr(j_expr).cast("int").alias("j"), F.expr(rho_expr).cast("int").alias("rho")
+    ))
+    return sym, state
+
+
+def _merge_round(
+    it: IterationScope, sym: DataFrame, state: DataFrame, rows: float,
+    budget: int = BROADCAST_ROWS,
+) -> DataFrame:
+    """One merge round — every vertex's registers max-merged with its
+    neighbors' — kept, with ``state`` released. ``state`` (``rows`` rows) is
+    broadcast into the neighbor join while it fits ``budget``."""
+    st = maybe_broadcast(state, rows, budget)
+    contrib = sym.join(st, sym["dst"] == st["v"]).select(
+        sym["src"].alias("v"), st["j"], st["rho"]
+    )
+    merged = it.keep(
+        state.unionAll(contrib).groupBy("v", "j").agg(F.max("rho").alias("rho"))
+    )
+    it.release(state)
+    return merged
+
+
 def hyperball_state(
     edges: DataFrame, t: int, broadcast_rows: int = BROADCAST_ROWS
 ) -> DataFrame:
@@ -122,24 +152,12 @@ def hyperball_state(
     join while that bound fits ``broadcast_rows`` (size-aware; shuffle join
     at web scale), so a merge round is one narrow pass over the symmetric
     edge table + one map-side-combined max aggregate."""
-    j_expr, rho_expr = _register_exprs()
-    sym = undirect(edges).localCheckpoint(eager=False)
-    verts = sym.select(F.col("src").alias("v")).distinct()
-    state = verts.select(
-        "v", F.expr(j_expr).cast("int").alias("j"), F.expr(rho_expr).cast("int").alias("rho")
-    )
-    state, _ = tracked_checkpoint(state)
-    small = state.count() * M_REG <= broadcast_rows
-    for _ in range(t):
-        st = F.broadcast(state) if small else state
-        contrib = sym.join(st, sym["dst"] == st["v"]).select(
-            sym["src"].alias("v"), st["j"], st["rho"]
-        )
-        merged = (
-            state.unionAll(contrib).groupBy("v", "j").agg(F.max("rho").alias("rho"))
-        )
-        state, _ = tracked_checkpoint(merged)
-    return state
+    with IterationScope(edges.sparkSession) as it:
+        sym, state = _initial_state(it, edges)
+        rows = state.count() * M_REG
+        for _ in range(t):
+            state = _merge_round(it, sym, state, rows, broadcast_rows)
+        return it.result(state)
 
 
 def hyperball_balls(edges: DataFrame, t: int) -> DataFrame:
@@ -159,15 +177,6 @@ def neighborhood_function(
     """ANF curve [(t, N̂(t))] for t = 0..t_max, N̂(t) = Σ_v |B(v,t)| — the
     driver-side report (one scalar per t; each t's state reuses the previous
     round's checkpoint, so the whole curve costs one pass of t_max rounds)."""
-    j_expr, rho_expr = _register_exprs()
-    sym = undirect(edges).localCheckpoint(eager=False)
-    verts = sym.select(F.col("src").alias("v")).distinct()
-    state = verts.select(
-        "v", F.expr(j_expr).cast("int").alias("j"), F.expr(rho_expr).cast("int").alias("rho")
-    )
-    state, _ = tracked_checkpoint(state)
-    curve: list[tuple[int, float]] = []
-
     def nf(st: DataFrame) -> float:
         aggs = st.groupBy("v").agg(
             F.count(F.lit(1)).alias("nnz"),
@@ -178,18 +187,13 @@ def neighborhood_function(
         ).collect()[0]
         return float(row["nf"])
 
-    small = state.count() * M_REG <= broadcast_rows
-    curve.append((0, nf(state)))
-    for t in range(1, t_max + 1):
-        st = F.broadcast(state) if small else state
-        contrib = sym.join(st, sym["dst"] == st["v"]).select(
-            sym["src"].alias("v"), st["j"], st["rho"]
-        )
-        merged = (
-            state.unionAll(contrib).groupBy("v", "j").agg(F.max("rho").alias("rho"))
-        )
-        state, _ = tracked_checkpoint(merged)
-        curve.append((t, nf(state)))
+    with IterationScope(edges.sparkSession) as it:
+        sym, state = _initial_state(it, edges)
+        rows = state.count() * M_REG
+        curve = [(0, nf(state))]
+        for t in range(1, t_max + 1):
+            state = _merge_round(it, sym, state, rows, broadcast_rows)
+            curve.append((t, nf(state)))
     return curve
 
 
@@ -244,39 +248,27 @@ def _ball_delta_accumulate(edges: DataFrame, t_max: int, weight: str) -> DataFra
     they are kept as-is — the SQL oracles do the identical arithmetic, and
     truncation/clamping choices would be estimator policy, not correctness.
     """
-    j_expr, rho_expr = _register_exprs()
-    sym = undirect(edges).localCheckpoint(eager=False)
-    verts = sym.select(F.col("src").alias("v")).distinct()
-    state = verts.select(
-        "v", F.expr(j_expr).cast("int").alias("j"), F.expr(rho_expr).cast("int").alias("rho")
-    )
-    state, _ = tracked_checkpoint(state)
-
     def ests(st: DataFrame) -> DataFrame:
         return st.groupBy("v").agg(
             F.count(F.lit(1)).alias("nnz"),
             F.sum(F.expr("1.0 / power(2.0, rho)")).alias("snz"),
         ).select("v", F.expr(_estimate_expr()).alias("b"))
 
-    prev = ests(state)
-    acc = prev.select("v", F.lit(0.0).alias("h"), F.col("b").alias("prev_b"))
-    acc, _ = tracked_checkpoint(acc)
-    for t in range(1, t_max + 1):
-        contrib = sym.join(state, sym["dst"] == state["v"]).select(
-            sym["src"].alias("v"), state["j"], state["rho"]
+    with IterationScope(edges.sparkSession) as it:
+        sym, state = _initial_state(it, edges)
+        acc = it.keep(
+            ests(state).select("v", F.lit(0.0).alias("h"), F.col("b").alias("prev_b"))
         )
-        merged = (
-            state.unionAll(contrib).groupBy("v", "j").agg(F.max("rho").alias("rho"))
-        )
-        state, _ = tracked_checkpoint(merged)
-        cur = ests(state)
-        delta = F.col("b") - F.col("prev_b")
-        step = delta / F.lit(float(t)) if weight == "inv" else delta * F.lit(float(t))
-        acc = acc.join(cur, "v").select(
-            "v", (F.col("h") + step).alias("h"), F.col("b").alias("prev_b")
-        )
-        acc, _ = tracked_checkpoint(acc)
-    return acc
+        for t in range(1, t_max + 1):
+            state = _merge_round(it, sym, state, float("inf"))
+            delta = F.col("b") - F.col("prev_b")
+            step = delta / F.lit(float(t)) if weight == "inv" else delta * F.lit(float(t))
+            new_acc = it.keep(acc.join(ests(state), "v").select(
+                "v", (F.col("h") + step).alias("h"), F.col("b").alias("prev_b")
+            ))
+            it.release(acc)
+            acc = new_acc
+        return it.result(acc)
 
 
 # Shared final-projection text for closeness: farness f = Σ t·Δb, reachable

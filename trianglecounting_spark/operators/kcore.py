@@ -25,23 +25,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from trianglecounting_spark.plans.cache import (
-    barrier_checkpoint,
-    persistent_rdd_ids,
-    release_ids,
-    tracked_checkpoint,
-)
+from trianglecounting_spark.plans.cache import IterationScope
 from trianglecounting_spark.plans.tuning import BROADCAST_ROWS, iteration_partitions
 from trianglecounting_spark.plans.vertex_state import VertexState, fits_driver
-
-# Reliable-checkpoint barrier cadence for deep peel cascades. localCheckpoint
-# does NOT cut the underlying RDD DAG, and a driver-side per-job traversal
-# walks lineage PATHS — O(refs^depth). With this loop's ≥3 state references
-# per round, a ~20-round chain cascade at sf0.1 pinned the driver in
-# BigInteger stats arithmetic for >25 min while the bulk peel took 23 s
-# (measured round 5); a file barrier every 12 rounds caps the walkable depth,
-# same contract as operators/scc.py's floods.
-_BARRIER_EVERY = 12
 
 
 def _peel_once(cur: DataFrame, k: int) -> DataFrame:
@@ -55,32 +41,27 @@ def _peel_once(cur: DataFrame, k: int) -> DataFrame:
 
 
 def kcore(edges: DataFrame, k: int, max_iterations: int = 100) -> DataFrame:
-    """Edges of the k-core subgraph ``(u, v)`` with u < v. Runs to fixpoint."""
-    spark = edges.sparkSession
-    cur, cur_ids = tracked_checkpoint(edges.select("u", "v"))
-    n_cur = cur.count()
-    for _ in range(max_iterations):
-        before = persistent_rdd_ids(spark)
-        nxt, nxt_ids = tracked_checkpoint(_peel_once(cur, k), before=before)
-        n_nxt = nxt.count()
-        release_ids(spark, cur_ids)
-        cur, cur_ids = nxt, nxt_ids
-        if n_nxt == n_cur:
-            break
-        n_cur = n_nxt
-    return cur
+    """Edges of the k-core subgraph ``(u, v)`` with u < v, peeled until a
+    round drops nothing or ``max_iterations`` rounds have run."""
+    with IterationScope(edges.sparkSession) as it:
+        cur = it.keep(edges.select("u", "v"))
+        n_cur = cur.count()
+        for _ in range(max_iterations):
+            nxt = it.keep(_peel_once(cur, k))
+            n_nxt = nxt.count()
+            it.release(cur)
+            cur = nxt
+            if n_nxt == n_cur:
+                break
+            n_cur = n_nxt
+        return it.result(cur)
 
 
 def kcore_rounds(edges: DataFrame, k: int, rounds: int) -> DataFrame:
-    """Exactly `rounds` peels — the deterministic oracle-matched contract."""
-    spark = edges.sparkSession
-    cur, cur_ids = tracked_checkpoint(edges.select("u", "v"))
-    for _ in range(rounds):
-        before = persistent_rdd_ids(spark)
-        cur, nxt_ids = tracked_checkpoint(_peel_once(cur, k), before=before)
-        release_ids(spark, cur_ids)
-        cur_ids = nxt_ids
-    return cur
+    """Exactly ``rounds`` peels — the deterministic oracle-matched contract.
+    Peels past the fixpoint remove nothing, so this is ``kcore`` capped at
+    ``rounds``."""
+    return kcore(edges, k, max_iterations=rounds)
 
 
 def kcore_unrolled_sql(edges_sql: str, k: int, rounds: int) -> str:
@@ -123,8 +104,8 @@ def kcore_incremental(
     * per-round shuffle volume is the decrement aggregate,
       O(edges incident to R), not O(|survivors|).
 
-    Each round checkpoints both states (eager localCheckpoint, tracked),
-    with a reliable-file barrier every ``_BARRIER_EVERY`` rounds.
+    Each round keeps both states in the call's ``IterationScope``, with a
+    reliable-file barrier every ``cache.BARRIER_EVERY`` rounds.
 
     Bulk-vs-delta, MEASURED (round 5, sf0.1 core = 1.196 M edges, local[32]):
     unlike k-truss — whose bulk round re-runs the triangle kernel and loses
@@ -140,57 +121,48 @@ def kcore_incremental(
     from trianglecounting_spark.operators.normalize import degrees
 
     spark = edges.sparkSession
-    e_state, e_ids = tracked_checkpoint(edges.select("u", "v"))
-    n_part = iteration_partitions(spark, e_state.count())
-    d_state, d_ids = tracked_checkpoint(
-        degrees(e_state).repartition(n_part, "v")
-    )
-
-    for _it in range(max_iterations):
-        removed = d_state.where(F.col("deg") < k).select("v")
-        if removed.count() == 0:
-            break
-        ru = F.broadcast(removed.select(F.col("v").alias("u"), F.lit(1).alias("__du")))
-        rv = F.broadcast(removed.select("v", F.lit(1).alias("__dv")))
-        flagged = e_state.join(ru, "u", "left").join(rv, "v", "left")
-        new_e_plan = flagged.where(
-            F.col("__du").isNull() & F.col("__dv").isNull()
-        ).select("u", "v")
-        # one-dead-endpoint edges decrement the OTHER (surviving) endpoint
-        dec = (
-            flagged.where(F.col("__du").isNotNull() & F.col("__dv").isNull())
-            .select(F.col("v"))
-            .unionAll(
-                flagged.where(
-                    F.col("__dv").isNotNull() & F.col("__du").isNull()
-                ).select(F.col("u").alias("v"))
+    with IterationScope(spark) as it:
+        e_state = it.keep(edges.select("u", "v"))
+        n_part = iteration_partitions(spark, e_state.count())
+        d_state = it.keep(degrees(e_state).repartition(n_part, "v"))
+        for r in range(1, max_iterations + 1):
+            removed = d_state.where(F.col("deg") < k).select("v")
+            if removed.count() == 0:
+                break
+            ru = F.broadcast(removed.select(F.col("v").alias("u"), F.lit(1).alias("__du")))
+            rv = F.broadcast(removed.select("v", F.lit(1).alias("__dv")))
+            flagged = e_state.join(ru, "u", "left").join(rv, "v", "left")
+            new_e_plan = flagged.where(
+                F.col("__du").isNull() & F.col("__dv").isNull()
+            ).select("u", "v")
+            # one-dead-endpoint edges decrement the OTHER (surviving) endpoint
+            dec = (
+                flagged.where(F.col("__du").isNotNull() & F.col("__dv").isNull())
+                .select(F.col("v"))
+                .unionAll(
+                    flagged.where(
+                        F.col("__dv").isNotNull() & F.col("__du").isNull()
+                    ).select(F.col("u").alias("v"))
+                )
+                .groupBy("v")
+                .agg(F.count(F.lit(1)).alias("__dec"))
             )
-            .groupBy("v")
-            .agg(F.count(F.lit(1)).alias("__dec"))
-        )
-        new_d_plan = (
-            d_state.where(F.col("deg") >= k)
-            .join(dec, "v", "left")
-            .select(
-                "v",
-                (F.col("deg") - F.coalesce("__dec", F.lit(0)))
-                .cast("long")
-                .alias("deg"),
+            new_d_plan = (
+                d_state.where(F.col("deg") >= k)
+                .join(dec, "v", "left")
+                .select(
+                    "v",
+                    (F.col("deg") - F.coalesce("__dec", F.lit(0)))
+                    .cast("long")
+                    .alias("deg"),
+                )
+                .repartition(n_part, "v")
             )
-            .repartition(n_part, "v")
-        )
-        before = persistent_rdd_ids(spark)
-        if (_it + 1) % _BARRIER_EVERY == 0:
-            new_e, new_e_ids = barrier_checkpoint(new_e_plan)
-            new_d, new_d_ids = barrier_checkpoint(new_d_plan)
-        else:
-            new_e, new_e_ids = tracked_checkpoint(new_e_plan, before=before)
-            new_d, new_d_ids = tracked_checkpoint(new_d_plan)
-        release_ids(spark, e_ids | d_ids)
-        e_state, e_ids = new_e, new_e_ids
-        d_state, d_ids = new_d, new_d_ids
-    release_ids(spark, d_ids)
-    return e_state
+            new_e = it.keep(new_e_plan, r, barrier=True)
+            new_d = it.keep(new_d_plan, r, barrier=True)
+            it.release(e_state, d_state)
+            e_state, d_state = new_e, new_d
+        return it.result(e_state)
 
 
 def _h_index_agg(values_col: str) -> F.Column:
@@ -257,7 +229,7 @@ def coreness(
     * otherwise (web scale, |V| not driver-boundable): per-round shuffle
       join of adjacency against the h state + one hash aggregate with
       ``_h_index_agg`` (an in-group array sort), the h state checkpointed
-      per round (tracked, file barrier every ``_BARRIER_EVERY``).
+      per round (file barrier every ``cache.BARRIER_EVERY`` rounds).
 
     Both regimes run the identical synchronous integer recurrence, one
     round per pass, to the identical fixpoint (H is tie-order-independent),
@@ -278,34 +250,30 @@ def coreness(
             out = pd.DataFrame({"v": vs.ids, "coreness": h})
         return spark.createDataFrame(out, "v long, coreness long")
 
-    adj, adj_ids = tracked_checkpoint(adj_plan)
-    h, h_ids = tracked_checkpoint(
-        adj.groupBy("u")
-        .agg(F.count(F.lit(1)).cast("long").alias("h"))
-        .select(F.col("u").alias("v"), "h")
-    )
-    total = h.agg(F.sum("h")).collect()[0][0]
-    for it in range(1, max_iterations + 1):
-        hn = h.select(F.col("v").alias("__nbr"), F.col("h").alias("__nh"))
-        new_plan = (
-            adj.join(hn, F.col("v") == F.col("__nbr"))
-            .groupBy("u")
-            .agg(_h_index_agg("__nh").alias("h"))
+    with IterationScope(spark) as it:
+        adj = it.keep(adj_plan)
+        h = it.keep(
+            adj.groupBy("u")
+            .agg(F.count(F.lit(1)).cast("long").alias("h"))
             .select(F.col("u").alias("v"), "h")
         )
-        before = persistent_rdd_ids(spark)
-        if it % _BARRIER_EVERY == 0:
-            new_h, new_ids = barrier_checkpoint(new_plan)
-        else:
-            new_h, new_ids = tracked_checkpoint(new_plan, before=before)
-        new_total = new_h.agg(F.sum("h")).collect()[0][0]
-        release_ids(spark, h_ids)
-        h, h_ids = new_h, new_ids
-        if new_total == total:
-            break
-        total = new_total
-    release_ids(spark, adj_ids)
-    return h.select("v", F.col("h").alias("coreness"))
+        total = h.agg(F.sum("h")).collect()[0][0]
+        for r in range(1, max_iterations + 1):
+            hn = h.select(F.col("v").alias("__nbr"), F.col("h").alias("__nh"))
+            new_h = it.keep(
+                adj.join(hn, F.col("v") == F.col("__nbr"))
+                .groupBy("u")
+                .agg(_h_index_agg("__nh").alias("h"))
+                .select(F.col("u").alias("v"), "h"),
+                r, barrier=True,
+            )
+            new_total = new_h.agg(F.sum("h")).collect()[0][0]
+            it.release(h)
+            h = new_h
+            if new_total == total:
+                break
+            total = new_total
+        return it.result(h.select("v", F.col("h").alias("coreness")))
 
 
 def coreness_unrolled_sql(edges_sql: str, rounds: int) -> str:

@@ -39,17 +39,9 @@ from pyspark.sql import DataFrame, functions as F
 
 from trianglecounting_spark.operators.triangles import triangle_per_edge_support
 from trianglecounting_spark.plans import vertex_state
-from trianglecounting_spark.plans.cache import (
-    barrier_checkpoint,
-    persistent_rdd_ids,
-    release_ids,
-    tracked_checkpoint,
-)
+from trianglecounting_spark.plans.cache import IterationScope
 from trianglecounting_spark.plans.checkpoint import IterationCheckpointer
-from trianglecounting_spark.plans.tuning import BROADCAST_ROWS
-
-# delta-phase lineage-barrier cadence (see kcore.py's _BARRIER_EVERY)
-_KTRUSS_BARRIER_EVERY = 12
+from trianglecounting_spark.plans.tuning import maybe_broadcast
 
 
 def _peel_once(cur: DataFrame, k: int) -> DataFrame:
@@ -168,40 +160,29 @@ def ktruss(
     + the filter + a checkpoint, which ``checkpointer`` can snapshot."""
     from trianglecounting_spark.operators.normalize import orient_dodg
 
-    if checkpointer is None and edges.count() <= vertex_state.ENTRIES_PER_PARTITION:
-        # coalesce, not repartition: no shuffle job, and the block keeps its
-        # single partitioning, so a count of the result needs no exchange
-        # (4 Spark jobs for ``ktruss(...).count()`` instead of 6)
-        peel = _peel_in_one_task(k, max_iterations)
-        out, _ = tracked_checkpoint(
-            edges.select("u", "v").coalesce(1).mapInArrow(peel, "u long, v long")
-        )
-        return out
-    spark = edges.sparkSession
-    restored = checkpointer.restore() if checkpointer is not None else None
-    if restored is None:
-        start, cur = 0, orient_dodg(edges)
-    else:
-        start, cur = restored[0], _oriented_snapshot(restored[1])
-    cur, cur_ids = tracked_checkpoint(cur)
-    n_cur = cur.count()
-    for it in range(start + 1, max_iterations + 1):
-        # eager localCheckpoint: materialize + truncate lineage per round;
-        # tracked so the previous round's blocks AND the peel's kernel-internal
-        # adjacency/hub materializations are released deterministically
-        before = persistent_rdd_ids(spark)
-        nxt, nxt_ids = tracked_checkpoint(
-            _peel_once_oriented(cur, k, n_rows=n_cur), before=before
-        )
-        n_nxt = nxt.count()
-        if checkpointer is not None:
-            nxt = checkpointer.maybe_save(it, nxt)
-        release_ids(spark, cur_ids)
-        cur, cur_ids = nxt, nxt_ids
-        if n_nxt == n_cur:
-            break
-        n_cur = n_nxt
-    return _canon_uv(cur)
+    with IterationScope(edges.sparkSession, checkpointer) as it:
+        if checkpointer is None and edges.count() <= vertex_state.ENTRIES_PER_PARTITION:
+            # coalesce, not repartition: no shuffle job, and the block keeps its
+            # single partitioning, so a count of the result needs no exchange
+            # (4 Spark jobs for ``ktruss(...).count()`` instead of 6)
+            peel = _peel_in_one_task(k, max_iterations)
+            return it.result(it.keep(
+                edges.select("u", "v").coalesce(1).mapInArrow(peel, "u long, v long")
+            ))
+        start, cur = it.restore(orient_dodg(edges))
+        cur = it.keep(_oriented_snapshot(cur))
+        n_cur = cur.count()
+        for r in range(start + 1, max_iterations + 1):
+            # the keep also sweeps the peel's kernel-internal adjacency/hub
+            # materializations
+            nxt = it.keep(_peel_once_oriented(cur, k, n_rows=n_cur), r)
+            n_nxt = nxt.count()
+            it.release(cur)
+            cur = nxt
+            if n_nxt == n_cur:
+                break
+            n_cur = n_nxt
+        return it.result(_canon_uv(cur))
 
 
 def ktruss_rounds(edges: DataFrame, k: int, rounds: int) -> DataFrame:
@@ -278,7 +259,7 @@ def ktruss_incremental(
     * triangles losing 2-3 edges in one batch are deduplicated by the
       ``distinct`` on the lost-triangle triples.
 
-    Every round's state is an eager localCheckpoint (tracked), so no action
+    Every round's state is kept (eager localCheckpoint), so no action
     replays lineage.
     """
     from trianglecounting_spark.operators.normalize import orient_dodg
@@ -301,114 +282,96 @@ def ktruss_incremental(
     # the fixpoint/switch tests see the identical removal sizes.
     if k <= 2:
         return edges.select("u", "v")
-    cur, cur_ids = tracked_checkpoint(orient_dodg(edges))
-    n_cur = cur.count()
-    state = state_ids = None
-    rounds_used = 0
-    while rounds_used < max_iterations:
-        rounds_used += 1
-        before = persistent_rdd_ids(spark)
-        sup, sup_ids = tracked_checkpoint(
-            triangle_support_counts_oriented(cur, n_rows=n_cur), before=before
-        )
-        n_surv = sup.where(F.col("support") >= k - 2).count()
-        n_removed = n_cur - n_surv
-        if n_removed == 0:
-            release_ids(spark, sup_ids)
-            return _canon_uv(cur)
-        if n_removed <= delta_frac * max(n_surv, 1):
-            state, state_ids = tracked_checkpoint(
-                sup.repartition(n_part, "src", "dst"),
-                before=persistent_rdd_ids(spark) - sup_ids,
-            )
-            release_ids(spark, cur_ids | sup_ids)
-            break
-        nxt, nxt_ids = tracked_checkpoint(
-            sup.where(F.col("support") >= k - 2).select("src", "dst"),
-            before=persistent_rdd_ids(spark) - sup_ids,
-        )
-        release_ids(spark, cur_ids | sup_ids)
-        cur, cur_ids = nxt, nxt_ids
-        n_cur = n_surv
-    if state is None:  # hit max_iterations while still in bulk mode
-        return _canon_uv(cur)
+    with IterationScope(spark) as it:
+        cur = it.keep(orient_dodg(edges))
+        n_cur = cur.count()
+        state = None
+        rounds_used = 0
+        while rounds_used < max_iterations:
+            rounds_used += 1
+            sup = it.keep(triangle_support_counts_oriented(cur, n_rows=n_cur))
+            n_surv = sup.where(F.col("support") >= k - 2).count()
+            n_removed = n_cur - n_surv
+            if n_removed == 0:
+                return it.result(_canon_uv(cur))
+            if n_removed <= delta_frac * max(n_surv, 1):
+                state = it.keep(sup.repartition(n_part, "src", "dst"))
+                it.release(cur, sup)
+                break
+            nxt = it.keep(sup.where(F.col("support") >= k - 2).select("src", "dst"))
+            it.release(cur, sup)
+            cur = nxt
+            n_cur = n_surv
+        if state is None:  # hit max_iterations while still in bulk mode
+            return it.result(_canon_uv(cur))
 
-    # ---- delta phase: decrement-only rounds ----
-    for _it in range(rounds_used, max_iterations):
-        removed = state.where(F.col("support") < k - 2).select("src", "dst")
-        n_removed = removed.count()
-        if n_removed == 0:
-            break
-        survivors = state.where(F.col("support") >= k - 2)
-        cur_o = state.select("src", "dst")
-        r = F.broadcast(removed) if n_removed <= broadcast_rows else removed
+        # ---- delta phase: decrement-only rounds ----
+        for r in range(rounds_used + 1, max_iterations + 1):
+            removed = state.where(F.col("support") < k - 2).select("src", "dst")
+            n_removed = removed.count()
+            if n_removed == 0:
+                break
+            survivors = state.where(F.col("support") >= k - 2)
+            cur_o = state.select("src", "dst")
+            rm = maybe_broadcast(removed, n_removed, broadcast_rows)
 
-        e1 = cur_o.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        e2 = cur_o.select(F.col("src").alias("b2"), F.col("dst").alias("c"))
-        e3 = cur_o.select(F.col("src").alias("a3"), F.col("dst").alias("c3"))
-        r1 = r.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-        r2 = r.select(F.col("src").alias("b2"), F.col("dst").alias("c"))
-        r3 = r.select(F.col("src").alias("a3"), F.col("dst").alias("c3"))
+            e1 = cur_o.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+            e2 = cur_o.select(F.col("src").alias("b2"), F.col("dst").alias("c"))
+            e3 = cur_o.select(F.col("src").alias("a3"), F.col("dst").alias("c3"))
+            r1 = rm.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+            r2 = rm.select(F.col("src").alias("b2"), F.col("dst").alias("c"))
+            r3 = rm.select(F.col("src").alias("a3"), F.col("dst").alias("c3"))
 
-        def _close(wedges):
-            # closing-edge membership: keys (a,c) == state's (src, dst)
-            # partitioning, so only the wedge side moves
-            return wedges.join(
-                e3,
-                (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")),
-                "left_semi",
-            ).select("a", "b", "c")
-
-        lost = (
-            _close(r1.join(e2, F.col("b") == F.col("b2")))
-            .unionAll(_close(r2.join(e1, F.col("b") == F.col("b2"))))
-            .unionAll(
-                # R as the closing edge (a,c): attach the wedge through b
-                r3.join(e1, F.col("a") == F.col("a3"))
-                .join(
-                    e2,
-                    (F.col("b") == F.col("b2")) & (F.col("c3") == F.col("c")),
+            def _close(wedges):
+                # closing-edge membership: keys (a,c) == state's (src, dst)
+                # partitioning, so only the wedge side moves
+                return wedges.join(
+                    e3,
+                    (F.col("a") == F.col("a3")) & (F.col("c") == F.col("c3")),
                     "left_semi",
+                ).select("a", "b", "c")
+
+            lost = (
+                _close(r1.join(e2, F.col("b") == F.col("b2")))
+                .unionAll(_close(r2.join(e1, F.col("b") == F.col("b2"))))
+                .unionAll(
+                    # R as the closing edge (a,c): attach the wedge through b
+                    r3.join(e1, F.col("a") == F.col("a3"))
+                    .join(
+                        e2,
+                        (F.col("b") == F.col("b2")) & (F.col("c3") == F.col("c")),
+                        "left_semi",
+                    )
+                    .select("a", "b", F.col("c3").alias("c"))
                 )
-                .select("a", "b", F.col("c3").alias("c"))
+                .distinct()
             )
-            .distinct()
-        )
-        # all three edges of an (a<b<c)-ordered triangle are themselves
-        # rank-ascending, i.e. exactly the oriented rows of the state
-        dec = (
-            lost.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-            .unionAll(lost.select(F.col("b").alias("src"), F.col("c").alias("dst")))
-            .unionAll(lost.select(F.col("a").alias("src"), F.col("c").alias("dst")))
-            .groupBy("src", "dst")
-            .agg(F.count(F.lit(1)).alias("__lost"))
-        )
-        new_state_plan = (
-            survivors.join(dec, ["src", "dst"], "left")
-            .select(
-                "src",
-                "dst",
-                (F.col("support") - F.coalesce("__lost", F.lit(0)))
-                .cast("long")
-                .alias("support"),
+            # all three edges of an (a<b<c)-ordered triangle are themselves
+            # rank-ascending, i.e. exactly the oriented rows of the state
+            dec = (
+                lost.select(F.col("a").alias("src"), F.col("b").alias("dst"))
+                .unionAll(lost.select(F.col("b").alias("src"), F.col("c").alias("dst")))
+                .unionAll(lost.select(F.col("a").alias("src"), F.col("c").alias("dst")))
+                .groupBy("src", "dst")
+                .agg(F.count(F.lit(1)).alias("__lost"))
             )
-            .repartition(n_part, "src", "dst")
-        )
-        before = persistent_rdd_ids(spark)
-        # deep-cascade guard: localCheckpoint leaves the RDD DAG chained, and
-        # the driver's per-job lineage-path walk is O(refs^depth) — a file
-        # barrier every 12 delta rounds caps the depth (see kcore.py's
-        # _BARRIER_EVERY note for the measured blowup; same scc.py contract)
-        if (_it + 1) % _KTRUSS_BARRIER_EVERY == 0:
-            new_state, new_ids = barrier_checkpoint(new_state_plan)
-        else:
-            new_state, new_ids = tracked_checkpoint(new_state_plan, before=before)
-        release_ids(spark, state_ids)
-        state, state_ids = new_state, new_ids
-    out = state.where(F.col("support") >= k - 2).select(
-        F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
-    )
-    return out
+            new_state = it.keep(
+                survivors.join(dec, ["src", "dst"], "left")
+                .select(
+                    "src",
+                    "dst",
+                    (F.col("support") - F.coalesce("__lost", F.lit(0)))
+                    .cast("long")
+                    .alias("support"),
+                )
+                .repartition(n_part, "src", "dst"),
+                r, barrier=True,  # deep-cascade guard
+            )
+            it.release(state)
+            state = new_state
+        return it.result(state.where(F.col("support") >= k - 2).select(
+            F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
+        ))
 
 
 # ---------------------------------------------------------------------------
@@ -432,7 +395,7 @@ def trussness(edges: DataFrame, max_iterations: int = 200) -> DataFrame:
     incidence table (3 rows per triangle, each edge paired with its two
     partner edges) is built ONCE from the Arrow enumeration kernel and
     checkpointed; each round joins the incidence against the per-edge
-    state — BROADCAST when the state is ≤ ``broadcast_rows`` (size-aware;
+    state — BROADCAST when the state is ≤ ``tuning.BROADCAST_ROWS`` (size-aware;
     shuffle joins at web scale) — and computes the per-edge H with
     ``kcore._h_index_agg`` (one hash aggregate with an in-group array
     sort) instead of a partition-wide ``row_number`` window: no full sort
@@ -441,7 +404,7 @@ def trussness(edges: DataFrame, max_iterations: int = 200) -> DataFrame:
     partitioning-invariant (h-index is order-independent under ties).
     Convergence on sum(t), which strictly decreases on every non-fixpoint
     round. State checkpointed per round, barrier every
-    ``_KTRUSS_BARRIER_EVERY`` rounds.
+    ``cache.BARRIER_EVERY`` rounds.
 
     Scale: per-round cost is O(3·#triangles) join rows — the same volume
     the per-edge support pass already touches; rounds observed ≤ ~15 on
@@ -451,66 +414,53 @@ def trussness(edges: DataFrame, max_iterations: int = 200) -> DataFrame:
     from trianglecounting_spark.operators.kcore import _h_index_agg
     from trianglecounting_spark.operators.triangles import triangle_enumerate_kernel
 
-    broadcast_rows = BROADCAST_ROWS
-    spark = edges.sparkSession
-    tri = triangle_enumerate_kernel(edges)
+    with IterationScope(edges.sparkSession) as it:
+        tri = triangle_enumerate_kernel(edges)
 
-    def pair(x, y):
-        return F.least(x, y), F.greatest(x, y)
+        def pair(x, y):
+            return F.least(x, y), F.greatest(x, y)
 
-    # 3 incidence rows per triangle: (edge, other-edge-1, other-edge-2)
-    def inc_row(e, o1, o2):
-        (eu, ev), (a1, b1), (a2, b2) = pair(*e), pair(*o1), pair(*o2)
-        return tri.select(
-            eu.alias("u"), ev.alias("v"),
-            a1.alias("o1u"), b1.alias("o1v"),
-            a2.alias("o2u"), b2.alias("o2v"),
+        # 3 incidence rows per triangle: (edge, other-edge-1, other-edge-2)
+        def inc_row(e, o1, o2):
+            (eu, ev), (a1, b1), (a2, b2) = pair(*e), pair(*o1), pair(*o2)
+            return tri.select(
+                eu.alias("u"), ev.alias("v"),
+                a1.alias("o1u"), b1.alias("o1v"),
+                a2.alias("o2u"), b2.alias("o2v"),
+            )
+
+        ab, ac, bc = (F.col("a"), F.col("b")), (F.col("a"), F.col("c")), (F.col("b"), F.col("c"))
+        inc = it.keep(
+            inc_row(ab, ac, bc).unionAll(inc_row(ac, ab, bc)).unionAll(inc_row(bc, ab, ac))
         )
-
-    ab, ac, bc = (F.col("a"), F.col("b")), (F.col("a"), F.col("c")), (F.col("b"), F.col("c"))
-    inc_plan = (
-        inc_row(ab, ac, bc).unionAll(inc_row(ac, ab, bc)).unionAll(inc_row(bc, ab, ac))
-    )
-    inc, inc_ids = tracked_checkpoint(inc_plan)
-    t, t_ids = tracked_checkpoint(
-        inc.groupBy("u", "v").agg(F.count(F.lit(1)).cast("long").alias("t"))
-    )
-    small = t.count() <= broadcast_rows
-    total = t.agg(F.sum("t")).collect()[0][0]
-    for it in range(1, max_iterations + 1):
-        t1 = t.select(F.col("u").alias("o1u"), F.col("v").alias("o1v"),
-                      F.col("t").alias("t1"))
-        t2 = t.select(F.col("u").alias("o2u"), F.col("v").alias("o2v"),
-                      F.col("t").alias("t2"))
-        if small:
-            t1, t2 = F.broadcast(t1), F.broadcast(t2)
-        new_plan = (
-            inc.join(t1, ["o1u", "o1v"]).join(t2, ["o2u", "o2v"])
-            .withColumn("mv", F.least(F.col("t1"), F.col("t2")))
-            .groupBy("u", "v")
-            .agg(_h_index_agg("mv").alias("t"))
-        )
-        before = persistent_rdd_ids(spark)
-        if it % _KTRUSS_BARRIER_EVERY == 0:
-            new_t, new_ids = barrier_checkpoint(new_plan)
-        else:
-            new_t, new_ids = tracked_checkpoint(new_plan, before=before)
-        new_total = new_t.agg(F.sum("t")).collect()[0][0]
-        release_ids(spark, t_ids)
-        t, t_ids = new_t, new_ids
-        if new_total == total:
-            break
-        total = new_total
-    out_plan = (
-        edges.select("u", "v")
-        .join(t, ["u", "v"], "left")
-        .select("u", "v",
-                (F.coalesce(F.col("t"), F.lit(0)) + F.lit(2))
-                .cast("long").alias("trussness"))
-    )
-    out, _ = tracked_checkpoint(out_plan)
-    release_ids(spark, inc_ids | t_ids)
-    return out
+        t = it.keep(inc.groupBy("u", "v").agg(F.count(F.lit(1)).cast("long").alias("t")))
+        n_t = t.count()
+        total = t.agg(F.sum("t")).collect()[0][0]
+        for r in range(1, max_iterations + 1):
+            t1 = maybe_broadcast(t.select(F.col("u").alias("o1u"), F.col("v").alias("o1v"),
+                                          F.col("t").alias("t1")), n_t)
+            t2 = maybe_broadcast(t.select(F.col("u").alias("o2u"), F.col("v").alias("o2v"),
+                                          F.col("t").alias("t2")), n_t)
+            new_t = it.keep(
+                inc.join(t1, ["o1u", "o1v"]).join(t2, ["o2u", "o2v"])
+                .withColumn("mv", F.least(F.col("t1"), F.col("t2")))
+                .groupBy("u", "v")
+                .agg(_h_index_agg("mv").alias("t")),
+                r, barrier=True,
+            )
+            new_total = new_t.agg(F.sum("t")).collect()[0][0]
+            it.release(t)
+            t = new_t
+            if new_total == total:
+                break
+            total = new_total
+        return it.result(it.keep(
+            edges.select("u", "v")
+            .join(t, ["u", "v"], "left")
+            .select("u", "v",
+                    (F.coalesce(F.col("t"), F.lit(0)) + F.lit(2))
+                    .cast("long").alias("trussness"))
+        ))
 
 
 def trussness_unrolled_sql(edges_sql: str, rounds: int) -> str:

@@ -276,53 +276,51 @@ def simrank(directed_edges: DataFrame, iterations: int = 3, c: float = 0.8,
     web sample in the contract row), and the joins themselves are plain
     shuffles AQE handles. Per-round checkpoint keeps lineage flat.
     """
-    from trianglecounting_spark.plans.cache import release_ids, tracked_checkpoint
+    from trianglecounting_spark.plans.cache import IterationScope
 
-    spark = directed_edges.sparkSession
-    e = directed_edges.select("src", "dst").distinct().localCheckpoint(eager=True)
-    verts = (
-        e.select(F.col("src").alias("v"))
-        .unionAll(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("ind"))
-    diag = verts.select(
-        F.col("v").alias("a"), F.col("v").alias("b"), F.lit(1.0).alias("s")
-    )
-    state = diag
-    prev_ids: set[int] = set()
-    for _ in range(int(iterations)):
-        t = (
-            state.join(e.select(F.col("src").alias("a"),
-                                F.col("dst").alias("na")), "a")
-            .join(e.select(F.col("src").alias("b"),
-                           F.col("dst").alias("nb")), "b")
-            .groupBy(F.col("na").alias("a"), F.col("nb").alias("b"))
-            .agg(F.sum("s").alias("t"))
+    with IterationScope(directed_edges.sparkSession) as it:
+        # held, not kept: every round's state reads them again
+        e = it.hold(directed_edges.select("src", "dst").distinct().localCheckpoint(eager=True))
+        verts = it.hold(
+            e.select(F.col("src").alias("v"))
+            .unionAll(e.select(F.col("dst").alias("v")))
+            .distinct()
+            .localCheckpoint(eager=True)
         )
-        scored = (
-            t.where(F.col("a") != F.col("b"))
-            .join(indeg.select(F.col("dst").alias("a"),
-                               F.col("ind").alias("ia")), "a")
-            .join(indeg.select(F.col("dst").alias("b"),
-                               F.col("ind").alias("ib")), "b")
-            .select(
-                "a", "b",
-                F.round(
-                    F.lit(float(c)) * F.col("t") / (F.col("ia") * F.col("ib")),
-                    int(state_digits),
-                ).alias("s"),
+        indeg = e.groupBy("dst").agg(F.count(F.lit(1)).alias("ind"))
+        diag = verts.select(
+            F.col("v").alias("a"), F.col("v").alias("b"), F.lit(1.0).alias("s")
+        )
+        state = diag
+        for _ in range(int(iterations)):
+            t = (
+                state.join(e.select(F.col("src").alias("a"),
+                                    F.col("dst").alias("na")), "a")
+                .join(e.select(F.col("src").alias("b"),
+                               F.col("dst").alias("nb")), "b")
+                .groupBy(F.col("na").alias("a"), F.col("nb").alias("b"))
+                .agg(F.sum("s").alias("t"))
             )
-        )
-        state = scored.unionAll(diag)
-        state, new_ids = tracked_checkpoint(state)
-        release_ids(spark, prev_ids)
-        prev_ids = new_ids
-    out = state.where(
-        (F.col("a") != F.col("b")) & (F.col("s") > 0)
-    ).select("a", "b", F.round("s", int(out_digits)).alias("score"))
-    return out
+            scored = (
+                t.where(F.col("a") != F.col("b"))
+                .join(indeg.select(F.col("dst").alias("a"),
+                                   F.col("ind").alias("ia")), "a")
+                .join(indeg.select(F.col("dst").alias("b"),
+                                   F.col("ind").alias("ib")), "b")
+                .select(
+                    "a", "b",
+                    F.round(
+                        F.lit(float(c)) * F.col("t") / (F.col("ia") * F.col("ib")),
+                        int(state_digits),
+                    ).alias("s"),
+                )
+            )
+            new_state = it.keep(scored.unionAll(diag))
+            it.release(state)
+            state = new_state
+        return it.result(state.where(
+            (F.col("a") != F.col("b")) & (F.col("s") > 0)
+        ).select("a", "b", F.round("s", int(out_digits)).alias("score")))
 
 
 def simrank_unrolled_sql(edges_sql: str, iterations: int = 3, c: float = 0.8,

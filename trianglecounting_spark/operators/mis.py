@@ -30,13 +30,13 @@ hash reuses the portable counter-hash family from functions/sampling.py.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from trianglecounting_spark.operators.normalize import undirect
-from trianglecounting_spark.plans.cache import release_ids, tracked_checkpoint
+from trianglecounting_spark.plans.cache import IterationScope
 from trianglecounting_spark.plans.tuning import (
     BROADCAST_ROWS,
     iteration_partitions,
+    maybe_broadcast,
     scoped_shuffle_partitions,
 )
 
@@ -77,81 +77,70 @@ def maximal_independent_set(
     spark = edges.sparkSession
     m2 = edges.count() * 2
     n_part = iteration_partitions(spark, m2)
-    sym = (
-        undirect(edges)
-        .repartition(n_part, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    vertices = sym.select(F.col("src").alias("v")).distinct()
-    und, und_ids = tracked_checkpoint(vertices)
-    n_und = und.count()
-    mis = None  # accumulated winners (append-only, tiny per round)
-    mis_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for _ in range(max_iterations):
-            if n_und == 0:
-                break
-            small = n_und <= broadcast_rows
-
-            def _bc(df, _small=small):
-                return F.broadcast(df) if _small else df
-
-            # active edges: both endpoints still undecided
-            act = (
-                sym.join(_bc(und.withColumnRenamed("v", "src")), "src")
-                .join(_bc(und.withColumnRenamed("v", "dst")), "dst")
-                .select("src", "dst")
-            )
-            # per-vertex min neighbor priority over the active subgraph
-            nbr_min = act.groupBy(F.col("src").alias("v")).agg(
-                F.min(F.struct(_h(F.col("dst")).alias("h"), F.col("dst").alias("v")))
-                .alias("mn")
-            )
-            win_plan = (
-                und.join(nbr_min, "v", "left")
-                .where(
-                    F.col("mn").isNull()
-                    | (F.struct(_h(F.col("v")).alias("h"), F.col("v").alias("v"))
-                       < F.col("mn"))
+    with IterationScope(spark) as it:
+        sym = it.cache(undirect(edges).repartition(n_part, "src"))
+        vertices = sym.select(F.col("src").alias("v")).distinct()
+        und = it.keep(vertices)
+        n_und = und.count()
+        mis = None  # accumulated winners (append-only, tiny per round)
+        with scoped_shuffle_partitions(spark, n_part):
+            for _ in range(max_iterations):
+                if n_und == 0:
+                    break
+                # active edges: both endpoints still undecided
+                und_src, und_dst = (
+                    maybe_broadcast(und.withColumnRenamed("v", c), n_und, broadcast_rows)
+                    for c in ("src", "dst")
                 )
-                .select("v")
-            )
-            # materialize winners once: they are read 3× below (losers scan,
-            # undecided anti-join, MIS append)
-            win, win_ids = tracked_checkpoint(win_plan)
-            # losers: undecided neighbors of winners — one narrow sym scan,
-            # semi-joined with the undecided set so the broadcast below is
-            # bounded by |undecided| (the budget checked above), not |V|
-            lose = (
-                sym.join(_bc(win.withColumnRenamed("v", "src")), "src")
-                .select(F.col("dst").alias("v"))
-                .join(_bc(und), "v", "left_semi")
-                .distinct()
-            )
-            mis = win if mis is None else mis.unionAll(win)
-            new_und_plan = und.join(_bc(win.unionAll(lose)), "v", "left_anti")
-            new_und, ids_u = tracked_checkpoint(new_und_plan)
-            mis, ids_m = tracked_checkpoint(mis)
-            n_und = new_und.count()
-            release_ids(spark, und_ids | mis_ids | win_ids)
-            und, und_ids = new_und, ids_u
-            mis_ids = ids_m
-        else:
-            sym.unpersist()
-            raise RuntimeError(
-                f"MIS peel did not converge in {max_iterations} rounds"
-            )
-    out = vertices.join(
-        (mis if mis is not None else vertices.limit(0)).withColumn(
-            "in_mis", F.lit(1)
-        ),
-        "v",
-        "left",
-    ).select("v", F.coalesce("in_mis", F.lit(0)).cast("int").alias("in_mis"))
-    out, _ = tracked_checkpoint(out)
-    sym.unpersist()
-    release_ids(spark, und_ids | mis_ids)
-    return out
+                act = sym.join(und_src, "src").join(und_dst, "dst").select("src", "dst")
+                # per-vertex min neighbor priority over the active subgraph
+                nbr_min = act.groupBy(F.col("src").alias("v")).agg(
+                    F.min(F.struct(_h(F.col("dst")).alias("h"), F.col("dst").alias("v")))
+                    .alias("mn")
+                )
+                # materialize winners once: they are read 3× below (losers
+                # scan, undecided anti-join, MIS append)
+                win = it.keep(
+                    und.join(nbr_min, "v", "left")
+                    .where(
+                        F.col("mn").isNull()
+                        | (F.struct(_h(F.col("v")).alias("h"), F.col("v").alias("v"))
+                           < F.col("mn"))
+                    )
+                    .select("v")
+                )
+                # losers: undecided neighbors of winners — one narrow sym scan,
+                # semi-joined with the undecided set so the broadcast below is
+                # bounded by |undecided| (the budget checked above), not |V|
+                lose = (
+                    sym.join(
+                        maybe_broadcast(win.withColumnRenamed("v", "src"), n_und, broadcast_rows),
+                        "src",
+                    )
+                    .select(F.col("dst").alias("v"))
+                    .join(maybe_broadcast(und, n_und, broadcast_rows), "v", "left_semi")
+                    .distinct()
+                )
+                new_und = it.keep(und.join(
+                    maybe_broadcast(win.unionAll(lose), n_und, broadcast_rows), "v", "left_anti"
+                ))
+                new_mis = it.keep(win if mis is None else mis.unionAll(win))
+                n_und = new_und.count()
+                it.release(und, win, mis)
+                und, mis = new_und, new_mis
+            else:
+                raise RuntimeError(
+                    f"MIS peel did not converge in {max_iterations} rounds"
+                )
+        return it.result(it.keep(
+            vertices.join(
+                (mis if mis is not None else vertices.limit(0)).withColumn(
+                    "in_mis", F.lit(1)
+                ),
+                "v",
+                "left",
+            ).select("v", F.coalesce("in_mis", F.lit(0)).cast("int").alias("in_mis"))
+        ))
 
 
 def mis_unrolled_sql(edges_sql: str, rounds: int = 20) -> str:

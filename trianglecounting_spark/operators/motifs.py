@@ -59,7 +59,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from trianglecounting_spark.operators.normalize import orient_dodg, undirect
 from trianglecounting_spark.operators.triangles import triangle_enumerate_from_dodg
-from trianglecounting_spark.plans.tuning import BROADCAST_ROWS
+from trianglecounting_spark.plans.tuning import maybe_broadcast
 
 
 def four_clique_count(
@@ -71,24 +71,20 @@ def four_clique_count(
     extension joins) → kernel triangle list (a,b,c) in rank order → extend
     with x ∈ N⁺(c), keep iff (b,x) and (a,x) are DODG edges.
 
-    Round 6: when the DODG fits ``broadcast_rows`` (size-aware — the same
+    Round 6: when the DODG fits ``tuning.BROADCAST_ROWS`` (size-aware — the same
     budget class as the kernel's hub CSR), the three extension joins
     BROADCAST the edge table, so the large quads intermediate
     (Σ_tri outdeg(c) rows) is never exchanged — the extension fuses into
     one narrow stage downstream of the enumerate kernel. At web scale the
     joins fall back to the plain shuffles (AQE skew-splits a hot c).
     """
-    broadcast_rows = BROADCAST_ROWS
     d = orient_dodg(edges).localCheckpoint(eager=False)
-    small = d.count() <= broadcast_rows
-
-    def _b(df):
-        return F.broadcast(df) if small else df
-
+    n_d = d.count()
     tri = triangle_enumerate_from_dodg(d, num_partitions, hub_k)
-    dc = _b(d.select(F.col("src").alias("c"), F.col("dst").alias("x")))
-    db = _b(d.select(F.col("src").alias("b"), F.col("dst").alias("x")))
-    da = _b(d.select(F.col("src").alias("a"), F.col("dst").alias("x")))
+    dc, db, da = (
+        maybe_broadcast(d.select(F.col("src").alias(c), F.col("dst").alias("x")), n_d)
+        for c in "cba"
+    )
     quads = tri.join(dc, "c").join(db, ["b", "x"]).join(da, ["a", "x"])
     return quads.agg(F.count(F.lit(1)).cast("long").alias("four_cliques"))
 

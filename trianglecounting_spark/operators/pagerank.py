@@ -34,8 +34,9 @@ Absent from the reference (strictly a TC engine); mandated by the north_star.
       - the edge side is pre-partitioned by src and persisted once, so every
         iteration's rank join reuses that hash partitioning and only the
         rank table shuffles.
-      - lineage grows linearly with iterations → a tracked checkpoint every
-        5 steps (every step in ``tol`` mode), or the checkpointer's snapshot.
+      - lineage grows linearly with iterations → a kept checkpoint every
+        5 steps (every step in ``tol`` mode and with a checkpointer, whose
+        snapshots are taken of the kept state).
 
 The other functions here run their DataFrame loops at any size.
 
@@ -51,10 +52,9 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
-from pyspark.storagelevel import StorageLevel
 
 from trianglecounting_spark.operators.normalize import undirect
-from trianglecounting_spark.plans.cache import release_ids, tracked_checkpoint
+from trianglecounting_spark.plans.cache import IterationScope
 from trianglecounting_spark.plans.checkpoint import IterationCheckpointer
 from trianglecounting_spark.plans.tuning import (
     BROADCAST_ROWS,
@@ -134,69 +134,55 @@ def pagerank(
                 out = pd.DataFrame({"v": vs.ids, "score": rank})
             return spark.createDataFrame(out, "v long, score double")
 
-    sym = undirect(edges)
-    out_deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    n = out_deg.count()
-    m2 = edges.count() * 2  # rows of the symmetric edge table
-    n_part = iteration_partitions(spark, m2)
-    # pre-partition the (big) edge side by the join key and cache it: every
-    # iteration's rank join then reuses this distribution and only the
-    # (|V|-row) rank table shuffles — 1 big exchange total instead of 1 per
-    # iteration. Partition count matches the per-iteration shuffles so the
-    # rank join is co-partitioned without re-exchanging the edge side.
-    sym_deg = (
-        sym.join(out_deg, "src")
-        .repartition(n_part, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    start = 0
-    ranks = out_deg.select(F.col("src").alias("v"), (F.lit(1.0) / n).alias("score"))
-    if checkpointer is not None:
-        restored = checkpointer.restore()
-        if restored is not None:
-            start, ranks = restored
-    prev_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for k in range(start + 1, iterations + 1):
-            prev_ranks = ranks
-            new_ids: set[int] = set()
-            contribs = (
-                sym_deg.join(ranks.withColumnRenamed("v", "src"), "src")
-                .select(F.col("dst").alias("v"), (F.col("score") / F.col("deg")).alias("c"))
-                .groupBy("v")
-                .agg(F.sum("c").alias("mass"))
-            )
-            ranks = contribs.select(
-                "v", (F.lit((1.0 - damping) / n) + F.lit(damping) * F.col("mass")).alias("score")
-            )
-            if checkpointer is not None:
-                ranks = checkpointer.maybe_save(k, ranks)
-            elif tol is not None or k % 5 == 0 or k == iterations:
-                # truncate lineage so the plan doesn't accrete one join per
-                # step; release the previous truncation's blocks NOW — state k
-                # no longer references them once k is materialized (in tol
-                # mode the delta probe still needs rank_{k-1}, so its blocks
-                # are released after the probe below)
-                ranks, new_ids = tracked_checkpoint(ranks)
-                if tol is None:
-                    release_ids(spark, prev_ids)
-                    prev_ids = new_ids
-            if tol is not None:
-                delta = (
-                    ranks.withColumnRenamed("score", "s1")
-                    .join(prev_ranks.withColumnRenamed("score", "s0"), "v")
-                    .agg(F.sum(F.abs(F.col("s1") - F.col("s0"))).alias("d"))
-                    .collect()[0]["d"]
+    with IterationScope(spark, checkpointer) as it:
+        sym = undirect(edges)
+        out_deg = sym.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        n = out_deg.count()
+        m2 = edges.count() * 2  # rows of the symmetric edge table
+        n_part = iteration_partitions(spark, m2)
+        # pre-partition the (big) edge side by the join key and cache it: every
+        # iteration's rank join then reuses this distribution and only the
+        # (|V|-row) rank table shuffles — 1 big exchange total instead of 1 per
+        # iteration. Partition count matches the per-iteration shuffles so the
+        # rank join is co-partitioned without re-exchanging the edge side.
+        sym_deg = it.cache(sym.join(out_deg, "src").repartition(n_part, "src"))
+        start, ranks = it.restore(
+            out_deg.select(F.col("src").alias("v"), (F.lit(1.0) / n).alias("score"))
+        )
+        with scoped_shuffle_partitions(spark, n_part):
+            for k in range(start + 1, iterations + 1):
+                prev_ranks = ranks
+                contribs = (
+                    sym_deg.join(ranks.withColumnRenamed("v", "src"), "src")
+                    .select(F.col("dst").alias("v"), (F.col("score") / F.col("deg")).alias("c"))
+                    .groupBy("v")
+                    .agg(F.sum("c").alias("mass"))
                 )
-                release_ids(spark, prev_ids)
-                prev_ids = new_ids
-                if delta < tol:
+                ranks = contribs.select(
+                    "v", (F.lit((1.0 - damping) / n) + F.lit(damping) * F.col("mass")).alias("score")
+                )
+                # truncate lineage every 5th step so the plan doesn't accrete
+                # one join per step — every step in tol mode (the delta probe
+                # reads the previous state) and with a checkpointer (its
+                # snapshot rounds)
+                kept = (
+                    tol is not None or checkpointer is not None
+                    or k % 5 == 0 or k == iterations
+                )
+                if kept:
+                    ranks = it.keep(ranks, k)
+                if tol is not None:
+                    delta = (
+                        ranks.withColumnRenamed("score", "s1")
+                        .join(prev_ranks.withColumnRenamed("score", "s0"), "v")
+                        .agg(F.sum(F.abs(F.col("s1") - F.col("s0"))).alias("d"))
+                        .collect()[0]["d"]
+                    )
+                if kept:
+                    it.release(prev_ranks)
+                if tol is not None and delta < tol:
                     break
-    if checkpointer is not None:
-        # the restored/loop state may still reference sym_deg lazily
-        ranks, _ = tracked_checkpoint(ranks)
-    sym_deg.unpersist()
-    return ranks
+        return it.result(ranks)
 
 
 def pagerank_unrolled_sql(edges_sql: str, iterations: int = 10, damping: float = 0.85,
@@ -248,62 +234,56 @@ def pagerank_directed(
     """
     spark = directed_edges.sparkSession
     e = directed_edges.select("src", "dst")
-    verts = (
-        e.select(F.col("src").alias("v"))
-        .unionAll(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n = verts.count()
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    n_part = iteration_partitions(spark, e.count())
-    ed = (
-        e.join(out_deg, "src")
-        .repartition(n_part, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    ed.count()  # materialize the cache before the loop
-    dangling_verts = verts.join(
-        out_deg.select(F.col("src").alias("v")), "v", "left_anti"
-    ).localCheckpoint(eager=False)
-    ranks = verts.select("v", (F.lit(1.0) / n).alias("score"))
-    prev_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for k in range(1, iterations + 1):
-            # the dangling scalar reads rank_{k-1}, which the end of the
-            # previous iteration materialized (tracked_checkpoint below) —
-            # this collect scans |dangling| in-memory rows, it never replays
-            # the join-agg chain (the round-3 lineage-replay defect)
-            d_mass = (
-                ranks.join(dangling_verts, "v")
-                .agg(F.coalesce(F.sum("score"), F.lit(0.0)).alias("m"))
-                .collect()[0]["m"]
-            )
-            contribs = (
-                ed.join(ranks.withColumnRenamed("v", "src"), "src")
-                .select(F.col("dst").alias("v"),
-                        (F.col("score") / F.col("deg")).alias("c"))
-                .groupBy("v")
-                .agg(F.sum("c").alias("mass"))
-            )
-            ranks = verts.join(contribs, "v", "left").select(
-                "v",
-                (
-                    F.lit((1.0 - damping) / n)
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("mass"), F.lit(0.0)) + F.lit(d_mass / n))
-                ).alias("score"),
-            )
-            # checkpoint EVERY iteration: the per-iteration scalar action
-            # forces a job regardless, so letting that job also materialize
-            # the state keeps every action exactly one iteration deep (the
-            # alternative — checkpoint every 5 — made each d_mass collect
-            # replay up to 5 iterations of un-materialized joins)
-            ranks, new_ids = tracked_checkpoint(ranks)
-            release_ids(spark, prev_ids)
-            prev_ids = new_ids
-    ed.unpersist()
-    return ranks
+    with IterationScope(spark) as it:
+        verts = it.hold(
+            e.select(F.col("src").alias("v"))
+            .unionAll(e.select(F.col("dst").alias("v")))
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
+        n = verts.count()
+        out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        n_part = iteration_partitions(spark, e.count())
+        ed = it.cache(e.join(out_deg, "src").repartition(n_part, "src"))
+        ed.count()  # materialize the cache before the loop
+        dangling_verts = it.hold(verts.join(
+            out_deg.select(F.col("src").alias("v")), "v", "left_anti"
+        ).localCheckpoint(eager=False))
+        ranks = verts.select("v", (F.lit(1.0) / n).alias("score"))
+        with scoped_shuffle_partitions(spark, n_part):
+            for _ in range(iterations):
+                # the dangling scalar reads rank_{k-1}, which the end of the
+                # previous iteration materialized (keep below) — this collect
+                # scans |dangling| in-memory rows, it never replays the
+                # join-agg chain (the round-3 lineage-replay defect)
+                d_mass = (
+                    ranks.join(dangling_verts, "v")
+                    .agg(F.coalesce(F.sum("score"), F.lit(0.0)).alias("m"))
+                    .collect()[0]["m"]
+                )
+                contribs = (
+                    ed.join(ranks.withColumnRenamed("v", "src"), "src")
+                    .select(F.col("dst").alias("v"),
+                            (F.col("score") / F.col("deg")).alias("c"))
+                    .groupBy("v")
+                    .agg(F.sum("c").alias("mass"))
+                )
+                # keep EVERY iteration: the per-iteration scalar action
+                # forces a job regardless, so letting that job also
+                # materialize the state keeps every action exactly one
+                # iteration deep (the alternative — every 5 — made each
+                # d_mass collect replay up to 5 iterations of joins)
+                new_ranks = it.keep(verts.join(contribs, "v", "left").select(
+                    "v",
+                    (
+                        F.lit((1.0 - damping) / n)
+                        + F.lit(damping)
+                        * (F.coalesce(F.col("mass"), F.lit(0.0)) + F.lit(d_mass / n))
+                    ).alias("score"),
+                ))
+                it.release(ranks)
+                ranks = new_ranks
+        return it.result(ranks)
 
 
 def pagerank_weighted(
@@ -330,36 +310,31 @@ def pagerank_weighted(
     strength = sym.groupBy("src").agg(F.sum("w").alias("s"))
     n = strength.count()
     n_part = iteration_partitions(spark, weighted_edges.count() * 2)
-    sym_s = (
-        sym.join(strength, "src")
-        .repartition(n_part, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    sym_s.count()
-    ranks = strength.select(F.col("src").alias("v"), (F.lit(1.0) / n).alias("score"))
-    prev_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for k in range(1, iterations + 1):
-            contribs = (
-                sym_s.join(ranks.withColumnRenamed("v", "src"), "src")
-                .select(
-                    F.col("dst").alias("v"),
-                    (F.col("score") * F.col("w") / F.col("s")).alias("c"),
+    with IterationScope(spark) as it:
+        sym_s = it.cache(sym.join(strength, "src").repartition(n_part, "src"))
+        sym_s.count()
+        ranks = strength.select(F.col("src").alias("v"), (F.lit(1.0) / n).alias("score"))
+        with scoped_shuffle_partitions(spark, n_part):
+            for k in range(1, iterations + 1):
+                prev = ranks
+                contribs = (
+                    sym_s.join(ranks.withColumnRenamed("v", "src"), "src")
+                    .select(
+                        F.col("dst").alias("v"),
+                        (F.col("score") * F.col("w") / F.col("s")).alias("c"),
+                    )
+                    .groupBy("v")
+                    .agg(F.sum("c").alias("mass"))
                 )
-                .groupBy("v")
-                .agg(F.sum("c").alias("mass"))
-            )
-            ranks = contribs.select(
-                "v",
-                (F.lit((1.0 - damping) / n)
-                 + F.lit(damping) * F.col("mass")).alias("score"),
-            )
-            if k % 5 == 0 or k == iterations:
-                ranks, new_ids = tracked_checkpoint(ranks)
-                release_ids(spark, prev_ids)
-                prev_ids = new_ids
-    sym_s.unpersist()
-    return ranks
+                ranks = contribs.select(
+                    "v",
+                    (F.lit((1.0 - damping) / n)
+                     + F.lit(damping) * F.col("mass")).alias("score"),
+                )
+                if k % 5 == 0 or k == iterations:
+                    ranks = it.keep(ranks)
+                    it.release(prev)
+        return it.result(ranks)
 
 
 def pagerank_weighted_unrolled_sql(weighted_edges_sql: str, iterations: int = 10,
@@ -408,62 +383,56 @@ def personalized_pagerank(
     """
     spark = directed_edges.sparkSession
     e = directed_edges.select("src", "dst")
-    verts = (
-        e.select(F.col("src").alias("v"))
-        .unionAll(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    n_part = iteration_partitions(spark, e.count())
-    ed = (
-        e.join(out_deg, "src")
-        .repartition(n_part, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    ed.count()
-    dangling_verts = verts.join(
-        out_deg.select(F.col("src").alias("v")), "v", "left_anti"
-    ).localCheckpoint(eager=False)
     p = 1.0 / len(seeds)
     tele = F.when(F.col("v").isin([int(s) for s in seeds]), F.lit(p)).otherwise(
         F.lit(0.0)
     )
-    ranks = verts.select("v", tele.alias("score"))
-    prev_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for k in range(1, iterations + 1):
-            # rank_{k-1} is materialized (end of previous iteration), so the
-            # dangling scalar is an in-memory scan, not a lineage replay
-            d_mass = (
-                ranks.join(dangling_verts, "v")
-                .agg(F.coalesce(F.sum("score"), F.lit(0.0)).alias("m"))
-                .collect()[0]["m"]
-            )
-            contribs = (
-                ed.join(ranks.withColumnRenamed("v", "src"), "src")
-                .select(F.col("dst").alias("v"),
-                        (F.col("score") / F.col("deg")).alias("c"))
-                .groupBy("v")
-                .agg(F.sum("c").alias("mass"))
-            )
-            ranks = verts.join(contribs, "v", "left").select(
-                "v",
-                (
-                    F.lit(1.0 - damping) * tele
-                    + F.lit(damping)
-                    * (F.coalesce(F.col("mass"), F.lit(0.0))
-                       + F.lit(d_mass) * tele)
-                ).alias("score"),
-            )
-            # checkpoint every iteration — see pagerank_directed: the
-            # per-step scalar already forces a job, so materializing here
-            # keeps every action one iteration deep
-            ranks, new_ids = tracked_checkpoint(ranks)
-            release_ids(spark, prev_ids)
-            prev_ids = new_ids
-    ed.unpersist()
-    return ranks
+    with IterationScope(spark) as it:
+        verts = it.hold(
+            e.select(F.col("src").alias("v"))
+            .unionAll(e.select(F.col("dst").alias("v")))
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
+        out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        n_part = iteration_partitions(spark, e.count())
+        ed = it.cache(e.join(out_deg, "src").repartition(n_part, "src"))
+        ed.count()
+        dangling_verts = it.hold(verts.join(
+            out_deg.select(F.col("src").alias("v")), "v", "left_anti"
+        ).localCheckpoint(eager=False))
+        ranks = verts.select("v", tele.alias("score"))
+        with scoped_shuffle_partitions(spark, n_part):
+            for _ in range(iterations):
+                # rank_{k-1} is materialized (end of previous iteration), so the
+                # dangling scalar is an in-memory scan, not a lineage replay
+                d_mass = (
+                    ranks.join(dangling_verts, "v")
+                    .agg(F.coalesce(F.sum("score"), F.lit(0.0)).alias("m"))
+                    .collect()[0]["m"]
+                )
+                contribs = (
+                    ed.join(ranks.withColumnRenamed("v", "src"), "src")
+                    .select(F.col("dst").alias("v"),
+                            (F.col("score") / F.col("deg")).alias("c"))
+                    .groupBy("v")
+                    .agg(F.sum("c").alias("mass"))
+                )
+                # kept every iteration — see pagerank_directed: the per-step
+                # scalar already forces a job, so materializing here keeps
+                # every action one iteration deep
+                new_ranks = it.keep(verts.join(contribs, "v", "left").select(
+                    "v",
+                    (
+                        F.lit(1.0 - damping) * tele
+                        + F.lit(damping)
+                        * (F.coalesce(F.col("mass"), F.lit(0.0))
+                           + F.lit(d_mass) * tele)
+                    ).alias("score"),
+                ))
+                it.release(ranks)
+                ranks = new_ranks
+        return it.result(ranks)
 
 
 def personalized_pagerank_unrolled_sql(edges_sql: str, seeds: list[int],
@@ -522,18 +491,6 @@ def hits(directed_edges: DataFrame, iterations: int = 10) -> DataFrame:
     """
     spark = directed_edges.sparkSession
     e = directed_edges.select("src", "dst")
-    verts = (
-        e.select(F.col("src").alias("v"))
-        .unionAll(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    n = verts.count()
-    n_part = iteration_partitions(spark, e.count())
-    ed = e.repartition(n_part, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    ed.count()
-    hubs = verts.select("v", (F.lit(1.0) / n).alias("hub"))
-    auths = verts.select("v", F.lit(0.0).alias("authority"))
 
     def _norm_total(t: float | None) -> float:
         # an exact-0.0 total (degenerate all-zero round) gets the same
@@ -543,38 +500,50 @@ def hits(directed_edges: DataFrame, iterations: int = 10) -> DataFrame:
         # engine/oracle contract explicit
         return 1.0 if t is None or t == 0.0 else float(t)
 
-    prev_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for k in range(1, iterations + 1):
-            # materialize each half-step's aggregate BEFORE taking its
-            # normalization scalar: the scalar then scans |V| in-memory rows
-            # and every downstream plan is at most two joins deep — no action
-            # ever replays a previous iteration's lineage
-            a_raw, a_ids = tracked_checkpoint(
-                ed.join(hubs.withColumnRenamed("v", "src"), "src")
-                .groupBy(F.col("dst").alias("v"))
-                .agg(F.sum("hub").alias("a"))
-            )
-            a_tot = _norm_total(a_raw.agg(F.sum("a")).collect()[0][0])
-            auths = verts.join(a_raw, "v", "left").select(
-                "v", (F.coalesce(F.col("a"), F.lit(0.0)) / F.lit(a_tot)).alias("authority")
-            )
-            h_raw, h_ids = tracked_checkpoint(
-                ed.join(auths.withColumnRenamed("v", "dst"), "dst")
-                .groupBy(F.col("src").alias("v"))
-                .agg(F.sum("authority").alias("h"))
-            )
-            h_tot = _norm_total(h_raw.agg(F.sum("h")).collect()[0][0])
-            hubs = verts.join(h_raw, "v", "left").select(
-                "v", (F.coalesce(F.col("h"), F.lit(0.0)) / F.lit(h_tot)).alias("hub")
-            )
-            # the previous round's raw aggregates are no longer referenced
-            # once this round's are materialized (hubs_{k}/auths_{k} read only
-            # a_raw_{k}/h_raw_{k} + verts)
-            release_ids(spark, prev_ids)
-            prev_ids = a_ids | h_ids
-    ed.unpersist()
-    return hubs.join(auths, "v").select("v", "hub", "authority")
+    with IterationScope(spark) as it:
+        verts = it.hold(
+            e.select(F.col("src").alias("v"))
+            .unionAll(e.select(F.col("dst").alias("v")))
+            .distinct()
+            .localCheckpoint(eager=False)
+        )
+        n = verts.count()
+        n_part = iteration_partitions(spark, e.count())
+        ed = it.cache(e.repartition(n_part, "src"))
+        ed.count()
+        hubs = verts.select("v", (F.lit(1.0) / n).alias("hub"))
+        auths = verts.select("v", F.lit(0.0).alias("authority"))
+        with scoped_shuffle_partitions(spark, n_part):
+            for _ in range(iterations):
+                # materialize each half-step's aggregate BEFORE taking its
+                # normalization scalar: the scalar then scans |V| in-memory
+                # rows and every downstream plan is at most two joins deep —
+                # no action ever replays a previous iteration's lineage
+                prev = (hubs, auths)
+                a_raw = it.keep(
+                    ed.join(hubs.withColumnRenamed("v", "src"), "src")
+                    .groupBy(F.col("dst").alias("v"))
+                    .agg(F.sum("hub").alias("a"))
+                )
+                a_tot = _norm_total(a_raw.agg(F.sum("a")).collect()[0][0])
+                auths = verts.join(a_raw, "v", "left").select(
+                    "v", (F.coalesce(F.col("a"), F.lit(0.0)) / F.lit(a_tot)).alias("authority")
+                )
+                h_raw = it.keep(
+                    ed.join(auths.withColumnRenamed("v", "dst"), "dst")
+                    .groupBy(F.col("src").alias("v"))
+                    .agg(F.sum("authority").alias("h"))
+                )
+                h_tot = _norm_total(h_raw.agg(F.sum("h")).collect()[0][0])
+                hubs = verts.join(h_raw, "v", "left").select(
+                    "v", (F.coalesce(F.col("h"), F.lit(0.0)) / F.lit(h_tot)).alias("hub")
+                )
+                # the previous round's raw aggregates are no longer referenced
+                # once this round's are materialized (hubs_{k}/auths_{k} read
+                # only a_raw_{k}/h_raw_{k} + verts)
+                it.release(*prev)
+        # materialized, so the result reads one block, not verts + both aggregates
+        return it.result(it.keep(hubs.join(auths, "v").select("v", "hub", "authority")))
 
 
 def hits_unrolled_sql(edges_sql: str, iterations: int = 10,
@@ -727,30 +696,27 @@ def eigenvector_centrality(
     spark = edges.sparkSession
     sym = undirect(edges)
     n_part = iteration_partitions(spark, edges.count() * 2)
-    sym_p = sym.repartition(n_part, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    x = sym_p.select("src").distinct().select(
-        F.col("src").alias("v"), F.lit(1).cast("decimal(38,0)").alias("x")
-    )
-    prev_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for _ in range(iterations):
-            x = (
-                sym_p.join(x.withColumnRenamed("v", "src"), "src")
-                .groupBy(F.col("dst").alias("v"))
-                .agg(F.sum("x").cast("decimal(38,0)").alias("x"))
-            )
-            # truncate lineage each round (repo-wide iteration rule) and
-            # release the previous round's blocks — they are dead state
-            x, new_ids = tracked_checkpoint(x)
-            release_ids(spark, prev_ids)
-            prev_ids = new_ids
-    mx = x.agg(F.max("x").cast("double").alias("__mx"))
-    out = x.crossJoin(mx).select(
-        "v",
-        F.round(F.col("x").cast("double") / F.col("__mx"), 6).alias("score"),
-    )
-    sym_p.unpersist()
-    return out
+    with IterationScope(spark) as it:
+        sym_p = it.cache(sym.repartition(n_part, "src"))
+        x = sym_p.select("src").distinct().select(
+            F.col("src").alias("v"), F.lit(1).cast("decimal(38,0)").alias("x")
+        )
+        with scoped_shuffle_partitions(spark, n_part):
+            for _ in range(iterations):
+                # truncate lineage each round (repo-wide iteration rule) and
+                # release the previous round's blocks — they are dead state
+                new_x = it.keep(
+                    sym_p.join(x.withColumnRenamed("v", "src"), "src")
+                    .groupBy(F.col("dst").alias("v"))
+                    .agg(F.sum("x").cast("decimal(38,0)").alias("x"))
+                )
+                it.release(x)
+                x = new_x
+        mx = x.agg(F.max("x").cast("double").alias("__mx"))
+        return it.result(x.crossJoin(mx).select(
+            "v",
+            F.round(F.col("x").cast("double") / F.col("__mx"), 6).alias("score"),
+        ))
 
 
 def eigenvector_centrality_unrolled_sql(
@@ -811,61 +777,57 @@ def salsa(directed_edges: DataFrame, iterations: int = 5) -> DataFrame:
     """
     spark = directed_edges.sparkSession
     e = directed_edges.select("src", "dst")
-    verts = (
-        e.select(F.col("src").alias("v"))
-        .unionAll(e.select(F.col("dst").alias("v")))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    od = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("od"))
-    idg = e.groupBy("dst").agg(F.count(F.lit(1)).cast("long").alias("ind"))
-    n_part = iteration_partitions(spark, e.count())
-    # degree-annotated edge table, built once, partitioned like the loop's
-    # first join key
-    ew = (
-        e.join(od, "src")
-        .join(idg, "dst")
-        .select("src", "dst", "od", "ind")
-        .repartition(n_part, "src")
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    ew.count()
-    n_hubs = od.count()
-    hubs = od.select(F.col("src").alias("v"), (F.lit(1.0) / n_hubs).alias("hub"))
-    auths = idg.select(F.col("dst").alias("v"), F.lit(0.0).alias("authority"))
-
-    prev_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for _k in range(iterations):
-            a_new, a_ids = tracked_checkpoint(
-                ew.join(hubs.withColumnRenamed("v", "src"), "src")
-                .groupBy(F.col("dst").alias("v"))
-                .agg(F.sum(F.col("hub") / F.col("od").cast("double")).alias("authority"))
-            )
-            h_new, h_ids = tracked_checkpoint(
-                ew.join(
-                    a_new.withColumnRenamed("v", "dst").withColumnRenamed(
-                        "authority", "__a"
-                    ),
-                    "dst",
-                )
-                .groupBy(F.col("src").alias("v"))
-                .agg(F.sum(F.col("__a") / F.col("ind").cast("double")).alias("hub"))
-            )
-            auths, hubs = a_new, h_new
-            release_ids(spark, prev_ids)
-            prev_ids = a_ids | h_ids
-    out = (
-        verts.join(hubs, "v", "left")
-        .join(auths, "v", "left")
-        .select(
-            "v",
-            F.coalesce("hub", F.lit(0.0)).alias("hub"),
-            F.coalesce("authority", F.lit(0.0)).alias("authority"),
+    with IterationScope(spark) as it:
+        verts = it.hold(
+            e.select(F.col("src").alias("v"))
+            .unionAll(e.select(F.col("dst").alias("v")))
+            .distinct()
+            .localCheckpoint(eager=False)
         )
-    )
-    ew.unpersist()
-    return out
+        od = e.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("od"))
+        idg = e.groupBy("dst").agg(F.count(F.lit(1)).cast("long").alias("ind"))
+        n_part = iteration_partitions(spark, e.count())
+        # degree-annotated edge table, built once, partitioned like the loop's
+        # first join key
+        ew = it.cache(
+            e.join(od, "src")
+            .join(idg, "dst")
+            .select("src", "dst", "od", "ind")
+            .repartition(n_part, "src")
+        )
+        ew.count()
+        n_hubs = od.count()
+        hubs = od.select(F.col("src").alias("v"), (F.lit(1.0) / n_hubs).alias("hub"))
+        auths = idg.select(F.col("dst").alias("v"), F.lit(0.0).alias("authority"))
+        with scoped_shuffle_partitions(spark, n_part):
+            for _k in range(iterations):
+                a_new = it.keep(
+                    ew.join(hubs.withColumnRenamed("v", "src"), "src")
+                    .groupBy(F.col("dst").alias("v"))
+                    .agg(F.sum(F.col("hub") / F.col("od").cast("double")).alias("authority"))
+                )
+                h_new = it.keep(
+                    ew.join(
+                        a_new.withColumnRenamed("v", "dst").withColumnRenamed(
+                            "authority", "__a"
+                        ),
+                        "dst",
+                    )
+                    .groupBy(F.col("src").alias("v"))
+                    .agg(F.sum(F.col("__a") / F.col("ind").cast("double")).alias("hub"))
+                )
+                it.release(hubs, auths)
+                auths, hubs = a_new, h_new
+        # materialized, so the result reads one block, not verts + both states
+        return it.result(it.keep(
+            verts.join(hubs, "v", "left")
+            .join(auths, "v", "left")
+            .select(
+                "v",
+                F.coalesce("hub", F.lit(0.0)).alias("hub"),
+                F.coalesce("authority", F.lit(0.0)).alias("authority"),
+            )
+        ))
 
 
 def salsa_unrolled_sql(edges_sql: str, iterations: int = 5,
@@ -934,44 +896,38 @@ def katz_centrality(
     spark = edges.sparkSession
     sym = undirect(edges)
     n_part = iteration_partitions(spark, edges.count() * 2)
-    sym_p = sym.repartition(n_part, "src").persist(StorageLevel.MEMORY_AND_DISK)
-    verts = sym_p.select(F.col("src").alias("v")).distinct().localCheckpoint(
-        eager=False
-    )
-    x = verts.select("v", F.lit(1).cast("decimal(38,0)").alias("x"))
-    walk_tables = []
-    all_ids: set[int] = set()
-    with scoped_shuffle_partitions(spark, n_part):
-        for _k in range(iterations):
-            x = (
-                sym_p.join(x.withColumnRenamed("v", "src"), "src")
-                .groupBy(F.col("dst").alias("v"))
-                .agg(F.sum("x").cast("decimal(38,0)").alias("x"))
+    with IterationScope(spark) as it:
+        sym_p = it.cache(sym.repartition(n_part, "src"))
+        verts = it.hold(
+            sym_p.select(F.col("src").alias("v")).distinct().localCheckpoint(eager=False)
+        )
+        x = verts.select("v", F.lit(1).cast("decimal(38,0)").alias("x"))
+        # every w_k feeds the FINAL select, so (unlike the pure power
+        # iteration) no round's blocks are dead until the result is built
+        walk_tables = []
+        with scoped_shuffle_partitions(spark, n_part):
+            for _k in range(iterations):
+                x = it.keep(
+                    sym_p.join(x.withColumnRenamed("v", "src"), "src")
+                    .groupBy(F.col("dst").alias("v"))
+                    .agg(F.sum("x").cast("decimal(38,0)").alias("x"))
+                )
+                walk_tables.append(x)
+        out = verts
+        terms = []
+        for k, wk in enumerate(walk_tables, start=1):
+            out = out.join(
+                wk.select("v", F.col("x").alias(f"__w{k}")), "v", "left"
             )
-            x, new_ids = tracked_checkpoint(x)
-            # every w_k feeds the FINAL select, so (unlike the pure power
-            # iteration) no round's blocks are dead until the result is built
-            all_ids |= new_ids
-            walk_tables.append(x)
-    out = verts
-    terms = []
-    for k, wk in enumerate(walk_tables, start=1):
-        out = out.join(
-            wk.select("v", F.col("x").alias(f"__w{k}")), "v", "left"
-        )
-        terms.append(
-            F.lit(alpha**k)
-            * F.coalesce(F.col(f"__w{k}"), F.lit(0)).cast("double")
-        )
-    # fixed left-to-right accumulation, mirrored in the SQL twin
-    acc = terms[0]
-    for t in terms[1:]:
-        acc = acc + t
-    result = out.select("v", F.round(acc, 6).alias("katz"))
-    result = result.localCheckpoint(eager=True)
-    release_ids(spark, all_ids)
-    sym_p.unpersist()
-    return result
+            terms.append(
+                F.lit(alpha**k)
+                * F.coalesce(F.col(f"__w{k}"), F.lit(0)).cast("double")
+            )
+        # fixed left-to-right accumulation, mirrored in the SQL twin
+        acc = terms[0]
+        for t in terms[1:]:
+            acc = acc + t
+        return it.result(it.keep(out.select("v", F.round(acc, 6).alias("katz"))))
 
 
 def katz_centrality_unrolled_sql(

@@ -37,7 +37,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from trianglecounting_spark.plans.cache import release_ids, tracked_checkpoint
+from trianglecounting_spark.plans.cache import IterationScope
 from trianglecounting_spark.plans.tuning import (
     iteration_partitions,
     scoped_shuffle_partitions,
@@ -75,42 +75,42 @@ def resolve_redirects(redirects: DataFrame, cap: int = 32) -> DataFrame:
             F.coalesce(~F.col("__in_dom"), F.lit(True)).alias("done"),
         )
     )
-    state, prev_ids = tracked_checkpoint(state)
     rounds = max(1, cap.bit_length() - 1)  # 2^rounds = cap
-    with scoped_shuffle_partitions(spark, n_part):
-        for _ in range(rounds):
-            hop = state.select(
-                F.col("v").alias("cur"),
-                F.col("cur").alias("__next"),
-                F.col("steps").alias("__add"),
-                F.col("done").alias("__next_done"),
-            )
-            advanced = (
-                state.join(hop, "cur", "left")
-                .select(
-                    "v",
-                    F.when(F.col("done"), F.col("cur"))
-                    .otherwise(F.coalesce("__next", "cur"))
-                    .alias("cur"),
-                    F.when(F.col("done"), F.col("steps"))
-                    .otherwise(F.col("steps") + F.coalesce("__add", F.lit(0)))
-                    .alias("steps"),
-                    # a missing lookup means cur left the redirect domain one
-                    # composition ago — it IS the terminal
-                    F.when(F.col("done"), F.lit(True))
-                    .otherwise(F.coalesce("__next_done", F.lit(True)))
-                    .alias("done"),
+    with IterationScope(spark) as it:
+        state = it.keep(state)
+        with scoped_shuffle_partitions(spark, n_part):
+            for _ in range(rounds):
+                hop = state.select(
+                    F.col("v").alias("cur"),
+                    F.col("cur").alias("__next"),
+                    F.col("steps").alias("__add"),
+                    F.col("done").alias("__next_done"),
                 )
-            )
-            state, new_ids = tracked_checkpoint(advanced)
-            release_ids(spark, prev_ids)
-            prev_ids = new_ids
-    return state.select(
-        F.col("v").alias("src"),
-        F.col("cur").alias("final"),
-        F.least(F.col("steps"), F.lit(cap)).cast("long").alias("hops"),
-        "done",
-    ).withColumnRenamed("done", "resolved")
+                advanced = it.keep(
+                    state.join(hop, "cur", "left")
+                    .select(
+                        "v",
+                        F.when(F.col("done"), F.col("cur"))
+                        .otherwise(F.coalesce("__next", "cur"))
+                        .alias("cur"),
+                        F.when(F.col("done"), F.col("steps"))
+                        .otherwise(F.col("steps") + F.coalesce("__add", F.lit(0)))
+                        .alias("steps"),
+                        # a missing lookup means cur left the redirect domain
+                        # one composition ago — it IS the terminal
+                        F.when(F.col("done"), F.lit(True))
+                        .otherwise(F.coalesce("__next_done", F.lit(True)))
+                        .alias("done"),
+                    )
+                )
+                it.release(state)
+                state = advanced
+        return it.result(state.select(
+            F.col("v").alias("src"),
+            F.col("cur").alias("final"),
+            F.least(F.col("steps"), F.lit(cap)).cast("long").alias("hops"),
+            "done",
+        ).withColumnRenamed("done", "resolved"))
 
 
 def resolve_redirects_sql(redirect_ctes: str, cap: int = 32) -> str:

@@ -48,8 +48,8 @@ Two regimes, chosen from |V| against ``tuning.BROADCAST_ROWS``:
     passes and ~9 s where the shuffle rounds took 140 jobs and 17-19 s.
   * otherwise — the shuffle path: every step is a vertex-keyed join +
     aggregate over the active edge subgraph, each round's |V|-row state
-    checkpointed (tracked_checkpoint; a file barrier every
-    ``_BARRIER_EVERY`` rounds) and probed for changes; floods are
+    kept in the call's ``IterationScope`` (a file barrier every
+    ``cache.BARRIER_EVERY`` rounds) and probed for changes; floods are
     O(diameter) rounds.
 
 Both regimes compute the same fixpoints (trim and min-label floods are
@@ -69,37 +69,27 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from trianglecounting_spark.plans.cache import (
-    barrier_checkpoint,
-    release_ids,
-    released_on_error,
-    tracked_checkpoint,
-)
+from trianglecounting_spark.plans.cache import IterationScope
 from trianglecounting_spark.plans.tuning import (
     BROADCAST_ROWS,
     iteration_partitions,
+    maybe_broadcast,
     scoped_shuffle_partitions,
 )
 from trianglecounting_spark.plans.vertex_state import VertexState, fits_driver
 
 
-# Reliable-checkpoint cadence for long flood chains — a defensive TRUE
-# lineage barrier (plans/cache.barrier_checkpoint) so a deep flood can never
-# accumulate unbounded chained-localCheckpoint state.
-_BARRIER_EVERY = 12
-
-
 def _minlabel_flood(
-    spark,
+    it: IterationScope,
     edges: DataFrame,
     color: DataFrame,
-    color_ids: set[int],
     src: str,
     dst: str,
     max_inner: int,
     what: str,
-    small: bool = False,
-) -> tuple[DataFrame, set[int]]:
+    rows: float = float("inf"),
+    budget: int = BROADCAST_ROWS,
+) -> DataFrame:
     """Monotone min-label flood to fixpoint: each round
     label(v) ← min(label(v), labels of in-neighbors along ``src``→``dst``).
 
@@ -119,29 +109,30 @@ def _minlabel_flood(
     O(diameter) regardless. (The driver-held regime composes labels as a
     numpy gather instead, where it costs nothing.)
 
-    ``color`` must be a materialized ``(v, label)`` table whose blocks
-    (``color_ids``) the flood takes over; every new state is checkpointed
-    before the changed-count action, so no action replays a prior round,
-    and every ``_BARRIER_EVERY`` rounds the state gets a reliable (file)
+    ``color`` must be a ``(v, label)`` table kept in ``it``, which the flood
+    takes over (releases once superseded); every new state is kept before
+    the changed-count action, so no action replays a prior round, and every
+    ``cache.BARRIER_EVERY`` rounds the state gets a reliable (file)
     checkpoint as a true lineage barrier.
 
     The changed-count rides the checkpointed state as a flag column
     (``in_min < label`` IS "this row changed" — labels only decrease); when
-    ``small`` the |V|-row state is broadcast into the edge join, so a flood
-    round is one narrow pass over the (pre-partitioned) edge table.
+    the state's ``rows`` fit ``budget`` the state is broadcast into the edge
+    join, so a flood round is one narrow pass over the (pre-partitioned)
+    edge table.
     """
-    small = bool(small)
+    small = rows <= budget
 
     def _step(cur: DataFrame) -> DataFrame:
         # cur: (v, label, __l0) — __l0 is the label at round start, carried
         # through so the changed flag needs no join of new-vs-old states
         col_in = cur.select(F.col("v").alias(src), "label")
-        incoming = (
-            edges.join(F.broadcast(col_in) if small else col_in, src)
+        incoming = maybe_broadcast(
+            edges.join(maybe_broadcast(col_in, rows, budget), src)
             .groupBy(F.col(dst).alias("v"))
-            .agg(F.min("label").alias("in_min"))
+            .agg(F.min("label").alias("in_min")),
+            rows, budget,
         )
-        incoming = F.broadcast(incoming) if small else incoming
         return cur.join(incoming, "v", "left").select(
             "v",
             F.least("label", F.coalesce("in_min", F.col("label"))).alias("label"),
@@ -155,23 +146,21 @@ def _minlabel_flood(
     # is paid half as often, and applying the monotone update more times per
     # materialization reaches the identical fixpoint.
     steps = 2 if small else 1
-    for _round in range(max_inner):
+    for r in range(1, max_inner + 1):
         new_plan = color.select("v", "label", F.col("label").alias("__l0"))
         for _s in range(steps):
             new_plan = _step(new_plan)
-        new_plan = new_plan.select(
-            "v", "label", (F.col("label") < F.col("__l0")).cast("int").alias("__ch")
+        new_color = it.keep(
+            new_plan.select(
+                "v", "label", (F.col("label") < F.col("__l0")).cast("int").alias("__ch")
+            ),
+            r, barrier=True,
         )
-        if (_round + 1) % _BARRIER_EVERY == 0:
-            new_color, new_ids = barrier_checkpoint(new_plan)
-        else:
-            new_color, new_ids = tracked_checkpoint(new_plan)
         changed = new_color.agg(F.sum("__ch")).collect()[0][0] or 0
-        release_ids(spark, color_ids)
-        color, color_ids = new_color.select("v", "label"), new_ids
+        it.release(color)
+        color = new_color.select("v", "label")
         if changed == 0:
-            return color, color_ids
-    release_ids(spark, color_ids)
+            return color
     raise RuntimeError(
         f"{what} did not converge in {max_inner} flood rounds — "
         "raise max_inner for this graph"
@@ -197,12 +186,13 @@ def scc(
     least one hop, a broadcast shuffle round two). Either way every block
     the call cached is released before the error propagates.
     """
-    spark = directed_edges.sparkSession
-    with released_on_error(spark):
+    with IterationScope(directed_edges.sparkSession) as it:
         driver, n_rows = fits_driver(directed_edges, ("src", "dst"), broadcast_rows)
         if driver:
             return _scc_driver(directed_edges, n_rows, max_rounds, max_inner)
-        return _scc_shuffle(directed_edges, max_rounds, max_inner, broadcast_rows)
+        return it.result(
+            _scc_shuffle(it, directed_edges, max_rounds, max_inner, broadcast_rows)
+        )
 
 
 def _trim_step(part, st):
@@ -301,13 +291,13 @@ def _scc_driver(
 
 
 def _scc_shuffle(
-    directed_edges: DataFrame, max_rounds: int, max_inner: int, broadcast_rows: int
+    it: IterationScope, directed_edges: DataFrame, max_rounds: int, max_inner: int,
+    broadcast_rows: int,
 ) -> DataFrame:
-    """The shuffle regime (|V| past the budget): DataFrame rounds with
-    per-round tracked checkpoints. Raising exits release through the
-    caller's ``released_on_error``."""
+    """The shuffle regime (|V| past the budget): DataFrame rounds kept in the
+    caller's ``IterationScope``, which also releases on raising exits."""
     spark = directed_edges.sparkSession
-    e_all, e_ids = tracked_checkpoint(
+    e_all = it.keep(
         directed_edges.select("src", "dst")
         .where(F.col("src") != F.col("dst"))
         .dropDuplicates(["src", "dst"])
@@ -316,7 +306,7 @@ def _scc_shuffle(
     # vertex whose only edge is a self-loop is still its own singleton SCC
     # and must appear in the output — the trim prepass extracts it (no
     # non-loop edge touches it), matching the definitional oracle
-    verts, verts_ids = tracked_checkpoint(
+    active = it.keep(
         directed_edges.select(F.col("src").alias("v"))
         .unionAll(directed_edges.select(F.col("dst").alias("v")))
         .distinct()
@@ -325,26 +315,28 @@ def _scc_shuffle(
     # assigned SCCs accumulate as a list of already-materialized frames
     # (trivial/marked checkpoints) and union ONCE at return
     assigned_parts: list[DataFrame] = []
-    assigned_ids: set[int] = set()
-    active, active_ids = verts, set()  # verts' blocks released at return
     n_active = active.count()
 
-    def _bc(df):
-        # size-aware: once the active set shrinks under the budget, the
-        # |active|-row vertex/label tables are broadcast into the edge-side
-        # joins (narrow trim/flood passes)
-        return F.broadcast(df) if n_active <= broadcast_rows else df
-
     def _finish() -> DataFrame:
-        release_ids(spark, active_ids | e_ids | verts_ids)
         if not assigned_parts:
             return spark.createDataFrame([], "v long, label long")
         out = assigned_parts[0]
         for p in assigned_parts[1:]:
             out = out.unionAll(p)
-        out, _ = tracked_checkpoint(out)
-        release_ids(spark, assigned_ids)
-        return out
+        return it.keep(out)
+
+    # size-aware: once the active set shrinks under the budget, the
+    # |active|-row vertex/label tables are broadcast into the edge-side joins
+    # (narrow trim/flood passes)
+    def _active_edges() -> DataFrame:
+        # the edges whose endpoints are both still active
+        return e_all.join(
+            maybe_broadcast(active.withColumnRenamed("v", "src"), n_active, broadcast_rows),
+            "src", "left_semi",
+        ).join(
+            maybe_broadcast(active.withColumnRenamed("v", "dst"), n_active, broadcast_rows),
+            "dst", "left_semi",
+        )
 
     with scoped_shuffle_partitions(spark, n_part):
         for _round in range(1, max_rounds + 1):
@@ -352,59 +344,44 @@ def _scc_shuffle(
             # outgoing active edge is its own SCC — peel such layers
             # iteratively before paying for a coloring round.
             for _ in range(max_inner):
-                ea_t = (
-                    e_all.join(
-                        _bc(active.withColumnRenamed("v", "src")), "src", "left_semi"
+                ea_t = _active_edges()
+                has_in, has_out = (
+                    maybe_broadcast(
+                        ea_t.select(F.col(c).alias("v")).distinct(), n_active, broadcast_rows
                     )
-                    .join(_bc(active.withColumnRenamed("v", "dst")), "dst", "left_semi")
+                    for c in ("dst", "src")
                 )
-                trivial, triv_ids = tracked_checkpoint(
-                    active.join(
-                        _bc(ea_t.select(F.col("dst").alias("v")).distinct()),
-                        "v",
-                        "left_anti",
-                    ).unionAll(
-                        active.join(
-                            _bc(ea_t.select(F.col("src").alias("v")).distinct()),
-                            "v",
-                            "left_anti",
-                        )
-                    ).dropDuplicates(["v"])
+                trivial = it.keep(
+                    active.join(has_in, "v", "left_anti")
+                    .unionAll(active.join(has_out, "v", "left_anti"))
+                    .dropDuplicates(["v"])
                 )
                 n_triv = trivial.count()
                 if n_triv == 0:
-                    release_ids(spark, triv_ids)
+                    it.release(trivial)
                     break
                 assigned_parts.append(
                     trivial.select("v", F.col("v").alias("label"))
                 )
-                assigned_ids |= triv_ids
-                remaining, rem_ids = tracked_checkpoint(
-                    active.join(_bc(trivial), "v", "left_anti")
-                )
-                release_ids(spark, active_ids)
-                active, active_ids = remaining, rem_ids
+                remaining = it.keep(active.join(
+                    maybe_broadcast(trivial, n_active, broadcast_rows), "v", "left_anti"
+                ))
+                it.release(active)
+                active = remaining
                 n_active -= n_triv
             if n_active == 0:
                 return _finish()
 
             # restrict edges to the still-active vertex set (both endpoints)
-            ea, ea_ids = tracked_checkpoint(
-                e_all.join(_bc(active.withColumnRenamed("v", "src")), "src", "left_semi")
-                .join(_bc(active.withColumnRenamed("v", "dst")), "dst", "left_semi")
-                .select("src", "dst")
-                .repartition(n_part, "src")
-            )
+            ea = it.keep(_active_edges().select("src", "dst").repartition(n_part, "src"))
 
             # 1. forward min-label flood: color(v) = min(v, colors of
             #    in-neighbors), iterated to fixpoint — O(diameter of the
             #    flooded subgraph) rounds (see _minlabel_flood).
-            color, color_ids = tracked_checkpoint(
-                active.select("v", F.col("v").alias("label"))
-            )
-            color, color_ids = _minlabel_flood(
-                spark, ea, color, color_ids, "src", "dst", max_inner,
-                what="scc forward coloring", small=n_active <= broadcast_rows,
+            color = _minlabel_flood(
+                it, ea, it.keep(active.select("v", F.col("v").alias("label"))),
+                "src", "dst", max_inner, what="scc forward coloring",
+                rows=n_active, budget=broadcast_rows,
             )
 
             # 2. backward containment over same-color edges (crossing a
@@ -413,45 +390,43 @@ def _scc_shuffle(
             #    same diameter-bound min-label flood over the REVERSED
             #    same-color edges. Class ids are all ≥ the root, so
             #    v ∈ SCC(root) ⟺ bcolor(v) == its forward color.
-            ec, ec_ids = tracked_checkpoint(
-                ea.join(
-                    _bc(color.select(F.col("v").alias("src"), F.col("label").alias("cl_s"))),
-                    "src",
+            cl_s, cl_d = (
+                maybe_broadcast(
+                    color.select(F.col("v").alias(c), F.col("label").alias(f"cl_{c[0]}")),
+                    n_active, broadcast_rows,
                 )
-                .join(
-                    _bc(color.select(F.col("v").alias("dst"), F.col("label").alias("cl_d"))),
-                    "dst",
-                )
+                for c in ("src", "dst")
+            )
+            ec = it.keep(
+                ea.join(cl_s, "src")
+                .join(cl_d, "dst")
                 .where(F.col("cl_s") == F.col("cl_d"))
                 # reversed: flood labels from dst back to src
                 .select(F.col("dst").alias("src"), F.col("src").alias("dst"))
             )
-            bcolor, bcolor_ids = tracked_checkpoint(
-                active.select("v", F.col("v").alias("label"))
+            bcolor = _minlabel_flood(
+                it, ec, it.keep(active.select("v", F.col("v").alias("label"))),
+                "src", "dst", max_inner, what="scc backward containment",
+                rows=n_active, budget=broadcast_rows,
             )
-            bcolor, bcolor_ids = _minlabel_flood(
-                spark, ec, bcolor, bcolor_ids, "src", "dst", max_inner,
-                what="scc backward containment", small=n_active <= broadcast_rows,
-            )
-            marked, marked_ids = tracked_checkpoint(
+            marked = it.keep(
                 color.join(
                     bcolor.withColumnRenamed("label", "blabel"), "v"
                 ).where(F.col("label") == F.col("blabel")).select("v", "label")
             )
-            release_ids(spark, bcolor_ids)
+            it.release(bcolor)
 
             # 3. extract: marked vertices ARE complete SCCs labeled by their
             #    root; the marked checkpoint joins the deferred assigned
             #    union at return, so only the next round's active input
             #    needs a fresh materialization here
             assigned_parts.append(marked.select("v", "label"))
-            assigned_ids |= marked_ids
-            remaining, rem_ids = tracked_checkpoint(
-                active.join(_bc(marked.select("v")), "v", "left_anti")
-            )
+            remaining = it.keep(active.join(
+                maybe_broadcast(marked.select("v"), n_active, broadcast_rows), "v", "left_anti"
+            ))
             n_active = remaining.count()
-            release_ids(spark, active_ids | ea_ids | color_ids | ec_ids)
-            active, active_ids = remaining, rem_ids
+            it.release(active, ea, color, ec)
+            active = remaining
             if n_active == 0:
                 return _finish()
         raise RuntimeError(
@@ -516,95 +491,79 @@ def bowtie_classes(
     as BFS. Output ``(v, cls)``.
     """
     spark = directed_edges.sparkSession
-    # ``labels``: optionally reuse a precomputed ``scc`` result (e.g. the
-    # driver contract computes SCC labels once and feeds both queries) —
-    # must be the (v, label) output of ``scc`` on the SAME edge table
-    if labels is None:
-        labels, lab_ids = tracked_checkpoint(
-            scc(directed_edges, max_rounds, max_inner)
+    with IterationScope(spark) as it:
+        # ``labels``: optionally reuse a precomputed ``scc`` result (e.g. the
+        # driver contract computes SCC labels once and feeds both queries) —
+        # must be the (v, label) output of ``scc`` on the SAME edge table
+        labels = it.keep(
+            labels if labels is not None else scc(directed_edges, max_rounds, max_inner)
         )
-    else:
-        labels, lab_ids = tracked_checkpoint(labels)
-    e, e_ids = tracked_checkpoint(
-        directed_edges.select("src", "dst")
-        .where(F.col("src") != F.col("dst"))
-        .dropDuplicates(["src", "dst"])
-    )
-    top = (
-        labels.groupBy("label")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.col("c").desc(), F.col("label").asc())
-        .limit(1)
-        .collect()
-    )
-    if not top:  # vertex-less input: no SCCs, no classes
-        release_ids(spark, lab_ids | e_ids)
-        return spark.createDataFrame([], "v long, cls string")
-    giant = int(top[0]["label"])
-    core, core_ids = tracked_checkpoint(
-        labels.where(F.col("label") == giant).select("v")
-    )
-    n_part = iteration_partitions(spark, e.count())
+        e = it.keep(
+            directed_edges.select("src", "dst")
+            .where(F.col("src") != F.col("dst"))
+            .dropDuplicates(["src", "dst"])
+        )
+        top = (
+            labels.groupBy("label")
+            .agg(F.count(F.lit(1)).alias("c"))
+            .orderBy(F.col("c").desc(), F.col("label").asc())
+            .limit(1)
+            .collect()
+        )
+        if not top:  # vertex-less input: no SCCs, no classes
+            return spark.createDataFrame([], "v long, cls string")
+        giant = int(top[0]["label"])
+        core = it.keep(labels.where(F.col("label") == giant).select("v"))
+        n_part = iteration_partitions(spark, e.count())
 
-    # seeded reachability via the min-label sentinel flood: seed members get
-    # their own id, everyone else a +∞ sentinel; after the flood,
-    # label < sentinel ⟺ some seed reaches v (along the flood direction)
-    _FAR = F.lit(1 << 62)
+        # seeded reachability via the min-label sentinel flood: seed members
+        # get their own id, everyone else a +∞ sentinel; after the flood,
+        # label < sentinel ⟺ some seed reaches v (along the flood direction)
+        _FAR = F.lit(1 << 62)
 
-    def _reach_flood(
-        seeds: DataFrame, edge_from: str, edge_to: str, what: str
-    ) -> tuple[DataFrame, set[int]]:
-        init, init_ids = tracked_checkpoint(
-            labels.select("v").join(
-                seeds.select(F.col("v").alias("sv")), F.col("v") == F.col("sv"), "left"
-            ).select(
-                "v",
-                F.when(F.col("sv").isNotNull(), F.col("v")).otherwise(_FAR).alias("label"),
+        def _reach_flood(
+            seeds: DataFrame, edge_from: str, edge_to: str, what: str
+        ) -> DataFrame:
+            init = it.keep(
+                labels.select("v").join(
+                    seeds.select(F.col("v").alias("sv")), F.col("v") == F.col("sv"), "left"
+                ).select(
+                    "v",
+                    F.when(F.col("sv").isNotNull(), F.col("v")).otherwise(_FAR).alias("label"),
+                )
             )
-        )
-        flooded, f_ids = _minlabel_flood(
-            spark, e, init, init_ids, edge_from, edge_to, max_inner, what=what
-        )
-        reached, r_ids = tracked_checkpoint(
-            flooded.where(F.col("label") < _FAR).select("v")
-        )
-        release_ids(spark, f_ids)
-        return reached, r_ids
+            flooded = _minlabel_flood(it, e, init, edge_from, edge_to, max_inner, what=what)
+            reached = it.keep(flooded.where(F.col("label") < _FAR).select("v"))
+            it.release(flooded)
+            return reached
 
-    with scoped_shuffle_partitions(spark, n_part):
-        # core's forward/backward cones
-        fwd_reach, fwd_ids = _reach_flood(core, "src", "dst", "bowtie forward reach")   # core ∪ out
-        bwd_reach, bwd_ids = _reach_flood(core, "dst", "src", "bowtie backward reach")  # core ∪ in
-        in_set, in_ids = tracked_checkpoint(bwd_reach.join(core, "v", "left_anti"))
-        out_set, out_ids = tracked_checkpoint(fwd_reach.join(core, "v", "left_anti"))
-        # tendril/tube cones: reachable FROM the in-set, reaches the out-set
-        fi_reach, fi_ids = _reach_flood(in_set, "src", "dst", "bowtie from-IN reach")
-        bo_reach, bo_ids = _reach_flood(out_set, "dst", "src", "bowtie to-OUT reach")
-    out = (
-        labels.select("v")
-        .join(core.withColumnRenamed("v", "cv"), F.col("v") == F.col("cv"), "left")
-        .join(fwd_reach.withColumnRenamed("v", "fv"), F.col("v") == F.col("fv"), "left")
-        .join(bwd_reach.withColumnRenamed("v", "bv"), F.col("v") == F.col("bv"), "left")
-        .join(fi_reach.withColumnRenamed("v", "iv"), F.col("v") == F.col("iv"), "left")
-        .join(bo_reach.withColumnRenamed("v", "ov"), F.col("v") == F.col("ov"), "left")
-        .select(
-            "v",
-            F.when(F.col("cv").isNotNull(), F.lit("core"))
-            .when(F.col("bv").isNotNull(), F.lit("in"))
-            .when(F.col("fv").isNotNull(), F.lit("out"))
-            .when(F.col("iv").isNotNull() & F.col("ov").isNotNull(), F.lit("tube"))
-            .when(F.col("iv").isNotNull() | F.col("ov").isNotNull(), F.lit("tendril"))
-            .otherwise(F.lit("disconnected"))
-            .alias("cls"),
-        )
-    )
-    out, _ = tracked_checkpoint(out)
-    release_ids(
-        spark,
-        lab_ids | e_ids | core_ids | fwd_ids | bwd_ids | in_ids | out_ids
-        | fi_ids | bo_ids,
-    )
-    return out
+        with scoped_shuffle_partitions(spark, n_part):
+            # core's forward/backward cones
+            fwd_reach = _reach_flood(core, "src", "dst", "bowtie forward reach")   # core ∪ out
+            bwd_reach = _reach_flood(core, "dst", "src", "bowtie backward reach")  # core ∪ in
+            in_set = it.keep(bwd_reach.join(core, "v", "left_anti"))
+            out_set = it.keep(fwd_reach.join(core, "v", "left_anti"))
+            # tendril/tube cones: reachable FROM the in-set, reaches the out-set
+            fi_reach = _reach_flood(in_set, "src", "dst", "bowtie from-IN reach")
+            bo_reach = _reach_flood(out_set, "dst", "src", "bowtie to-OUT reach")
+        return it.result(it.keep(
+            labels.select("v")
+            .join(core.withColumnRenamed("v", "cv"), F.col("v") == F.col("cv"), "left")
+            .join(fwd_reach.withColumnRenamed("v", "fv"), F.col("v") == F.col("fv"), "left")
+            .join(bwd_reach.withColumnRenamed("v", "bv"), F.col("v") == F.col("bv"), "left")
+            .join(fi_reach.withColumnRenamed("v", "iv"), F.col("v") == F.col("iv"), "left")
+            .join(bo_reach.withColumnRenamed("v", "ov"), F.col("v") == F.col("ov"), "left")
+            .select(
+                "v",
+                F.when(F.col("cv").isNotNull(), F.lit("core"))
+                .when(F.col("bv").isNotNull(), F.lit("in"))
+                .when(F.col("fv").isNotNull(), F.lit("out"))
+                .when(F.col("iv").isNotNull() & F.col("ov").isNotNull(), F.lit("tube"))
+                .when(F.col("iv").isNotNull() | F.col("ov").isNotNull(), F.lit("tendril"))
+                .otherwise(F.lit("disconnected"))
+                .alias("cls"),
+            )
+        ))
 
 
 def bowtie_sql(edge_ctes: str) -> str:
@@ -758,67 +717,65 @@ def condensation_levels(
     any cap ≥ depth).
     """
     spark = directed_edges.sparkSession
-    labels = scc(directed_edges)  # (v, label), materialized lineage-free
-    lab_src = labels.select(F.col("v").alias("src"), F.col("label").alias("a"))
-    lab_dst = labels.select(F.col("v").alias("dst"), F.col("label").alias("b"))
-    cond = (
-        directed_edges.join(lab_src, "src")
-        .join(lab_dst, "dst")
-        .where(F.col("a") != F.col("b"))
-        .select("a", "b")
-        .distinct()
-    )
-    cond, cond_ids = tracked_checkpoint(cond)
-    n_part = iteration_partitions(spark, max(cond.count(), 1))
-    lev = labels.select(F.col("label").alias("c")).distinct().select(
-        "c", F.lit(0).cast("long").alias("level")
-    )
-    lev, prev_ids = tracked_checkpoint(lev)
-    with scoped_shuffle_partitions(spark, n_part):
-        for r in range(max_rounds + 1):
-            cand = (
-                cond.join(lev.withColumnRenamed("c", "a"), "a")
-                .groupBy(F.col("b").alias("c"))
-                .agg((F.max("level") + F.lit(1)).alias("cl"))
-            )
-            merged = (
-                lev.join(cand, "c", "left")
-                .select(
-                    "c",
-                    F.greatest(F.col("level"), F.coalesce("cl", F.lit(0))).alias(
-                        "new_level"
-                    ),
-                    "level",
-                )
-            )
-            changed = (
-                merged.where(F.col("new_level") > F.col("level")).limit(1).count()
-            )
-            if changed == 0:
-                break
-            if r == max_rounds:
-                raise RuntimeError(
-                    f"condensation deeper than max_rounds={max_rounds}"
-                )
-            lev, new_ids = tracked_checkpoint(
-                merged.select("c", F.col("new_level").alias("level"))
-            )
-            release_ids(spark, prev_ids)
-            prev_ids = new_ids
-    sizes = labels.groupBy(F.col("label").alias("c")).agg(
-        F.count(F.lit(1)).alias("nv")
-    )
-    out = (
-        lev.join(sizes, "c")
-        .groupBy("level")
-        .agg(
-            F.count(F.lit(1)).alias("n_components"),
-            F.sum("nv").cast("long").alias("n_vertices"),
+    with IterationScope(spark) as it:
+        # (v, label), materialized lineage-free; read again by the output
+        labels = it.hold(scc(directed_edges))
+        lab_src = labels.select(F.col("v").alias("src"), F.col("label").alias("a"))
+        lab_dst = labels.select(F.col("v").alias("dst"), F.col("label").alias("b"))
+        cond = it.keep(
+            directed_edges.join(lab_src, "src")
+            .join(lab_dst, "dst")
+            .where(F.col("a") != F.col("b"))
+            .select("a", "b")
+            .distinct()
         )
-        .orderBy("level")
-    )
-    release_ids(spark, cond_ids)
-    return out
+        n_part = iteration_partitions(spark, max(cond.count(), 1))
+        lev = it.keep(
+            labels.select(F.col("label").alias("c")).distinct().select(
+                "c", F.lit(0).cast("long").alias("level")
+            )
+        )
+        with scoped_shuffle_partitions(spark, n_part):
+            for r in range(max_rounds + 1):
+                cand = (
+                    cond.join(lev.withColumnRenamed("c", "a"), "a")
+                    .groupBy(F.col("b").alias("c"))
+                    .agg((F.max("level") + F.lit(1)).alias("cl"))
+                )
+                merged = (
+                    lev.join(cand, "c", "left")
+                    .select(
+                        "c",
+                        F.greatest(F.col("level"), F.coalesce("cl", F.lit(0))).alias(
+                            "new_level"
+                        ),
+                        "level",
+                    )
+                )
+                changed = (
+                    merged.where(F.col("new_level") > F.col("level")).limit(1).count()
+                )
+                if changed == 0:
+                    break
+                if r == max_rounds:
+                    raise RuntimeError(
+                        f"condensation deeper than max_rounds={max_rounds}"
+                    )
+                new_lev = it.keep(merged.select("c", F.col("new_level").alias("level")))
+                it.release(lev)
+                lev = new_lev
+        sizes = labels.groupBy(F.col("label").alias("c")).agg(
+            F.count(F.lit(1)).alias("nv")
+        )
+        return it.result(
+            lev.join(sizes, "c")
+            .groupBy("level")
+            .agg(
+                F.count(F.lit(1)).alias("n_components"),
+                F.sum("nv").cast("long").alias("n_vertices"),
+            )
+            .orderBy("level")
+        )
 
 
 def condensation_levels_sql(edge_ctes: str) -> str:

@@ -7,14 +7,20 @@ unrelated future GC. On a long-running session (or a 1000-executor cluster
 where executor storage memory is the scarce resource) that is a leak: every
 round's state stays resident until both Python and JVM GCs happen to run.
 
-These helpers make the release deterministic:
+``IterationScope`` makes the release deterministic, once for every
+iterative operator: a call's scope keeps each round's state
+(``localCheckpoint``, with a file barrier every ``BARRIER_EVERY`` rounds
+in the deep loops and the ``IterationCheckpointer`` snapshot and resume
+where one is passed), frees state k as soon as state k+1 is materialized
+and any fixpoint probe that reads state k has run, and on every exit path,
+normal or raising, frees everything the call made except the blocks its
+result reads — SQL caches through ``DataFrame.unpersist``, checkpoint
+blocks by id. The building blocks stay public for callers outside the
+operators:
 
-  * ``tracked_checkpoint(df)`` — eager localCheckpoint that also reports which
-    persistent-RDD ids the materialization created, so the caller can release
-    exactly the previous iteration's blocks once the new state is durable.
-  * ``release_ids(spark, ids)`` — unpersist those blocks NOW (the iteration
-    contract: state k is released as soon as state k+1 is materialized and
-    any fixpoint probe that reads state k has run).
+  * ``tracked_checkpoint(df, before)`` — eager localCheckpoint that also
+    sweeps the scratch blocks registered since ``before``;
+  * ``persistent_rdd_ids`` / ``release_ids`` — snapshot and free blocks by id;
   * ``release_all_cached(spark)`` — session-level sweep used between benchmark
     queries and in tests; replaces the round-1 ``System.gc()`` workaround.
 
@@ -24,9 +30,8 @@ RPC, not a local-mode trick.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.storagelevel import StorageLevel
 
 
 def _reset_degenerate_stats(df: DataFrame) -> DataFrame:
@@ -109,20 +114,6 @@ def release_ids(spark: SparkSession, ids: set[int], blocking: bool = False) -> i
     return released
 
 
-@contextmanager
-def released_on_error(spark: SparkSession):
-    """Release every block persisted inside the ``with`` body if it raises:
-    an operator that fails (a non-converging loop, a cancelled job) has no
-    result, so everything it materialized is scratch. Normal exits keep
-    their own explicit release."""
-    before = persistent_rdd_ids(spark)
-    try:
-        yield
-    except BaseException:
-        release_ids(spark, persistent_rdd_ids(spark) - before)
-        raise
-
-
 def release_all_cached(
     spark: SparkSession, blocking: bool = False, keep: set[int] | None = None
 ) -> int:
@@ -174,29 +165,133 @@ def tracked_checkpoint(
     the cache for every later iteration — the CacheManager's plan entry stays
     while the direct RDD unpersist never re-persists the buffers.
     """
-    spark = df.sparkSession
-    if before is None:
-        before = persistent_rdd_ids(spark)
-    out = _reset_degenerate_stats(df.localCheckpoint(eager=True))
-    created = persistent_rdd_ids(spark) - before
-    own = {int(out._jdf.queryExecution().analyzed().rdd().id())}
-    release_ids(spark, locally_checkpointed_ids(spark, created - own))
+    out, own, _ = _checkpoint(df, before)
     return out, own
 
 
-def barrier_checkpoint(df: DataFrame) -> tuple[DataFrame, set[int]]:
-    """TRUE lineage barrier: reliable ``checkpoint()`` to the context's
-    checkpoint directory (files), which replaces the RDD's dependencies with
-    a CheckpointRDD — unlike ``localCheckpoint``, whose underlying RDD DAG
-    stays chained across rounds. Needed by deep iteration loops: a
-    driver-side per-job traversal walks lineage PATHS, and with k≥2
-    references per round the walk is O(k^depth) — measured as a flat
-    ~0.5 s/round until depth ~11 and then 4× per round (operators/scc.py's
-    flood, 4 refs/round). Dropping a barrier every few rounds caps the
-    walkable depth. Returns ``(df, ids)`` like ``tracked_checkpoint`` (the
-    ids are the file-backed checkpoint's persistent blocks, if any — usually
-    empty; safe to pass to release_ids)."""
+def _checkpoint(
+    df: DataFrame, before: set[int] | None, reliable: bool = False
+) -> tuple[DataFrame, set[int], set[int]]:
+    """``tracked_checkpoint``'s body → ``(out, own block ids, persistent ids
+    after the sweep)``. ``reliable``: a file checkpoint instead — a TRUE
+    lineage barrier (see ``IterationScope``); it owns no block."""
     spark = df.sparkSession
-    before = persistent_rdd_ids(spark)
-    out = _reset_degenerate_stats(df.checkpoint(eager=True))
-    return out, persistent_rdd_ids(spark) - before
+    if before is None:
+        before = persistent_rdd_ids(spark)
+    out = _reset_degenerate_stats(
+        df.checkpoint(eager=True) if reliable else df.localCheckpoint(eager=True)
+    )
+    now = persistent_rdd_ids(spark)
+    own = _leaf_rdd_ids(out) & now
+    swept = locally_checkpointed_ids(spark, now - before - own)
+    release_ids(spark, swept)
+    return out, own, now - swept
+
+
+def _leaf_rdd_ids(df: DataFrame) -> set[int]:
+    """Ids of the RDDs under ``df``'s ``LogicalRDD`` leaves — the checkpoint
+    blocks its plan reads (a derived frame reads those of its sources)."""
+    leaves = df._jdf.queryExecution().analyzed().collectLeaves()
+    out = set()
+    for i in range(leaves.size()):
+        leaf = leaves.apply(i)
+        if leaf.getClass().getSimpleName() == "LogicalRDD":
+            out.add(int(leaf.rdd().id()))
+    return out
+
+
+# Reliable-checkpoint cadence of the deep loops (``keep(..., barrier=True)``).
+# localCheckpoint does NOT cut the underlying RDD DAG, and a driver-side
+# per-job traversal walks lineage PATHS — O(refs^depth): measured as a flat
+# ~0.5 s/round until depth ~11, then 4× per round (scc's flood, 4 refs per
+# round), and a ~20-round k-core chain cascade at sf0.1 pinned the driver for
+# >25 min. A file barrier every 12 rounds caps the walkable depth.
+BARRIER_EVERY = 12
+
+
+class IterationScope:
+    """The blocks of one iterative operator call, from entry to exit.
+
+    ``with IterationScope(spark, checkpointer) as it:`` — the operator hands
+    DataFrames in and gets DataFrames back; the scope does the bookkeeping:
+
+      * ``keep(df, k)`` — materialize a round's state (eager localCheckpoint)
+        and sweep the scratch blocks registered since the previous keep
+        (lazy localCheckpoints made while the plan was built, e.g. inside
+        the triangle kernel). With ``k`` and a checkpointer the state is
+        also snapshotted (``IterationCheckpointer.maybe_save``); with
+        ``barrier=True`` every ``BARRIER_EVERY``-th round is a file
+        checkpoint instead;
+      * ``release(*dfs)`` — free the kept blocks those frames (``None``
+        skipped) read, NOW: the loop calls it once the successor state is
+        kept and any fixpoint probe that reads the old state has run;
+      * ``cache(df)`` — a SQL cache (``persist``) for the whole call, dropped
+        through ``DataFrame.unpersist`` at exit, never by raw RDD id (see
+        ``tracked_checkpoint``);
+      * ``hold(df)`` — keep ``df``'s blocks (a lazy localCheckpoint, a nested
+        operator's result) out of the keep sweeps until exit;
+      * ``restore(initial)`` — ``(first round, state)``: the checkpointer's
+        latest snapshot, or ``(0, initial)``;
+      * ``result(df)`` — the operator's return value: at exit, normal or
+        raising, everything the scope made is freed except the blocks a
+        normal return's ``result`` reads.
+    """
+
+    def __init__(self, spark: SparkSession, checkpointer=None):
+        self.spark = spark
+        self.checkpointer = checkpointer
+
+    def __enter__(self) -> "IterationScope":
+        self._before = persistent_rdd_ids(self.spark)
+        self._mark = self._before  # blocks the next keep does not sweep
+        self._kept: set[int] = set()
+        self._held: set[int] = set()
+        self._caches: list[DataFrame] = []
+        self._result: set[int] = set()
+        return self
+
+    def __exit__(self, exc_type, *_) -> None:
+        for df in self._caches:
+            df.unpersist()
+        keep = set() if exc_type else self._result
+        created = persistent_rdd_ids(self.spark) - self._before - keep
+        owned = created & (self._kept | self._held)
+        release_ids(
+            self.spark,
+            owned | locally_checkpointed_ids(self.spark, created - owned),
+        )
+
+    def keep(self, df: DataFrame, k: int | None = None, barrier: bool = False) -> DataFrame:
+        deep = barrier and k is not None and k % BARRIER_EVERY == 0
+        out, own, self._mark = _checkpoint(df, self._mark, reliable=deep)
+        self._kept |= own
+        if self.checkpointer is not None and k is not None:
+            saved = self.checkpointer.maybe_save(k, out)
+            if saved is not out:  # the re-read snapshot replaces the block
+                self.release(out)
+                out = saved
+        return out
+
+    def release(self, *dfs: DataFrame | None) -> None:
+        ids = set().union(*(_leaf_rdd_ids(df) for df in dfs if df is not None))
+        ids &= self._kept
+        release_ids(self.spark, ids)
+        self._kept -= ids
+
+    def cache(self, df: DataFrame) -> DataFrame:
+        self._caches.append(df.persist(StorageLevel.MEMORY_AND_DISK))
+        return df
+
+    def hold(self, df: DataFrame) -> DataFrame:
+        ids = _leaf_rdd_ids(df) - self._before
+        self._held |= ids
+        self._mark = self._mark | ids
+        return df
+
+    def restore(self, initial: DataFrame) -> tuple[int, DataFrame]:
+        snap = self.checkpointer.restore() if self.checkpointer is not None else None
+        return snap if snap is not None else (0, initial)
+
+    def result(self, df: DataFrame) -> DataFrame:
+        self._result = _leaf_rdd_ids(df)
+        return df

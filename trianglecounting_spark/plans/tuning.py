@@ -10,7 +10,7 @@ loop's shuffles to the loop's data and restore the session conf afterwards.
 
 from __future__ import annotations
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 # The one broadcast budget, in rows, for every size-aware fast path: a
 # |V|-row iteration state (or an edge table, where an operator broadcasts
@@ -19,6 +19,12 @@ from pyspark.sql import SparkSession
 # the operators take their shuffle paths. 8 M rows is ~64 MB per int64
 # column — the same driver-byte class as the triangle kernel's hub CSR.
 BROADCAST_ROWS = 8_000_000
+
+
+def maybe_broadcast(df: DataFrame, rows: int, budget: int = BROADCAST_ROWS) -> DataFrame:
+    """``df`` hinted for broadcast when ``rows`` — a bound on its row count —
+    fits ``budget``; otherwise ``df`` as it is, joined by shuffle."""
+    return F.broadcast(df) if rows <= budget else df
 
 
 def iteration_partitions(

@@ -60,12 +60,12 @@ def get_spark(
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     # Reliable-checkpoint dir for the deep-iteration lineage BARRIER
-    # (plans/cache.barrier_checkpoint): localCheckpoint leaves the underlying
-    # RDD DAG chained, and a driver-side per-job traversal walks PATHS, not
-    # nodes — with ≥2 references per iteration the walk is O(k^depth), which
-    # measurably explodes past ~12 chained rounds. A reliable checkpoint
-    # (files) is the only true truncation. On a cluster this would be a
-    # shared HDFS/object-store path.
+    # (plans/cache.IterationScope.keep(..., barrier=True)): localCheckpoint
+    # leaves the underlying RDD DAG chained, and a driver-side per-job
+    # traversal walks PATHS, not nodes — with ≥2 references per iteration
+    # the walk is O(k^depth), which measurably explodes past ~12 chained
+    # rounds. A reliable checkpoint (files) is the only true truncation. On
+    # a cluster this would be a shared HDFS/object-store path.
     if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
         import atexit
         import shutil
@@ -73,7 +73,7 @@ def get_spark(
 
         ckpt_dir = tempfile.mkdtemp(prefix="spark_graft_ckpt_")
         spark.sparkContext.setCheckpointDir(ckpt_dir)
-        # barrier_checkpoint files are never GC'd by Spark by default
+        # barrier checkpoint files are never GC'd by Spark by default
         # (spark.cleaner.referenceTracking.cleanCheckpoints=false), so a
         # long-running session with deep floods would accumulate them
         # unboundedly — reap the whole session dir on interpreter exit. On a
