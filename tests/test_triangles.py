@@ -265,35 +265,63 @@ def test_kernel_variants_identical_across_layout_regimes(spark, monkeypatch, nam
     three layout regimes: full broadcast CSR (the default on small graphs),
     the hub split (full CSR disabled) and the plain dst join (``hub_k=0``).
     The hub split and plain join are the only regimes that probe joined
-    adjacency slices, so small graphs reach them only through this test."""
+    adjacency slices, so small graphs reach them only through this test.
+    Each regime runs twice: on the graph's own ids, where every partition
+    tests membership through the id bitmap, and on ids shifted by 2^40,
+    where the bitmap would outgrow the partition and the groups
+    binary-search instead."""
     from pyspark.sql import Observation
 
     import trianglecounting_spark.operators.triangles as T
 
+    shift = 1 << 40
     e = builder(spark).localCheckpoint(eager=True)
-    d = T.orient_dodg(e).localCheckpoint(eager=True)
+    e_far = e.select((F.col("u") + shift).alias("u"), (F.col("v") + shift).alias("v"))
     n = 3
 
-    def run(hub_k):
-        obs = Observation(f"regime_{name}_{hub_k}")
-        tri = T.triangle_count_kernel(e, n, hub_k, observation=obs).collect()[0].triangles
+    def views(edges):
+        rows = T.orient_dodg(edges).toArrow().to_batches()
+        return T._partition_views(rows, None)
+
+    assert T._membership_bitmap(views(e), None) is not None
+    assert T._membership_bitmap(views(e_far), None) is None
+
+    def run(edges, hub_k, off):
+        d = T.orient_dodg(edges).localCheckpoint(eager=True)
+        obs = Observation(f"regime_{name}_{hub_k}_{off}")
+        tri = T.triangle_count_kernel(edges, n, hub_k, observation=obs).collect()[0].triangles
+
+        def back(rows, ids):
+            return sorted(
+                tuple(x - off if k in ids else x for k, x in r.asDict().items()) for r in rows
+            )
+
         return {
             "count": (tri, obs.get["probes"], obs.get["hits"]),
-            "per_edge": sorted(
-                T.triangle_count_per_directed_edge_kernel(e, n, hub_k).collect()
+            "per_edge": back(
+                T.triangle_count_per_directed_edge_kernel(edges, n, hub_k).collect(),
+                ("src", "dst"),
             ),
-            "enumerate": sorted(T.triangle_enumerate_kernel(e, n, hub_k).collect()),
-            "support": sorted(T.triangle_support_counts_oriented(d, n, hub_k).collect()),
+            "enumerate": back(
+                T.triangle_enumerate_kernel(edges, n, hub_k).collect(), ("a", "b", "c")
+            ),
+            "support": back(
+                T.triangle_support_counts_oriented(d, n, hub_k).collect(), ("src", "dst")
+            ),
         }
 
-    full_csr = run(None)
-    plain_join = run(0)
-    monkeypatch.setattr(T, "FULL_CSR_MAX_ROWS", 0)
-    hub_split = run(None)
+    def regimes():
+        out = [run(e, None, 0), run(e, 0, 0), run(e_far, None, shift), run(e_far, 0, shift)]
+        with monkeypatch.context() as m:
+            m.setattr(T, "FULL_CSR_MAX_ROWS", 0)
+            out += [run(e, None, 0), run(e_far, None, shift)]
+        return out
+
+    full_csr, *others = regimes()
     tri, probes, hits = full_csr["count"]
     assert tri == hits == len(full_csr["enumerate"]) > 0
-    assert sum(r.cnt for r in full_csr["per_edge"]) == tri
-    assert sum(r.support for r in full_csr["support"]) == 3 * tri
+    assert sum(r[2] for r in full_csr["per_edge"]) == tri
+    assert sum(r[2] for r in full_csr["support"]) == 3 * tri
     assert probes >= hits
-    assert hub_split == full_csr
-    assert plain_join == full_csr
+    for other in others:
+        assert other == full_csr

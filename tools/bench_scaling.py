@@ -136,7 +136,8 @@ def main() -> None:
         "LiveJournal). `pipeline` = DODG build + adjacency + hub split + "
         "layout + kernel, end-to-end after normalization. `query` = the "
         "steady-state path: exact count from the pre-bucketed layout tables "
-        "(plans/layout.py — hub-CSR load + exchange-free join + kernel), i.e. "
+        "(plans/layout.py — hub-CSR load + one bucketed scan of the probe "
+        "table into the kernel + final sum, no shuffle), i.e. "
         "what a 100 TB deployment pays per query after the one-time layout "
         "write.",
         "",

@@ -96,7 +96,8 @@ def main() -> None:
     # --- steady-state query timing: count from the pre-bucketed layout ---
     # The 100 TB deployment pays the DODG/adjacency/hub co-location once at
     # write time (plans/layout.py); the recurring cost is this query: hub-CSR
-    # load + exchange-free join + kernel. Built untimed, then best-of-repeats.
+    # load + one bucketed scan of the probe table into the kernel + final sum.
+    # Built untimed, then best-of-repeats.
     import tempfile
 
     from trianglecounting_spark.operators.triangles import triangle_count_kernel_bucketed

@@ -12,8 +12,10 @@ hand-picked physical intersection strategies (SURVEY.md §2.5, J3–J7). Here:
    adjacency lists + an Arrow-native numpy intersection kernel (`mapInArrow`
    over zero-copy list buffers = the reference's CSR arriving over the wire),
    with the hub path re-expressing the dense-range bitmap/packed-words
-   strategy (J2/J3) as a broadcast flat-CSR, and ``np.searchsorted`` standing
-   in for the galloping intersector (J5, `util/set_inter_cnt_utils.h:13-48`).
+   strategy (J2/J3) as a broadcast flat-CSR, membership tested through a
+   per-group bool bitmap over vertex ids (the reference's dense bitmap), and
+   ``np.searchsorted`` standing in for the galloping intersector (J5,
+   `util/set_inter_cnt_utils.h:13-48`) where the bitmap would be too large.
    One intersection loop serves every variant: the count, per-directed-edge
    counts, ``triangle_enumerate_kernel`` (triangle corners) and the partial
    per-edge support that k-truss peels on are short reducers over it.
@@ -24,10 +26,11 @@ partitioning-invariant (no FP accumulation; north_rule requires exact parity).
 Scale notes: on the DODG, out-degree ≤ O(√m), so (a) adjacency groups are
 bounded and (b) the kernel's per-group work is bounded. The dominant data
 volume is Σ indeg·outdeg (the wedge count) of N⁺(dst) replication through the
-join; the hub broadcast removes ~99% of it on power-law graphs, and the
-kernel scans what remains in place (no gathers), so peak task memory is
-O(rows) regardless of wedge skew. The three-way-join plan shuffles the full
-wedge-candidate volume — kept as the declarative differential oracle.
+join; the hub broadcast removes ~99% of it on power-law graphs, the kernel
+scans the joined lists in place and gathers the broadcast ones in bounded
+chunks, so peak task memory is O(partition input) regardless of wedge skew.
+The three-way-join plan shuffles the full wedge-candidate volume — kept as
+the declarative differential oracle.
 """
 
 from __future__ import annotations
@@ -175,25 +178,37 @@ def clustering_by_degree(edges: DataFrame) -> DataFrame:
 # short reducers over it. `_layout` lays the DODG out for the kernel as a
 # function of ONE choice, the broadcast set: every vertex (full CSR, no
 # adjacency join), the hubs (hub split), or none (plain dst join). Which set
-# is chosen is decided in `_layout_from_dodg` and `bucketed_kernel_layout`;
-# the kernel never knows, because a row's N⁺(dst) is either its joined list
-# or its broadcast list. This is the reference's single kernel over one
+# is chosen is decided per query in `_layout_from_dodg`, or once at write
+# time for the bucketed probe table (`plans/layout.write_graph_layout`); the
+# kernel never knows, because a row's N⁺(dst) is either its joined list or
+# its broadcast list. This is the reference's single kernel over one
 # degree-ordered CSR (`CountTriBMPAndMergeWithPackDODG`,
 # `triangle_counting.h:36-129`) with the partitioning deciding which sets
 # are broadcast (HERO, SIGMOD'24).
 #
-# Intersection strategy: ONE strategy, deliberately. The reference dispatches
-# per neighbor-pair on a size-ratio rule between a merge intersector (J4,
-# `util/set_inter_cnt_utils.h:161-171`) and a galloping binary-search
-# intersector (J5, `set_inter_cnt_utils.h:13-48`) because a scalar CPU loop
-# pays per-element either way and the cheaper loop wins per pair. In numpy the
-# cost model is different: per-CALL dispatch overhead (~µs) dominates
-# per-element cost, so the winning move is to batch EVERY pair of a src group
-# into a single `searchsorted` over the concatenated neighbor segments
-# (`_hit` in `_segments`) — one vectorized binary search per group, the
-# galloping analogue, regardless of size ratio. A per-pair merge/gallop
-# dispatch was measured slower at every ratio because it re-introduces
-# per-pair Python/numpy call overhead; it is therefore not implemented.
+# Intersection strategy: one batched membership test per src group. The
+# reference dispatches per neighbor-pair on a size-ratio rule between a merge
+# intersector (J4, `util/set_inter_cnt_utils.h:161-171`) and a galloping
+# binary-search intersector (J5, `set_inter_cnt_utils.h:13-48`) because a
+# scalar CPU loop pays per-element either way and the cheaper loop wins per
+# pair. In numpy per-CALL dispatch overhead (~µs) dominates per-element cost,
+# so every pair of a src group is batched into ONE test over the
+# concatenated neighbor segments; a per-pair merge/gallop dispatch was
+# measured slower at every ratio and is not implemented. The test itself is
+# the reference's dense bitmap (`CountTriBMPAndMergeWithPackDODG`'s
+# thread-local `BoolArray`, `triangle_counting.h:36-129`,
+# `util/boolarray.h`): a bool array over vertex ids gets the group's
+# out-neighbors set, the probes gathered through it, and the same entries
+# cleared — three numpy calls per group and one cache-resident load per
+# probe. `_membership_bitmap` admits it while the bitmap is no larger than
+# the partition's own int64 input (so it never dominates task memory) and
+# every id is non-negative; past that (sparse ids far above the edge count)
+# the group binary-searches its sorted neighbors with one `searchsorted`
+# (`_hit`), the galloping analogue. Measured offline on an R-MAT scale-14
+# ef16 graph (213k DODG rows, two partitions, numpy only, best of 5), count
+# per partition, before → one-index broadcast gather → gather + bitmap:
+# hub split 242 → 190 → 55 ms, full CSR 233 → 168 → 47 ms, plain join
+# 146 → 135 → 26 ms.
 #
 # Round-3 measurement — whole-PARTITION vectorization rejected: the obvious
 # next step (segment-offset keys grp·M+dst, one partition-wide lexsort +
@@ -206,9 +221,9 @@ def clustering_by_degree(edges: DataFrame) -> DataFrame:
 # log₂|group| ≈ 4–10 steps) to the whole partition (≈1 MB, log₂|rows| ≈ 16–17
 # steps of cache-missing binary search) — a per-PROBE cost increase that
 # swamps the ~µs-per-GROUP dispatch it saves (probes outnumber groups ~250:1).
-# What survives from that experiment: the per-group `np.sort` is hoisted into
-# one stable partition-wide lexsort (sorted neighbor sets become views, zero
-# per-group allocations).
+# What survives from that experiment: the binary-search path's per-group
+# `np.sort` is hoisted into one stable partition-wide lexsort (sorted
+# neighbor sets become views, zero per-group allocations).
 
 
 def _partition_views(batches, hub_idx):
@@ -269,52 +284,101 @@ def _hit(nbrs_u: np.ndarray, seg: np.ndarray) -> np.ndarray:
     return nbrs_u[idx] == seg
 
 
+def _membership_bitmap(views, hub_idx):
+    """A cleared bool bitmap indexed by vertex id, covering every id the
+    partition searches or probes (its dsts, its joined lists, the broadcast
+    lists); None — the groups then binary-search — when an id is negative
+    or the bitmap would be larger than the partition's own int64 input."""
+    srcs, dsts, _, j_values, hub_pos = views
+    ids = [dsts, j_values]
+    if (hub_pos >= 0).any():
+        ids.append(hub_idx[2])
+    ids = [a for a in ids if a.size]
+    if not ids:
+        return None
+    lo, hi = min(int(a.min()) for a in ids), max(int(a.max()) for a in ids)
+    if lo < 0 or hi + 1 > 8 * (len(srcs) + len(dsts) + len(j_values)):
+        return None
+    return np.zeros(hi + 1, dtype=bool)
+
+
+# Broadcast probes gathered per vectorized index (8 MiB of int64): bounds a
+# partition's gather buffer whatever its share of the wedge volume.
+_GATHER_CHUNK = 1 << 20
+
+
+def _gather_lists(vals, offs, ps):
+    """The broadcast lists at CSR positions ``ps``, concatenated with one
+    vectorized index instead of a Python slice per row."""
+    starts, lens = offs[ps], offs[ps + 1] - offs[ps]
+    ends = np.cumsum(lens)
+    return vals[np.repeat(starts - ends + lens, lens) + np.arange(ends[-1])]
+
+
 def _segments(views, hub_idx):
     """The intersection core. Walks the partition's src groups once and
     yields ``(seg, hit, owner)`` for every probed segment of a group u:
 
       * its joined neighbor data — a contiguous zero-copy slice of the Arrow
         values buffer holding N⁺(dst) of every joined row of the group;
-      * its broadcast rows' lists — views into the broadcast CSR, batched
-        into ONE concat so the group costs one vectorized search (per-row
-        numpy dispatch would cost ~40µs/row; this is volume-bound).
+      * its broadcast rows' lists — a slice of the partition's broadcast
+        lists, gathered ``_GATHER_CHUNK`` probes at a time by one vectorized
+        index, so the group costs one membership test.
 
-    ``hit[i]`` says seg[i] ∈ N⁺(u), i.e. closes a triangle. ``owner(pos)``
-    maps hit positions to the rows whose lists they came from; it is lazy,
-    so counting never pays for it (building the closure costs ~0.1 µs per
-    segment, 0.3% of a count pass at R-MAT scale 14). Nothing is gathered
-    per row, so peak memory stays O(rows) plus one group's broadcast volume
-    (≤ outdeg(u)·max list length), immune to wedge skew."""
+    ``hit[i]`` says seg[i] ∈ N⁺(u), i.e. closes a triangle: a lookup in a
+    bitmap holding N⁺(u) while the group is walked (set, probe, clear), or a
+    binary search of the sorted N⁺(u) where ``_membership_bitmap`` declines.
+    ``owner(pos)`` maps hit positions to the rows whose lists they came
+    from; it is lazy, so counting never pays for it (building the closure
+    costs ~0.1 µs per segment, 0.3% of a count pass at R-MAT scale 14).
+    Peak memory stays O(rows + joined values) plus one gathered chunk,
+    whatever the wedge skew."""
     srcs, dsts, j_offsets, j_values, hub_pos = views
-    if hub_idx is not None:
-        _ids, offs, vals = hub_idx
-    hub_rows = np.flatnonzero(hub_pos >= 0)
     # src group boundaries [0, ..., n] of the sorted src column
-    bounds = [0, *(np.flatnonzero(srcs[1:] != srcs[:-1]) + 1).tolist(), len(srcs)]
-    # one stable partition-wide sort replaces a np.sort per group: group
-    # boundaries are unchanged (srcs is the major key), so each group's
-    # sorted neighbor set is a zero-copy VIEW of sdsts
-    sdsts = dsts[np.lexsort((dsts, srcs))]
-    lo = 0
-    for gs, ge in zip(bounds[:-1], bounds[1:]):
-        nbrs_u = sdsts[gs:ge]
-        base = j_offsets[gs]
-        seg = j_values[base:j_offsets[ge]]
+    bounds = np.concatenate(([0], np.flatnonzero(srcs[1:] != srcs[:-1]) + 1, [len(srcs)]))
+    hub_rows = np.flatnonzero(hub_pos >= 0)
+    # hb[g]: the first broadcast row of group g; cum[i]: where broadcast row
+    # i's list starts in the concatenation of the partition's broadcast lists
+    hb = np.searchsorted(hub_rows, bounds).tolist()
+    if hub_rows.size:
+        offs, vals = hub_idx[1], hub_idx[2]
+        ps = hub_pos[hub_rows]
+        cum = np.concatenate(([0], np.cumsum(offs[ps + 1] - offs[ps])))
+    bm = _membership_bitmap(views, hub_idx)
+    # binary search needs each group's neighbor set sorted: one stable
+    # partition-wide sort (srcs is the major key, so group boundaries hold
+    # and each sorted set is a zero-copy view)
+    nbrs = dsts if bm is not None else dsts[np.lexsort((dsts, srcs))]
+    jb = j_offsets[bounds].tolist()
+    bounds = bounds.tolist()
+    c_lo = c_hi = 0  # broadcast rows [c_lo, c_hi) are gathered into buf
+    for g in range(len(bounds) - 1):
+        gs, ge = bounds[g], bounds[g + 1]
+        nbrs_u = nbrs[gs:ge]
+        if bm is not None:
+            bm[nbrs_u] = True
+        base = jb[g]
+        seg = j_values[base:jb[g + 1]]
         if seg.size:
-            yield seg, _hit(nbrs_u, seg), lambda pos, gs=gs, ge=ge, base=base: (
-                gs - 1 + np.searchsorted(j_offsets[gs:ge + 1], base + pos, side="right")
+            yield seg, bm[seg] if bm is not None else _hit(nbrs_u, seg), (
+                lambda pos, gs=gs, ge=ge, base=base: gs - 1
+                + np.searchsorted(j_offsets[gs:ge + 1], base + pos, side="right")
             )
-        hi = int(np.searchsorted(hub_rows, ge))
+        lo, hi = hb[g], hb[g + 1]
         if hi > lo:
-            rows = hub_rows[lo:hi]
-            ps = hub_pos[rows]
-            segs = [vals[offs[p]:offs[p + 1]] for p in ps]
-            seg = np.concatenate(segs) if len(segs) > 1 else segs[0]
+            if hi > c_hi:
+                c_lo = lo
+                c_hi = max(hi, int(np.searchsorted(cum, cum[lo] + _GATHER_CHUNK, side="right")) - 1)
+                buf = _gather_lists(vals, offs, ps[c_lo:c_hi])
+            seg = buf[cum[lo] - cum[c_lo]:cum[hi] - cum[c_lo]]
             if seg.size:
-                yield seg, _hit(nbrs_u, seg), lambda pos, rows=rows, ps=ps: rows[
-                    np.searchsorted(np.cumsum(offs[ps + 1] - offs[ps]), pos, side="right")
-                ]
-            lo = hi
+                yield seg, bm[seg] if bm is not None else _hit(nbrs_u, seg), (
+                    lambda pos, lo=lo, hi=hi: hub_rows[
+                        lo + np.searchsorted(cum[lo + 1:hi + 1] - cum[lo], pos, side="right")
+                    ]
+                )
+        if bm is not None:
+            bm[nbrs_u] = False
 
 
 def _cat(parts):
@@ -530,7 +594,7 @@ def _layout_from_dodg(
       once per executor rather than once per edge.
     * Nothing (plain dst join) at ``hub_k=0`` or past the byte budget.
 
-    ``adj``: a pre-grouped adjacency table (the bucketed path), grouped here
+    ``adj``: a pre-grouped adjacency (the bucketed layout's view), grouped here
     from ``d`` otherwise. ``full_csr=False`` skips the full-CSR regime.
     ``n_rows``: the caller's known row count of ``d`` (skips the count job
     that checks the full-CSR caps)."""
@@ -539,7 +603,7 @@ def _layout_from_dodg(
     if full_csr and hub_k > 0:
         if n_rows is None:
             n_rows = d.count()
-        if n_rows <= min(max(1, HUB_BUDGET_BYTES // 16), FULL_CSR_MAX_ROWS):
+        if n_rows <= min(_hub_budget_rows(), FULL_CSR_MAX_ROWS):
             flat_pdf = d.toPandas().rename(columns={"dst": "nbr"})
             return _layout(d, None, flat_pdf, None, num_partitions)
     if adj is None:
@@ -577,18 +641,26 @@ HUB_K_DEFAULT = 65536
 FULL_CSR_MAX_ROWS = int(_os.environ.get("SPARK_GRAFT_FULL_CSR_ROWS", 4_000_000))
 
 
+def _hub_budget_rows() -> int:
+    """``HUB_BUDGET_BYTES`` in flat CSR rows (two int64 columns per row)."""
+    return max(1, HUB_BUDGET_BYTES // 16)
+
+
 def _collect_within_budget(flat: DataFrame):
     """Collect a flat (src, nbr) CSR to the driver as pandas, or None when it
     exceeds ``HUB_BUDGET_BYTES``. A LIMIT probe: at most budget + 1 rows
     ever move, through Arrow as two FLAT int columns (a row-object collect
     of 65k list rows costs tens of seconds of single-threaded driver work)."""
-    budget_rows = max(1, HUB_BUDGET_BYTES // 16)  # two int64 columns per row
+    budget_rows = _hub_budget_rows()
     pdf = flat.limit(budget_rows + 1).toPandas()
     return pdf if len(pdf) <= budget_rows else None
 
 
-def _select_hub_csr(d: DataFrame, hub_k: int):
-    """Pick the hub set and collect its flat CSR to the driver.
+def _select_hubs(d: DataFrame, hub_k: int):
+    """Pick the hub set: ``(hubs (dst: long), flat (src, nbr))``, the flat
+    CSR lazy and unbounded (``_select_hub_csr`` collects it under the
+    budget; ``plans/layout.write_graph_layout`` writes it from the
+    executors).
 
     Hub selection by in-degree THRESHOLD, not top-K: orderBy().limit(K)
     merges num_partitions·K candidate rows single-threaded on the driver
@@ -599,10 +671,6 @@ def _select_hub_csr(d: DataFrame, hub_k: int):
     it so executor broadcast memory stays bounded (worst case hub_k·O(√m)
     longs; in practice high in-degree ⇒ high rank ⇒ short out-list: 65k hubs
     ≈ 48 MB at m = 7.7M while absorbing 99.3% of replication).
-
-    Returns (hubs_df (dst: long), flat_pdf (src, nbr) pandas, unsorted), or
-    (None, None) when the flat CSR would exceed the byte budget and the
-    caller runs hub-less.
     """
     indeg = d.groupBy("dst").agg(F.count(F.lit(1)).alias("indeg"))
     candidates = indeg.where(F.col("indeg") >= 8).localCheckpoint(eager=False)
@@ -614,11 +682,20 @@ def _select_hub_csr(d: DataFrame, hub_k: int):
     hubs = candidates.select("dst").localCheckpoint(eager=False)
     # the flat CSR is the hub vertices' out-EDGES — read them straight off
     # the edge table instead of exploding the grouped adjacency lists (same
-    # rows; _broadcast_hub_csr lexsorts driver-side, so order is free)
-    flat_pdf = _collect_within_budget(
-        d.join(hubs.withColumnRenamed("dst", "src"), "src")
-        .select("src", F.col("dst").alias("nbr"))
+    # rows; _flat_csr lexsorts driver-side, so order is free)
+    flat = d.join(F.broadcast(hubs.withColumnRenamed("dst", "src")), "src").select(
+        "src", F.col("dst").alias("nbr")
     )
+    return hubs, flat
+
+
+def _select_hub_csr(d: DataFrame, hub_k: int):
+    """``_select_hubs`` with the flat CSR collected to the driver: returns
+    (hubs_df, flat_pdf (src, nbr) pandas, unsorted), or (None, None) when
+    the flat CSR would exceed the byte budget and the caller runs hub-less.
+    """
+    hubs, flat = _select_hubs(d, hub_k)
+    flat_pdf = _collect_within_budget(flat)
     if flat_pdf is None:
         return None, None
     return hubs, flat_pdf
@@ -690,12 +767,32 @@ def triangle_count_per_directed_edge_kernel(
 
 # ---------------------------------------------------------------------------
 # Pre-bucketed physical layout (SURVEY §4 "bucketed write or repartition" —
-# the strong half): when the canonical DODG edge table is bucketed by dst and
-# the adjacency table by src (plans/layout.py writes them), the kernel's
-# adjacency join is exchange-free on read — the co-location is paid ONCE at
-# write time, not per query, exactly like an Iceberg bucket-partitioned table
-# feeding a 1000-executor cluster.
+# the strong half): plans/layout.py writes the kernel's co-location once —
+# the probe table holds every DODG row with its non-hub N⁺(dst) attached,
+# bucketed by src, next to the flat hub CSR — so a steady-state query reads
+# it with no exchange at all, exactly like an Iceberg bucket-partitioned
+# table feeding a 1000-executor cluster.
 # ---------------------------------------------------------------------------
+
+def _bucketed_layout(spark, edges_table, adj_table, hub_k, hub_table):
+    """``bucketed_kernel_layout`` plus the name of the probe table the layout
+    reads (None on the fresh-selection path)."""
+    from trianglecounting_spark.plans.layout import read_probe_table
+
+    probe = None if hub_table is None else read_probe_table(spark, hub_table)
+    if probe is not None:
+        flat_pdf = _collect_within_budget(spark.table(hub_table))
+        if flat_pdf is not None:
+            hub_bc = _broadcast_hub_csr(spark, flat_pdf) if len(flat_pdf) else None
+            return probe[0], hub_bc, probe[1]
+        # hub CSR over the query-time budget (layout written under a larger
+        # budget): fall through to fresh selection, whose own guard applies
+    # full_csr=False: the bucketed tables exist precisely so the kernel join
+    # is exchange-free on read — collecting the whole edge table would waive
+    # the pay-once layout this path demonstrates (and re-collect per query)
+    d, adj = spark.table(edges_table), spark.table(adj_table)
+    return (*_layout_from_dodg(d, None, hub_k, adj=adj, full_csr=False), None)
+
 
 def bucketed_kernel_layout(
     spark,
@@ -707,24 +804,18 @@ def bucketed_kernel_layout(
     """Kernel input layout from pre-bucketed catalog tables (see
     plans/layout.write_graph_layout). Returns (laid_out_df, hub_broadcast).
 
-    ``hub_table``: optional pre-materialized flat hub CSR (src, nbr) written
-    by the layout — the hub SELECTION (in-degree agg + threshold/quantile
-    jobs) then happens zero times per query instead of once per query; the
-    steady-state kernel pays one small scan + Arrow collect. Hubs with empty
-    out-lists aren't in the CSR and need no anti-join membership either: they
-    have no adjacency row, so both paths yield the same empty set."""
-    d, adj = spark.table(edges_table), spark.table(adj_table)
-    if hub_table is not None:
-        flat_pdf = _collect_within_budget(spark.table(hub_table))
-        if flat_pdf is not None:
-            hubs = spark.table(hub_table).select(F.col("src").alias("dst")).distinct()
-            return _layout(d, adj, flat_pdf, hubs, None)
-        # pre-materialized CSR over budget (layout written under a larger
-        # budget): fall through to fresh selection, whose own guard applies
-    # full_csr=False: the bucketed tables exist precisely so the kernel join
-    # is exchange-free on read — collecting the whole edge table would waive
-    # the pay-once layout this path demonstrates (and re-collect per query)
-    return _layout_from_dodg(d, None, hub_k, adj=adj, full_csr=False)
+    ``hub_table``: the flat hub CSR (src, nbr) the layout wrote. Its catalog
+    entry names the probe table, which already carries every non-hub row's
+    N⁺(dst): the query is the hub-CSR collect, one bucketed scan into the
+    kernel, and the final aggregate — no hub selection, no join, no
+    exchange. Without a hub table (or one naming no probe table, or over
+    the query-time budget) the hubs are selected afresh and the edge table
+    joins the adjacency view, exchange-free on the shared bucketing.
+
+    Spark keeps the probe table's bucketed scan only while the plan ends in
+    an aggregate (the count's sum, the support's groupBy, ``count()``);
+    ``plans.layout.assert_bucketed_scans`` checks a plan built on it."""
+    return _bucketed_layout(spark, edges_table, adj_table, hub_k, hub_table)[:2]
 
 
 def triangle_count_kernel_bucketed(
@@ -736,10 +827,14 @@ def triangle_count_kernel_bucketed(
     hub_table: str | None = None,
 ) -> DataFrame:
     """`triangle_count_kernel` over the pre-bucketed layout: identical result,
-    but the DODG build + adjacency grouping shuffles are already on disk and
-    the dst join needs no exchange. Output: one row ``(triangles: long)``."""
-    layout = bucketed_kernel_layout(spark, edges_table, adj_table, hub_k, hub_table)
-    return _count_from_layout(*layout, observation)
+    but the DODG build, the adjacency grouping and (with ``hub_table``) the
+    dst join are already on disk. Output: one row ``(triangles: long)``."""
+    from trianglecounting_spark.plans.layout import assert_bucketed_scans
+
+    laid_out, hub_bc, probe = _bucketed_layout(
+        spark, edges_table, adj_table, hub_k, hub_table
+    )
+    return assert_bucketed_scans(_count_from_layout(laid_out, hub_bc, observation), probe)
 
 
 def triangle_per_edge_support_bucketed(
@@ -749,11 +844,17 @@ def triangle_per_edge_support_bucketed(
     """`triangle_per_edge_support` over the pre-bucketed layout (the same
     partial-support kernel; the canonical (u<v) edge set is recovered from
     the DODG table, which holds each edge exactly once)."""
-    layout = bucketed_kernel_layout(spark, edges_table, adj_table, hub_k, hub_table)
+    from trianglecounting_spark.plans.layout import assert_bucketed_scans
+
+    laid_out, hub_bc, probe = _bucketed_layout(
+        spark, edges_table, adj_table, hub_k, hub_table
+    )
     edges = spark.table(edges_table).select(
         F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
     )
-    return _attach_support(edges, _support_from_layout(*layout))
+    return assert_bucketed_scans(
+        _attach_support(edges, _support_from_layout(laid_out, hub_bc)), probe
+    )
 
 
 # ---------------------------------------------------------------------------
